@@ -179,15 +179,7 @@ object Cli {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: graft.Cli <endpointsDir> <outDir> SD_X [SD_Y ...]")
     val Array(endpointsDir, outDir, studyIds @ _*) = args
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     run(spark, endpointsDir, outDir, studyIds)
     spark.stop()
   }

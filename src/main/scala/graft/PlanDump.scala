@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named battery queries to files
   * (dev harness for the optimization-round plan evidence). Usage:
   *   runMain graft.PlanDump <outDir> <suffix> <query> [query ...]
@@ -14,29 +12,7 @@ object PlanDump {
     require(args.length >= 3, "usage: PlanDump <outDir> <suffix> <query>...")
     val (outDir, suffix, names) = (args(0), args(1), args.drop(2).toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // Codegen cache sized to the battery: kf_full_pipeline alone emits
-      // >100 distinct whole-stage-codegen units (16 builders x several
-      // stages), so the default 100-entry driver-wide cache thrashes and
-      // every repeat run recompiles the same classes — profiled as the
-      // kf family's top driver+executor frames. 2000 entries keeps one
-      // battery's worth of generated classes resident (static conf; the
-      // compile itself is unchanged, it just stops repeating).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "1"))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED_REPARTITION", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       try {

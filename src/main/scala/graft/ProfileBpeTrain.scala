@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: print the learned merge table at a given sf dir (used
   * once to author the x31 oracle's inlined state table).
   */
@@ -9,11 +7,7 @@ object ProfileBpeTrain {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val n = if (args.length > 1) args(1).toInt else 24
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     val bytes = args.length > 2 && args(2) == "--bytes"
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val rounds =

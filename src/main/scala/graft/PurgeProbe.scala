@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Volume probes for the two round-16 gaps the per-query battery can't
@@ -44,16 +44,7 @@ object PurgeProbe {
     val workDir = args.lift(1).getOrElse("/tmp/graft_purge_probe")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val mode = args.lift(3).getOrElse("both")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     println(s"""{"probe":"purge_probe","factor":$factor,"src":"$srcDir","heap_mb":${Runtime.getRuntime.maxMemory() / (1 << 20)},"mode":"$mode"}""")
 
     // the many-deletion-batch mode probes LEDGER constants, not data

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,27 +15,7 @@ object Verify {
       require(unknown.isEmpty,
         s"unknown query name(s) in filter: ${unknown.toSeq.sorted.mkString(", ")}")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Codegen cache sized to the battery: kf_full_pipeline alone emits
-      // >100 distinct whole-stage-codegen units (16 builders x several
-      // stages), so the default 100-entry driver-wide cache thrashes and
-      // every repeat run recompiles the same classes — profiled as the
-      // kf family's top driver+executor frames. 2000 entries keeps one
-      // battery's worth of generated classes resident (static conf; the
-      // compile itself is unchanged, it just stops repeating).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "1"))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED_REPARTITION", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // Failures are recorded to _errors.json as well as stderr: a query
     // that throws writes no parquet dir and would otherwise just be

@@ -76,9 +76,7 @@ object Pipeline {
     // DRS builder 2.5-3.5x SLOWER at sf0.1: the un-pruned ~70-string-
     // column columnar cache costs more to build AND scan than replaying
     // the pruned, codegen'd join cascade per consumer. Catalyst's column
-    // pruning through independent replays beats a wide shared cache;
-    // Result.markPersistPrefix remains available for genuinely
-    // recompute-heavy chains.
+    // pruning through independent replays beats a wide shared cache.
 
     // Builders that filter ONLY on a shared join key also see the
     // reference's phantom rows: an orphan FK value in any sibling table

@@ -59,33 +59,15 @@ object Transform {
 
     /** Fold-prefix memo: every chain fold (wide and slices) is built
       * incrementally through this cache, so two consumers whose kept
-      * steps share a leading run share ONE plan object for it — and when
-      * that run is marked via [[markPersistPrefix]], one cached
-      * materialization. (Plan-object sharing alone does not reuse
-      * execution: Catalyst prunes different columns into each consumer's
-      * copy, so the canonicalized exchanges differ and ReuseExchange
-      * can't match them — a persist is what actually collapses the
-      * replays.)
+      * steps share a leading run share ONE plan object for it. (Plan-
+      * object sharing does not reuse execution: Catalyst prunes
+      * different columns into each consumer's copy, so the canonicalized
+      * exchanges differ and ReuseExchange can't match them; see the
+      * measured note in [[graft.etl.Pipeline]] on why the prefixes are
+      * not persisted.)
       */
     private val prefixCache =
       mutable.Map.empty[Seq[String], DataFrame]
-    private val persistMarks = mutable.Set.empty[Seq[String]]
-
-    /** Mark a chain prefix (endpoint names, step order) to be persisted —
-      * [[graft.etl.Pipeline]] does this for every prefix shared by ≥2
-      * builders' closures. Safe after the prefix was already built:
-      * cache substitution happens per-action, so consumers composed
-      * earlier but not yet executed still read the cache.
-      * MEMORY_AND_DISK: spills instead of OOM at scale; the cache is
-      * partition-local, so it behaves on a 1000-executor cluster like
-      * any shuffle intermediate.
-      */
-    def markPersistPrefix(names: Seq[String]): Unit =
-      if (!persistMarks(names)) {
-        persistMarks += names
-        prefixCache.get(names).foreach(
-          _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      }
 
     /** The reference's full wide frame (ingest.py:485 incl. clean_up_df's
       * trim + sentinel-null + exact-dup drop). API-parity surface; the
@@ -189,15 +171,10 @@ object Transform {
       val names = chain.map(s =>
         if (s.keyOnly) s.endpoint + "#" + s.df.columns.mkString(",")
         else s.endpoint)
-      prefixCache.getOrElseUpdate(names, {
-        val df =
-          if (chain.sizeIs == 1) chain.head.df
-          else RelationalOps.outerJoinChain(foldChain(chain.init),
-            Seq((chain.last.df, chain.last.keys)))
-        if (persistMarks(names))
-          df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else df
-      })
+      prefixCache.getOrElseUpdate(names,
+        if (chain.sizeIs == 1) chain.head.df
+        else RelationalOps.outerJoinChain(foldChain(chain.init),
+          Seq((chain.last.df, chain.last.keys))))
     }
   }
 

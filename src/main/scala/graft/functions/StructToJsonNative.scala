@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
@@ -31,12 +32,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * over the FULL corpus by `NativeJsonSpec`, and pinned by the 16
   * hash-checked kf content oracles):
   *   - struct fields with null values are dropped (Spark's
-  *     `ignoreNullFields` default), an all-null struct prints `{}`;
+  *     `ignoreNullFields` default), an all-null struct prints `{}`; a
+  *     session that sets `spark.sql.jsonGenerator.ignoreNullFields=false`
+  *     fails analysis instead of getting different bytes;
+  *   - a `NullType` field is always null, so it is always dropped; an
+  *     `array<null>` prints each element as `null`;
   *   - array elements print in order, null elements as literal `null`;
   *   - strings escape exactly Jackson's default set: `"`, `\`, and
   *     control chars < 0x20 (short forms `\b \t \n \f \r`, the rest as
-  *     uppercase `\u00XX`) — no `/` escaping, no non-ASCII escaping
-  *     (valid UTF-8 passes through byte-identically);
+  *     uppercase `\u00XX`) — no `/` escaping, no non-ASCII escaping;
+  *   - precondition: string values are valid UTF-8. A string cast
+  *     from arbitrary binary can hold invalid byte sequences; those are
+  *     copied verbatim, where `to_json` decodes them to U+FFFD, so only
+  *     such input can give different bytes;
   *   - int/long/short/byte print as decimal; booleans as
   *     `true`/`false`; float/double as `Float.toString` /
   *     `Double.toString` (Jackson's default `String.valueOf` path),
@@ -57,6 +65,11 @@ case class StructToJsonNative(child: Expression) extends UnaryExpression {
   override def prettyName: String = "struct_to_json_native"
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case _ if !SQLConf.get.jsonGeneratorIgnoreNullFields =>
+      TypeCheckResult.TypeCheckFailure(
+        "struct_to_json_native drops null fields, but " +
+          s"${SQLConf.JSON_GENERATOR_IGNORE_NULL_FIELDS.key}=false — " +
+          "keep to_json for this session")
     case s: StructType if JsonEmit.supported(s) => TypeCheckResult.TypeCheckSuccess
     case s: StructType => TypeCheckResult.TypeCheckFailure(
       s"struct_to_json_native: unsupported leaf type in schema " +
@@ -168,11 +181,18 @@ object JsonEmit {
     }
   }
 
+  // never reached: a NullType value is always null, so the struct
+  // drops it and the array prints `null` before asking the element
+  private object NullEmitter extends Emitter {
+    override def emit(out: Buf, in: SpecializedGetters, i: Int): Unit =
+      out.ascii("null")
+  }
+
   def supported(dt: DataType): Boolean = dt match {
     case s: StructType => s.fields.forall(f => supported(f.dataType))
     case a: ArrayType => supported(a.elementType)
     case StringType | IntegerType | LongType | ShortType | ByteType |
-         BooleanType | DoubleType | FloatType => true
+         BooleanType | DoubleType | FloatType | NullType => true
     case _ => false
   }
 
@@ -197,6 +217,7 @@ object JsonEmit {
     case BooleanType => BoolEmitter
     case DoubleType => DoubleEmitter
     case FloatType => FloatEmitter
+    case NullType => NullEmitter
     case other => throw new IllegalArgumentException(
       s"struct_to_json_native: unsupported type $other")
   }

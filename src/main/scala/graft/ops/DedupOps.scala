@@ -232,19 +232,12 @@ object DedupOps {
     * docs with Jaccard ≥ t MUST share at least one of each doc's first
     * `|sh| - ceil(t*|sh|) + 1` shingles, so only that prefix is
     * indexed. Candidates are then verified with the exact intersection
-    * over full sets, so the order choice affects only candidate count,
-    * never the result:
-    *
-    *  - `orderByDocFreq = true` (default — the 100 TB path): order by
-    *    global document frequency, rarest first. Hot shingles (every
-    *    doc sharing "of the and") sort to the END of every set and
-    *    fall outside every prefix, so their quadratic pair blowup
-    *    never reaches the join. Costs a doc-frequency aggregate and a
-    *    per-doc rank window over the inverted index.
-    *  - `orderByDocFreq = false`: order by md5(shingle) — computed
-    *    per-row, fully narrow (no dfreq aggregate, no window). Cheaper
-    *    on corpora without hot shingles; degrades toward all-pairs on
-    *    skewed ones.
+    * over full sets, so the order affects only candidate count, never
+    * the result. The order is global document frequency, rarest first:
+    * hot shingles (every doc sharing "of the and") sort to the END of
+    * every set and fall outside every prefix, so their quadratic pair
+    * blowup never reaches the join. Costs a doc-frequency aggregate and
+    * a per-doc rank window over the inverted index.
     *
     * Candidates come from ONE hash-aggregate over the prefix index
     * (collect each prefix shingle's posting list, expand pairs in-row —
@@ -262,16 +255,14 @@ object DedupOps {
     * PersistGuardSpec exempts cleaner-managed checkpoints).
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, threshold: Double = 0.5,
-      orderByDocFreq: Boolean = true): DataFrame = {
+      shingleN: Int = 3, threshold: Double = 0.5): DataFrame = {
     val shPlan = df.select(col(idCol).as("id"),
         array_distinct(TextOps.shingles(col(textCol), shingleN)).as("sh"))
       .where(size(col("sh")) > 0)
     // lazy Dataset-level checkpoint: cleaner-managed like the RDD form
     // but WITHOUT the Row-encoder boundary (stays InternalRow, keeps
     // codegen around the pin)
-    ngramJaccardPairsFromSets(shPlan.localCheckpoint(false),
-      threshold, orderByDocFreq)
+    ngramJaccardPairsFromSets(shPlan.localCheckpoint(false), threshold)
   }
 
   /** [[ngramJaccardPairs]] over an ALREADY-materialized distinct
@@ -281,32 +272,24 @@ object DedupOps {
     * lifecycle; rows with empty sets are ignored.
     */
   private[graft] def ngramJaccardPairsFromSets(sets: DataFrame,
-      threshold: Double, orderByDocFreq: Boolean = true): DataFrame = {
+      threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold in (0, 1]")
     import org.apache.spark.sql.expressions.Window
     val sh = sets.where(size(col("sh")) > 0)
     val prefLen = col("n") - ceil(lit(threshold) * col("n")).cast("int") + 1
-    val prefix =
-      if (orderByDocFreq) {
-        val inv = sh.select(col("id"), size(col("sh")).as("n"), explode(col("sh")).as("s"))
-        val dfreq = inv.groupBy("s").agg(count(lit(1)).as("df"))
-        // rarest-first rank inside each doc; ties broken by shingle text
-        // so both join sides agree on the same prefix
-        inv.join(dfreq, Seq("s"))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("id")).orderBy(col("df"), col("s"))))
-          .where(col("rk") <= prefLen)
-          // a df=1 shingle exists in exactly one doc: it can only ever
-          // self-join, so dropping it from the candidate index is
-          // lossless and removes the (usually long) unique-shingle tail
-          // from the join shuffle
-          .where(col("df") > 1)
-      } else {
-        // hash-ordered prefix: sorted per-row, then sliced — no shuffle
-        // before the candidate join
-        sh.select(col("id"),
-            explode(hashPrefixArray(col("sh"), threshold)).as("s"))
-      }
+    val inv = sh.select(col("id"), size(col("sh")).as("n"), explode(col("sh")).as("s"))
+    val dfreq = inv.groupBy("s").agg(count(lit(1)).as("df"))
+    // rarest-first rank inside each doc; ties broken by shingle text
+    // so both join sides agree on the same prefix
+    val prefix = inv.join(dfreq, Seq("s"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("id")).orderBy(col("df"), col("s"))))
+      .where(col("rk") <= prefLen)
+      // a df=1 shingle exists in exactly one doc: it can only ever
+      // self-join, so dropping it from the candidate index is
+      // lossless and removes the (usually long) unique-shingle tail
+      // from the join shuffle
+      .where(col("df") > 1)
     // one-pass posting-list pair expansion: a shingle appears at most
     // once per doc's prefix, so each (s, id) is unique and least/
     // greatest only canonicalizes pair order. Local quadratic bounded

@@ -6934,7 +6934,7 @@ object Battery {
   private val kfCountsByType = Q(
     "kf_counts_by_type",
     // Recomputes the union kf_full_pipeline just built — measured
-    // (ProfileMain, sf0.1): independent plans 17.5 s + 7.4 s = 24.9 s vs
+    // (sf0.1; perfbench --trace 1 reports the per-builder split): independent plans 17.5 s + 7.4 s = 24.9 s vs
     // persist-once-serve-both 29.8 s + 3.0 s = 32.9 s. Caching the wide
     // string-heavy union costs MORE than replaying the pruned codegen'd
     // plan (the counts plan never builds resource_json at all), the same

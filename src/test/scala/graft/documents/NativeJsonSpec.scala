@@ -3,6 +3,7 @@ package graft.documents
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.StructsToJson
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{NullType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.SparkTestSession
@@ -103,6 +104,34 @@ class NativeJsonSpec extends AnyFunSuite {
       FhirJson.entityJson(when(lit(false), entity)).as("native"),
       to_json(when(lit(false), entity)).as("jackson")).head
     assert(nullTop.isNullAt(0) && nullTop.isNullAt(1))
+  }
+
+  test("NullType: a struct field is dropped and an array<null> element " +
+      "prints null, as to_json does") {
+    val entity = struct(col("s").as("str"), lit(null).as("void"),
+      struct(lit(null).as("inner"), col("s").as("v")).as("nested"),
+      array(lit(null), lit(null)).as("nulls"),
+      array().as("emptyVoid"),
+      array(struct(lit(null).as("n"), col("s").as("v"))).as("structs"))
+    val df = Seq("a", "b\"c", null).toDF("s")
+    // the leaf really is NullType (else this proves nothing)
+    assert(df.select(entity).schema.head.dataType
+      .asInstanceOf[StructType]("void").dataType == NullType)
+    df.select(FhirJson.entityJson(entity), to_json(entity)).collect()
+      .zipWithIndex.foreach { case (r, i) =>
+        assert(r.getString(0) == r.getString(1),
+          s"row $i:\n  native : ${r.getString(0)}\n  jackson: ${r.getString(1)}")
+      }
+  }
+
+  test("ignoreNullFields=false fails analysis instead of printing nulls") {
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.jsonGenerator.ignoreNullFields", "false")
+    val e = intercept[Exception] {
+      s2.range(1).select(FhirJson.entityJson(struct(col("id").as("i"))))
+    }
+    assert(e.getMessage.contains("ignoreNullFields"),
+      s"unexpected error: ${e.getMessage}")
   }
 
   test("unsupported leaf types are rejected at analysis, never " +

@@ -37,15 +37,13 @@ class DedupOpsSpec extends AnyFunSuite {
       5L -> "the cat sat under a blue bush",
       6L -> "to short",
       7L -> "")
-    for (byDf <- Seq(true, false)) {
-      val got = DedupOps
-        .ngramJaccardPairs(docs.toDF("doc_id", "text"), "doc_id", "text",
-          shingleN = 3, threshold = 0.5, orderByDocFreq = byDf)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(got == bruteForce(docs, 0.5), s"orderByDocFreq=$byDf")
-      assert(got.map(p => (p._1, p._2)) == Set((1L, 2L), (4L, 5L)))
-    }
+    val got = DedupOps
+      .ngramJaccardPairs(docs.toDF("doc_id", "text"), "doc_id", "text",
+        shingleN = 3, threshold = 0.5)
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(got == bruteForce(docs, 0.5))
+    assert(got.map(p => (p._1, p._2)) == Set((1L, 2L), (4L, 5L)))
   }
 
   test("bucketPairs: streamed big-bucket path emits the identical pair " +
