@@ -62,7 +62,8 @@ object ManyBatchProbe {
     val preSearch = searchMs()
     println(f"""{"probe":"manybatch","phase":"pre-compaction","landed_list_ms":$preList%.1f,"search_ms":$preSearch%.0f}""")
 
-    val (compactSec, _) = timed(I.compactText(spark, state))
+    val (compactSec, _) =
+      timed(graft.ops.StateRoot(I.Bm25, state).compact(spark))
     val postList = listMs()
     val postSearch = searchMs()
     println(f"""{"probe":"manybatch","phase":"post-compaction","compact_s":$compactSec%.1f,"landed_list_ms":$postList%.1f,"search_ms":$postSearch%.0f}""")

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *    transformed compaction of the full main tables plus the
   *    commit-marker flip — had only an argued cost. The probe ingests
   *    the replicated corpus, tombstones the `doc_id % 7 = 0` slice,
-  *    pins the tombstoned search, times `purgeText`, and asserts the
+  *    pins the tombstoned search, times `StateRoot.purge`, and asserts the
   *    post-purge search is row-identical with the deletion root
   *    retired (the constant-RPC fast path restored).
   *
@@ -78,11 +78,12 @@ object PurgeProbe {
       def search() = I.bm25Search(spark, state, queries0,
         "qid", "text", 10).orderBy("qid", "rank").collect().toSeq
       val (searchManySec, before) = timed { search() }
-      val (compactSec, _) = timed { I.compactText(spark, state) }
+      val root = graft.ops.StateRoot(I.Bm25, state)
+      val (compactSec, _) = timed { root.compact(spark) }
       val (searchFoldedSec, afterFold) = timed { search() }
       require(afterFold.map(_.toString) == before.map(_.toString),
         "delete-ledger compaction must not change the search")
-      val (purgeSec, _) = timed { I.purgeText(spark, state) }
+      val (purgeSec, _) = timed { root.purge(spark) }
       val (searchPurgedSec, afterPurge) = timed { search() }
       require(afterPurge.map(_.toString) == before.map(_.toString),
         "purge must not change the search")
@@ -122,7 +123,8 @@ object PurgeProbe {
         val fs0 = new org.apache.hadoop.fs.Path(state)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         fs0.delete(new org.apache.hadoop.fs.Path(state), true)
-        if (bucketed) I.bucketTextState(spark, state, nBuckets = 32)
+        if (bucketed)
+          graft.ops.StateRoot(I.Bm25, state).bucket(spark, nBuckets = 32)
         I.ingestTextShard(spark, corpus, "doc_id", "text", state, 0L)
         val (delSec, _) = timed {
           var i = 0
@@ -243,15 +245,15 @@ object PurgeProbe {
       val (ingestSec, _) = timed {
         I.ingestTextShard(spark, corpus, "doc_id", "text", state, 0L)
       }
+      val root = graft.ops.StateRoot(I.Bm25, state)
       val (delSec, _) = timed {
-        I.deleteTextDocs(spark,
-          corpus.where(pmod(col("doc_id"), lit(7)) === 0)
-            .select("doc_id"), "doc_id", state)
+        root.delete(spark, corpus.where(pmod(col("doc_id"), lit(7)) === 0)
+          .select("doc_id"), "doc_id")
       }
       val (searchTombSec, before) = timed {
         sortedRows(I.bm25Search(spark, state, queries, "qid", "text", 10))
       }
-      val (purgeSec, _) = timed { I.purgeText(spark, state) }
+      val (purgeSec, _) = timed { root.purge(spark) }
       require(!graft.ops.BatchState.hasDeletionRoot(spark, state),
         "purge must retire the deletion root (constant-RPC fast path)")
       val (searchSec, after) = timed {

@@ -1184,112 +1184,6 @@ private[graft] object BatchState {
       maxPromisedEffectiveId(spark, root).getOrElse(-1L)) + 1
   }
 
-  /** The heal-then-compact-both-roots wrapper every deletion-capable
-    * family's compact shares: plain main-table compaction for pristine
-    * directories (never CREATING a deletion root), crashed-purge
-    * healing plus an independent deletion-root compaction otherwise.
-    */
-  private[graft] def compactWithDeletions(spark: SparkSession,
-      stateDir: String, additiveTables: Seq[String],
-      snapshotTables: Seq[String], delTables: Seq[String]): Unit =
-    withLease(spark, stateDir) {
-      if (!hasDeletionRoot(spark, stateDir))
-        compactState(spark, stateDir, additiveTables, snapshotTables)
-      else withLease(spark, deletionRoot(stateDir)) {
-        // discard a stale purge marker BEFORE this compaction increments
-        // the manifest version it names (false-commit hazard), finish a
-        // committed one
-        healPurge(spark, stateDir, delTables)
-        compactState(spark, stateDir, additiveTables, snapshotTables)
-        if (hasDeletionRoot(spark, stateDir) &&
-            landedBatchIds(spark, deletionRoot(stateDir), delTables, None)
-              .nonEmpty)
-          compactState(spark, deletionRoot(stateDir),
-            additiveTables = delTables)
-      }
-    }
-
-  /** The purge protocol every family shares: heal, read the effective
-    * tombstones, run ONE transformed compaction of the main tables
-    * (the per-table transform is built from the tombstone set by
-    * `transform`), verify the commit arbiter, retire the deletion
-    * root. Falls back to a plain compaction when there is nothing to
-    * purge. See [[writePurgeMarker]]/[[healPurge]] for the crash
-    * windows.
-    */
-  private[graft] def purgeState(spark: SparkSession, stateDir: String,
-      additiveTables: Seq[String], snapshotTables: Seq[String],
-      delTables: Seq[String])(
-      transform: DataFrame => (String, DataFrame) => DataFrame): Unit =
-    withLease(spark, stateDir) {
-      if (!hasDeletionRoot(spark, stateDir))
-        compactState(spark, stateDir, additiveTables, snapshotTables)
-      else withLease(spark, deletionRoot(stateDir)) {
-        healPurge(spark, stateDir, delTables)
-        readTombstones(spark, stateDir, delTables) match {
-          case None =>
-            compactState(spark, stateDir, additiveTables, snapshotTables)
-          case Some(deleted) =>
-            // compliance beats audit: purged content must be neither
-            // servable through any as-of cut nor left on disk, so the
-            // history floor is raised past every pre-purge id BEFORE
-            // the fold — the gc then sweeps retained directories, and
-            // pre-purge cuts refuse loudly (fail-closed: a crash after
-            // this write but before the fold only narrows audit
-            // history, never leaks purged content)
-            if (historyFloor(spark, stateDir).isDefined)
-              setHistoryFloor(spark, stateDir,
-                landedBatchIds(spark, stateDir,
-                  additiveTables ++ snapshotTables, None).last + 1)
-            val expected = manifestVersion(spark, stateDir) + 1
-            writePurgeMarker(spark, stateDir, expected)
-            compactState(spark, stateDir, additiveTables, snapshotTables,
-              transform = transform(deleted), forceRewrite = true)
-            require(manifestVersion(spark, stateDir) >= expected,
-              "purge flip did not reach its recorded arbiter version — " +
-                "state untouched, retry")
-            healPurge(spark, stateDir, delTables)
-        }
-      }
-    }
-
-  /** Operational introspection: ONE metadata-only (key, value) frame
-    * describing a state directory — the `DESCRIBE TABLE` of the state
-    * family, for operators deciding whether to compact, purge, expire
-    * or cut over. Constant-RPC (listings only, no data scans, no Spark
-    * jobs beyond building the local frame).
-    */
-  def describeState(spark: SparkSession, root: String,
-      tables: Seq[String], delTables: Seq[String]): DataFrame = {
-    val stateDir = resolveGeneration(spark, root)
-    val landed = landedBatchIds(spark, stateDir, tables, None)
-    val delRootExists = hasDeletionRoot(spark, stateDir)
-    val delLanded =
-      if (!delRootExists) Seq.empty[Long]
-      else landedBatchIds(spark, deletionRoot(stateDir), delTables, None)
-    val params = readParams(spark, stateDir)
-    val rows = Seq(
-      "root" -> root,
-      "resolved_dir" -> stateDir,
-      "generation_pointer" -> (stateDir != new Path(root).toString &&
-        stateDir != root).toString,
-      "landed_batches" -> landed.size.toString,
-      "newest_batch" -> landed.lastOption.map(_.toString).getOrElse(""),
-      "oldest_batch" -> landed.headOption.map(_.toString).getOrElse(""),
-      "manifest_version" -> manifestVersion(spark, stateDir).toString,
-      "retention_floor" -> retentionFloor(spark, stateDir)
-        .map(_.toString).getOrElse(""),
-      "history_floor" -> historyFloor(spark, stateDir)
-        .map(_.toString).getOrElse(""),
-      "deletion_root" -> delRootExists.toString,
-      "deletion_batches" -> delLanded.size.toString,
-      "purge_committed" -> (delRootExists &&
-        purgeCommitted(spark, stateDir)).toString
-    ) ++ params.toSeq.sortBy(_._1).map { case (p, v) => s"param:$p" -> v }
-    import spark.implicits._
-    rows.toDF("key", "value")
-  }
-
   /** True iff every listed table has a committed `batch=k` directory. */
   def allLanded(spark: SparkSession, stateDir: String, tables: Seq[String],
       batchId: Long): Boolean = {

@@ -97,9 +97,6 @@ object DedupOps {
       .select(col("pr.x").as("x"), col("pr.y").as("y"))
   }
 
-  /** Exact dedup key (see also [[TextOps.fingerprint]]). */
-  def contentHash(text: Column): Column = md5(text)
-
   /** `size(array_intersect(a, b))` as one native pass
     * ([[graft.functions.IntersectCount]]) — the exact-Jaccard verify
     * kernel, evaluated once per candidate pair in every set-similarity

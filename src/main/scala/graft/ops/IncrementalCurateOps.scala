@@ -173,10 +173,6 @@ object IncrementalCurateOps {
     }
   }
 
-  /** True iff every state table has a committed `batch=k` directory. */
-  def batchLanded(spark: SparkSession, stateDir: String, batchId: Long): Boolean =
-    BatchState.allLanded(spark, stateDir, Tables, batchId)
-
   /** Batch ids that are visible as state: a batch counts only when ALL
     * of its tables carry `_SUCCESS` — per-table visibility would let a
     * crash between two table writes expose docs without their edges
@@ -411,10 +407,8 @@ object IncrementalCurateOps {
 
   private[graft] val TakedownTables = Seq("del_ids")
 
-  private[graft] def takedownRoot(stateDir: String): String =
+  private def delRoot(stateDir: String): String =
     BatchState.deletionRoot(stateDir)
-
-  private def delRoot(stateDir: String): String = takedownRoot(stateDir)
 
   /** TAKEDOWN: permanently remove documents from the curated corpus —
     * the write side of the compliance loop whose read side is
@@ -433,19 +427,10 @@ object IncrementalCurateOps {
     *  - surviving docs keep their pack assignments (the tombstone is
     *    applied AFTER packing, so a resumed training run sees a hole,
     *    never a reshuffle).
+    *
+    * Concurrent callers use [[StateRoot.delete]], which chooses the
+    * batch id inside the main lease.
     */
-  /** [[takedown]] with the batch id chosen inside the main lease — the
-    * form concurrent callers should use (an id chosen outside it can be
-    * raced to, and the loser's ids silently absorbed by the idempotency
-    * check).
-    */
-  def takedown(spark: SparkSession, ids: DataFrame, idCol: String,
-      stateDir: String): Unit =
-    BatchState.withLease(spark, stateDir) {
-      takedown(spark, ids, idCol, stateDir,
-        BatchState.nextTombstoneBatchId(spark, stateDir, TakedownTables))
-    }
-
   def takedown(spark: SparkSession, ids: DataFrame, idCol: String,
       stateDir: String, batchId: Long): Unit =
     BatchState.withLease(spark, stateDir) {
@@ -493,31 +478,6 @@ object IncrementalCurateOps {
       stateDir: String): Option[DataFrame] =
     BatchState.readTombstones(spark, stateDir, TakedownTables)
       .map(_.withColumnRenamed("id", "doc_id"))
-
-  /** Compact every landed batch into one ([[BatchState.compactState]]):
-    * docs/prefix/edges/stats concatenate (per-batch-disjoint facts),
-    * the cluster map keeps only the newest snapshot (already the folded
-    * view of all history). [[curated]] and [[ingestShard]] continue
-    * unchanged on top — the next batch id just has to stay above the
-    * compacted one. Run between ingests (single-writer contract); at
-    * thousands of accumulated batches this is what keeps state listing
-    * and scan planning constant-time.
-    */
-  def compact(spark: SparkSession, stateDir: String): Unit =
-    BatchState.compactWithDeletions(spark, stateDir,
-      additiveTables = CoreTables, snapshotTables = Seq("clusters"),
-      delTables = TakedownTables)
-
-  /** Audit-history retention for a curation root
-    * ([[BatchState.setHistoryFloor]]): keeps folded batches on disk so
-    * [[curated]] cuts below a compaction fold stay servable. Takedowns
-    * still apply at EVERY cut — retained history never resurfaces
-    * removed content.
-    */
-  def retainCurationHistory(spark: SparkSession, root: String,
-      floor: Long = 0L): Unit =
-    BatchState.setHistoryFloor(spark,
-      BatchState.resolveGeneration(spark, root), floor)
 
   /** The doc_id column of every stage-1-kept document currently VISIBLE
     * in state — the recovery source for a composed replay whose own
@@ -571,4 +531,18 @@ object IncrementalCurateOps {
             max(col("quality_e6")).as("max_quality_e6"))
     }
   }
+
+  /** The curation family's [[StateRoot]] declaration: docs, prefix,
+    * edges and stats are per-batch-disjoint facts, the cluster map is a
+    * snapshot (compaction keeps its newest batch — already the folded
+    * view of all history; [[curated]] and [[ingestShard]] continue
+    * unchanged on top). Takedowns are its deletions; it declares no
+    * purge, TTL or bucketing. Retained history keeps folded batches on
+    * disk so [[curated]] cuts below a compaction fold stay servable —
+    * takedowns still apply at EVERY cut.
+    */
+  val Curation: StateFamily = StateFamily("curation",
+    additiveTables = CoreTables, delTables = TakedownTables,
+    delete = takedown, snapshotTables = Seq("clusters"),
+    verbs = Set(StateFamily.RetainHistory))
 }

@@ -90,11 +90,6 @@ object IncrementalDedupOps {
 
   private[graft] val ImageTables = Seq("bands", "edges")
 
-  /** True iff every image state table has a committed `batch=k` dir. */
-  def imageBatchLanded(spark: SparkSession, stateDir: String,
-      batchId: Long): Boolean =
-    BatchState.allLanded(spark, stateDir, ImageTables, batchId)
-
   /** Hash one new image shard and land its band-index rows (which
     * carry the fingerprints — the per-hash view is the bi = 0 slice)
     * and the near-dup edges it gains against everything landed before
@@ -111,7 +106,7 @@ object IncrementalDedupOps {
   private def ingestImageShardBody(spark: SparkSession, newImgs: DataFrame,
       idCol: String, bytesCol: String, stateDir: String, batchId: Long,
       maxDist: Int): Unit = {
-    if (imageBatchLanded(spark, stateDir, batchId)) return
+    if (StateRoot.landedIn(spark, Images, stateDir, batchId)) return
     BatchState.ensureParams(spark, stateDir,
       Map("maxDist" -> maxDist.toString))
     val landed = landedBatchIds(spark, stateDir, ImageTables, None)
@@ -170,41 +165,12 @@ object IncrementalDedupOps {
     } finally sig.unpersist(blocking = false)
   }
 
-  /** Compact the image band index + edges into one batch (both
-    * additive facts); see [[BatchState.compactState]]. Heals crashed
-    * purges first (the [[IncrementalIndexOps.compactText]] pattern).
-    */
-  def compactImages(spark: SparkSession, stateDir: String): Unit =
-    BatchState.compactWithDeletions(spark, stateDir,
-      additiveTables = ImageTables, snapshotTables = Seq.empty,
-      delTables = DelIdsTables)
-
-  /** Physically reclaim tombstoned images — [[IncrementalIndexOps.purgeText]]'s
-    * image twin (same commit-arbiter protocol): one transformed
-    * compaction drops the deleted ids' band rows and every edge
-    * touching them, then retires the deletion root.
-    */
-  def purgeImages(spark: SparkSession, stateDir: String): Unit =
-    BatchState.purgeState(spark, stateDir, additiveTables = ImageTables,
-      snapshotTables = Seq.empty, delTables = DelIdsTables) { deleted =>
-      val t: (String, DataFrame) => DataFrame = {
-        case ("bands", df) => df.join(deleted, Seq("id"), "left_anti")
-        case ("edges", df) => df
-          .join(deleted.select(col("id").as("doc_a")), Seq("doc_a"),
-            "left_anti")
-          .join(deleted.select(col("id").as("doc_b")), Seq("doc_b"),
-            "left_anti")
-          .select("doc_a", "doc_b", "hamming") // USING moved keys
-        case (_, df) => df
-      }
-      t
-    }
-
   // ---------------------------------------------------- image tombstones
 
   private[graft] val DelIdsTables = Seq("del_ids")
 
-  private def dedupDelRoot(stateDir: String): String = s"$stateDir/_deletes"
+  private def delRoot(stateDir: String): String =
+    BatchState.deletionRoot(stateDir)
 
   /** Retract images from the near-dup state by tombstone. Near-dup
     * pairs are PAIRWISE facts, so — unlike the component-folding
@@ -215,18 +181,8 @@ object IncrementalDedupOps {
     * [[ingestImageShard]]s also stop matching the deleted images'
     * stored bands, so no new edge ever forms against removed content.
     * Own BatchState root, ascending ids, idempotent, unknown ids no-op
-    * — the family contract.
+    * — the family contract ([[StateRoot.delete]] chooses the id).
     */
-  /** [[deleteImages]] with the batch id chosen inside the main lease —
-    * see [[IncrementalIndexOps.deleteTextDocs]]'s overload for why.
-    */
-  def deleteImages(spark: SparkSession, dels: DataFrame, idCol: String,
-      stateDir: String): Unit =
-    BatchState.withLease(spark, stateDir) {
-      deleteImages(spark, dels, idCol, stateDir,
-        BatchState.nextTombstoneBatchId(spark, stateDir, DelIdsTables))
-    }
-
   def deleteImages(spark: SparkSession, dels: DataFrame, idCol: String,
       stateDir: String, batchId: Long): Unit =
     BatchState.withLease(spark, stateDir) {
@@ -241,22 +197,22 @@ object IncrementalDedupOps {
           .select(col("id")), Seq("id"), "left_semi")
       // never create the deletion root for a complete no-op
       if (BatchState.hasDeletionRoot(spark, stateDir) || !held.isEmpty)
-        BatchState.withLease(spark, dedupDelRoot(stateDir)) {
+        BatchState.withLease(spark, delRoot(stateDir)) {
           // a crashed purge must be finished/discarded BEFORE landing:
           // tombstones landed into a committed-but-unretired root would
           // be wiped by the next healer (silent resurrection)
           BatchState.healPurge(spark, stateDir, DelIdsTables)
-          if (!BatchState.allLanded(spark, dedupDelRoot(stateDir),
+          if (!BatchState.allLanded(spark, delRoot(stateDir),
               DelIdsTables, batchId)) {
-            val delLanded = landedBatchIds(spark, dedupDelRoot(stateDir),
+            val delLanded = landedBatchIds(spark, delRoot(stateDir),
               DelIdsTables, None)
             requireInOrder(delLanded, batchId)
-            val newDel = readBatches(spark, dedupDelRoot(stateDir),
+            val newDel = readBatches(spark, delRoot(stateDir),
                 "del_ids", delLanded) match {
               case Some(prev) => held.join(prev, Seq("id"), "left_anti")
               case None => held
             }
-            land(newDel, dedupDelRoot(stateDir), "del_ids", batchId)
+            land(newDel, delRoot(stateDir), "del_ids", batchId)
           }
         }
     }
@@ -294,15 +250,6 @@ object IncrementalDedupOps {
 
   private val EmbTables = Seq("assign", "edges", "clusters")
 
-  /** True iff every embedding state table has a committed `batch=k`
-    * dir — plus, when no earlier batch is landed (k is the fit batch),
-    * the frozen codebook itself.
-    */
-  def embeddingBatchLanded(spark: SparkSession, stateDir: String,
-      batchId: Long): Boolean =
-    BatchState.allLanded(spark, stateDir, EmbTables, batchId) &&
-      BatchState.hasCodebook(spark, stateDir)
-
   /** Cluster one new embedding shard against the frozen codebook and
     * land its assignments, the near-dup edges it gains (in-shard +
     * against every stored shard), and the folded component snapshot.
@@ -327,7 +274,7 @@ object IncrementalDedupOps {
   private def ingestEmbeddingShardBody(spark: SparkSession,
       newEmb: DataFrame, idCol: String, vecCol: String, stateDir: String,
       batchId: Long, k: Int, iters: Int, threshold: Double): Unit = {
-    if (embeddingBatchLanded(spark, stateDir, batchId)) return
+    if (StateRoot.landedIn(spark, Embeddings, stateDir, batchId)) return
     BatchState.ensureParams(spark, stateDir, Map("k" -> k.toString,
       "iters" -> iters.toString, "threshold" -> threshold.toString))
     val landed = landedBatchIds(spark, stateDir, EmbTables, None)
@@ -385,62 +332,6 @@ object IncrementalDedupOps {
         assign.select(col("id").as("doc_id")), edgesK),
         stateDir, "clusters", batchId)
     } finally assign.unpersist(blocking = false)
-  }
-
-  /** Compact the embedding-dedup state into one batch: assignments and
-    * edges concatenate, the component map keeps the newest snapshot,
-    * the frozen codebook is untouched. Heals crashed purges first.
-    */
-  def compactEmbeddings(spark: SparkSession, root: String): Unit = {
-    val stateDir = BatchState.resolveGeneration(spark, root)
-    BatchState.compactWithDeletions(spark, stateDir,
-      additiveTables = Seq("assign", "edges"),
-      snapshotTables = Seq("clusters"), delTables = DelIdsTables)
-  }
-
-  /** Physically reclaim tombstoned vectors from the SemDeDup state —
-    * the purge twin for this family: assignments and edges anti-join
-    * the tombstone set, and the component SNAPSHOT is rewritten with
-    * each component's re-elected surviving representative (so the
-    * purged directory is self-contained: the plain
-    * [[semanticDedupView]] path reproduces exactly the tombstoned
-    * view). Same commit-arbiter protocol as [[purgeImages]].
-    */
-  def purgeEmbeddings(spark: SparkSession, root: String): Unit = {
-    val stateDir = BatchState.resolveGeneration(spark, root)
-    BatchState.purgeState(spark, stateDir,
-      additiveTables = Seq("assign", "edges"),
-      snapshotTables = Seq("clusters"), delTables = DelIdsTables) {
-      deleted =>
-      val landed = landedBatchIds(spark, stateDir, EmbTables, None)
-      val t: (String, DataFrame) => DataFrame = {
-        case ("assign", df) => df.join(deleted, Seq("id"), "left_anti")
-        case ("edges", df) => df
-          .join(deleted.select(col("id").as("doc_a")), Seq("doc_a"),
-            "left_anti")
-          .join(deleted.select(col("id").as("doc_b")), Seq("doc_b"),
-            "left_anti")
-          .select("doc_a", "doc_b") // USING moved the key first
-        case ("clusters", snap) =>
-          // survivors keyed by their HISTORICAL component label,
-          // re-elected min — non-trivial rows only, exactly the
-          // shape the plain view path reads
-          val live = readBatches(spark, stateDir, "assign", landed)
-            .get.select(col("id"))
-            .join(deleted, Seq("id"), "left_anti")
-            .join(snap.select(col("doc_id").as("id"),
-              col("cluster").as("rep0")), Seq("id"), "left")
-            .select(col("id"),
-              coalesce(col("rep0"), col("id")).as("comp"))
-          val reps = live.groupBy(col("comp"))
-            .agg(min(col("id")).as("rep"))
-          live.join(reps, Seq("comp"))
-            .where(col("rep") =!= col("id"))
-            .select(col("id").as("doc_id"), col("rep").as("cluster"))
-        case (_, df) => df
-      }
-      t
-    }
   }
 
   /** Offline codebook REFIT + state-only reindex for the SemDeDup
@@ -533,32 +424,6 @@ object IncrementalDedupOps {
     }
   }
 
-  /** Opt-in bucketed layout for the image family's band table
-    * ([[BatchState.setBucketing]]): deletion probes scan only the
-    * asked ids' buckets. Declare before the first ingest.
-    */
-  def bucketImageState(spark: SparkSession, root: String,
-      nBuckets: Int): Unit =
-    BatchState.setBucketing(spark,
-      BatchState.resolveGeneration(spark, root), "bands", "id", nBuckets)
-
-  /** Audit-history retention for a SemDeDup root
-    * ([[BatchState.setHistoryFloor]]): keeps folded batches on disk so
-    * [[semanticDedupView]] cuts below a compaction fold stay servable.
-    */
-  def retainEmbeddingHistory(spark: SparkSession, root: String,
-      floor: Long = 0L): Unit =
-    BatchState.setHistoryFloor(spark,
-      BatchState.resolveGeneration(spark, root), floor)
-
-  /** Reclaim superseded SemDeDup generations after a
-    * [[reindexEmbeddings]] + cutover
-    * ([[BatchState.retireGenerations]]): leaves exactly one generation
-    * on disk, views through the root untouched.
-    */
-  def retireEmbeddingGenerations(spark: SparkSession, root: String): Unit =
-    BatchState.retireGenerations(spark, root, EmbTables :+ "centroids")
-
   /** Retract vectors from the SemDeDup state by tombstone. Component
     * structure is HISTORY here, so — unlike the pairwise image family —
     * deletion is takedown-shaped, not a re-clustering: the deleted
@@ -570,18 +435,6 @@ object IncrementalDedupOps {
     * [[ingestEmbeddingShard]]s stop matching the deleted vectors'
     * stored assignments, so no new edge forms against removed content.
     */
-  /** [[deleteEmbeddings]] with the batch id chosen inside the main
-    * lease — see [[IncrementalIndexOps.deleteTextDocs]]'s overload.
-    */
-  def deleteEmbeddings(spark: SparkSession, dels: DataFrame, idCol: String,
-      root: String): Unit = {
-    val stateDir = BatchState.resolveGeneration(spark, root)
-    BatchState.withLease(spark, stateDir) {
-      deleteEmbeddings(spark, dels, idCol, stateDir,
-        BatchState.nextTombstoneBatchId(spark, stateDir, DelIdsTables))
-    }
-  }
-
   def deleteEmbeddings(spark: SparkSession, dels: DataFrame, idCol: String,
       root: String, batchId: Long): Unit = {
     val stateDir = BatchState.resolveGeneration(spark, root)
@@ -595,22 +448,22 @@ object IncrementalDedupOps {
           .select(col("id")), Seq("id"), "left_semi")
       // never create the deletion root for a complete no-op
       if (BatchState.hasDeletionRoot(spark, stateDir) || !held.isEmpty)
-        BatchState.withLease(spark, dedupDelRoot(stateDir)) {
+        BatchState.withLease(spark, delRoot(stateDir)) {
           // finish/discard a crashed purge BEFORE landing — tombstones
           // landed into a committed-but-unretired root would be wiped
           // by the next healer (silent resurrection)
           BatchState.healPurge(spark, stateDir, DelIdsTables)
-          if (!BatchState.allLanded(spark, dedupDelRoot(stateDir),
+          if (!BatchState.allLanded(spark, delRoot(stateDir),
               DelIdsTables, batchId)) {
-            val delLanded = landedBatchIds(spark, dedupDelRoot(stateDir),
+            val delLanded = landedBatchIds(spark, delRoot(stateDir),
               DelIdsTables, None)
             requireInOrder(delLanded, batchId)
-            val newDel = readBatches(spark, dedupDelRoot(stateDir),
+            val newDel = readBatches(spark, delRoot(stateDir),
                 "del_ids", delLanded) match {
               case Some(prev) => held.join(prev, Seq("id"), "left_anti")
               case None => held
             }
-            land(newDel, dedupDelRoot(stateDir), "del_ids", batchId)
+            land(newDel, delRoot(stateDir), "del_ids", batchId)
           }
         }
     }
@@ -675,4 +528,75 @@ object IncrementalDedupOps {
           .select(col("id").as(idCol), col("cluster"), col("rep"))
     }
   }
+
+  // -------------------------------------------------- lifecycle families
+
+  import StateFamily.{RetainHistory, RetireGenerations}
+
+  /** The image near-dup family's [[StateRoot]] declaration: band index
+    * and edges are additive facts; purge drops the deleted ids' band
+    * rows and every edge touching them.
+    */
+  val Images: StateFamily = StateFamily("image",
+    additiveTables = ImageTables, delTables = DelIdsTables,
+    delete = deleteImages, bucketColumns = Seq("bands" -> "id"),
+    purgeFold = Some { (_, _, deleted) =>
+      val t: (String, DataFrame) => DataFrame = {
+        case ("bands", df) => df.join(deleted, Seq("id"), "left_anti")
+        case ("edges", df) => df
+          .join(deleted.select(col("id").as("doc_a")), Seq("doc_a"),
+            "left_anti")
+          .join(deleted.select(col("id").as("doc_b")), Seq("doc_b"),
+            "left_anti")
+          .select("doc_a", "doc_b", "hamming") // USING moved keys
+        case (_, df) => df
+      }
+      t
+    })
+
+  /** The SemDeDup family's [[StateRoot]] declaration: assignments and
+    * edges concatenate under compaction, the component map keeps its
+    * newest snapshot, the frozen codebook is untouched (and part of
+    * each generation's inline state). Purge anti-joins the tombstones
+    * out of assignments and edges and rewrites the component SNAPSHOT
+    * with each component's re-elected surviving representative, so the
+    * purged directory is self-contained: the plain [[semanticDedupView]]
+    * path reproduces exactly the tombstoned view.
+    */
+  val Embeddings: StateFamily = StateFamily("embedding",
+    additiveTables = Seq("assign", "edges"), delTables = DelIdsTables,
+    delete = deleteEmbeddings, snapshotTables = Seq("clusters"),
+    generationTables = Seq("centroids"),
+    purgeFold = Some { (spark, stateDir, deleted) =>
+      val landed = landedBatchIds(spark, stateDir, EmbTables, None)
+      val t: (String, DataFrame) => DataFrame = {
+        case ("assign", df) => df.join(deleted, Seq("id"), "left_anti")
+        case ("edges", df) => df
+          .join(deleted.select(col("id").as("doc_a")), Seq("doc_a"),
+            "left_anti")
+          .join(deleted.select(col("id").as("doc_b")), Seq("doc_b"),
+            "left_anti")
+          .select("doc_a", "doc_b") // USING moved the key first
+        case ("clusters", snap) =>
+          // survivors keyed by their HISTORICAL component label,
+          // re-elected min — non-trivial rows only, exactly the
+          // shape the plain view path reads
+          val live = readBatches(spark, stateDir, "assign", landed)
+            .get.select(col("id"))
+            .join(deleted, Seq("id"), "left_anti")
+            .join(snap.select(col("doc_id").as("id"),
+              col("cluster").as("rep0")), Seq("id"), "left")
+            .select(col("id"),
+              coalesce(col("rep0"), col("id")).as("comp"))
+          val reps = live.groupBy(col("comp"))
+            .agg(min(col("id")).as("rep"))
+          live.join(reps, Seq("comp"))
+            .where(col("rep") =!= col("id"))
+            .select(col("id").as("doc_id"), col("rep").as("cluster"))
+        case (_, df) => df
+      }
+      t
+    },
+    needsCodebook = true,
+    verbs = Set(RetainHistory, RetireGenerations))
 }

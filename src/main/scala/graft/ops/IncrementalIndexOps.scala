@@ -79,11 +79,6 @@ object IncrementalIndexOps {
   private[graft] val Bm25Tables =
     Seq("postings", "doclen", "tokstats", "globals")
 
-  /** True iff every BM25 state table has a committed `batch=k` dir. */
-  def textBatchLanded(spark: SparkSession, stateDir: String,
-      batchId: Long): Boolean =
-    BatchState.allLanded(spark, stateDir, Bm25Tables, batchId)
-
   /** Tokenize one new document shard into the inverted-index state.
     * Idempotent per (stateDir, batchId); order-free (see object doc).
     */
@@ -98,7 +93,7 @@ object IncrementalIndexOps {
   private def ingestTextShardBody(spark: SparkSession, docs: DataFrame,
       idCol: String, textCol: String, stateDir: String,
       batchId: Long): Unit = {
-    if (textBatchLanded(spark, stateDir, batchId)) return
+    if (StateRoot.landedIn(spark, Bm25, stateDir, batchId)) return
     val postings = docs
       .select(col(idCol).as("id"),
         explode(TextOps.tokens(col(textCol))).as("token"))
@@ -127,11 +122,8 @@ object IncrementalIndexOps {
   private[graft] val DelTables =
     Seq("del_ids", "del_tokstats", "del_globals")
 
-  /** The deletion ledger's own BatchState root. */
-  private[graft] def deletionRoot(stateDir: String): String =
-    s"$stateDir/_deletes"
-
-  private def delDir(stateDir: String): String = deletionRoot(stateDir)
+  private def delDir(stateDir: String): String =
+    BatchState.deletionRoot(stateDir)
 
   /** Retract documents from the inverted-index state — the curation
     * composition (dedup losers, takedowns) that an append-only index
@@ -158,26 +150,9 @@ object IncrementalIndexOps {
     * semi-join prunes to the deleted ids' buckets; deletions being rare
     * relative to searches is what makes scan-at-delete the right side
     * of the trade (the search path pays only the tombstone anti-join,
-    * and [[purgeText]] retires even that).
+    * and [[StateRoot.purge]] retires even that). Concurrent callers use
+    * [[StateRoot.delete]], which chooses the batch id inside the lease.
     */
-  /** [[deleteTextDocs]] with the batch id chosen INSIDE the writer
-    * leases (above everything landed or promised) — the form concurrent
-    * callers should use: an id chosen outside the lease can be raced to
-    * by another deletion, whose idempotency check then silently absorbs
-    * the loser's ids.
-    */
-  def deleteTextDocs(spark: SparkSession, dels: DataFrame, idCol: String,
-      root: String): Unit = {
-    val stateDir = BatchState.resolveGeneration(spark, root)
-    // the MAIN lease alone protects the id choice (every deletion
-    // writer takes it first) without creating the deletion root on a
-    // directory where this call turns out to be a no-op
-    BatchState.withLease(spark, stateDir) {
-      deleteTextDocs(spark, dels, idCol, stateDir,
-        BatchState.nextTombstoneBatchId(spark, stateDir, DelTables))
-    }
-  }
-
   def deleteTextDocs(spark: SparkSession, dels: DataFrame, idCol: String,
       root: String, batchId: Long): Unit = {
     val stateDir = BatchState.resolveGeneration(spark, root)
@@ -193,7 +168,7 @@ object IncrementalIndexOps {
       val asked = dels.select(col(idCol).as("id")).distinct()
       // only ids that are indexed AND not already tombstoned produce
       // deltas — double-deletes and unknown ids are exact no-ops. On a
-      // bucketed directory ([[bucketTextState]]) both probes scan only
+      // bucketed directory ([[StateRoot.bucket]]) both probes scan only
       // the asked ids' buckets
       val indexed = asked.join(
         BatchState.readBatchesPrunedBy(spark, stateDir, "doclen", landed,
@@ -202,9 +177,9 @@ object IncrementalIndexOps {
       // a deletion that would be a COMPLETE no-op must not create the
       // deletion root on a pristine directory (whose searches would pay
       // the deletion listing forever after)
-      if (hasDeletions(spark, stateDir) || !indexed.isEmpty)
+      if (BatchState.hasDeletionRoot(spark, stateDir) || !indexed.isEmpty)
         BatchState.withLease(spark, delDir(stateDir)) {
-        healPurge(spark, stateDir)
+        BatchState.healPurge(spark, stateDir, DelTables)
         if (!BatchState.allLanded(spark, delDir(stateDir), DelTables,
             batchId)) {
           val delLanded =
@@ -273,7 +248,7 @@ object IncrementalIndexOps {
     * Honest bounds, loudly enforced: history exists only until
     * compaction folds it (a merged batch is one id — asking for a cut
     * below the watermark throws via the emptiness require) unless a
-    * history floor retains it ([[retainTextHistory]] — folded cuts
+    * history floor retains it ([[StateRoot.retainHistory]] — folded cuts
     * then resolve through the pre-fold manifests). Tombstoned
     * directories serve ALIGNED cuts only: each deletion batch records
     * the max main batch id its delta was derived against (`ceiling`),
@@ -289,10 +264,10 @@ object IncrementalIndexOps {
     require(k >= 1 && k <= 1000, s"k in 1..1000, got $k")
     val stateDir = BatchState.resolveGeneration(spark, root)
     val delLanded =
-      if (!hasDeletions(spark, stateDir)) Seq.empty[Long]
+      if (!BatchState.hasDeletionRoot(spark, stateDir)) Seq.empty[Long]
       // a committed-but-unretired purge already folded every delta into
       // the merged tables — the surviving tombstones must NOT re-apply
-      else if (purgeCommitted(spark, stateDir)) Seq.empty[Long]
+      else if (BatchState.purgeCommitted(spark, stateDir)) Seq.empty[Long]
       else landedBatchIds(spark, delDir(stateDir), DelTables, None)
     asOfBatch.foreach { c =>
       // tombstone deltas are derived against the postings AT DELETE
@@ -361,202 +336,9 @@ object IncrementalIndexOps {
       "id", qidCol, qtextCol, k)
   }
 
-  /** Compact the inverted-index state into one batch — postings,
-    * doclen, per-batch df and globals all concatenate (every BM25
-    * statistic is additive, so [[bm25Search]]'s re-aggregation is
-    * untouched); see [[BatchState.compactState]] for the crash-safe
-    * manifest protocol and [[IncrementalCurateOps.compact]] for when to
-    * run it.
-    */
-  def compactText(spark: SparkSession, root: String): Unit = {
-    val stateDir = BatchState.resolveGeneration(spark, root)
-    BatchState.compactWithDeletions(spark, stateDir,
-      additiveTables = Bm25Tables, snapshotTables = Seq.empty,
-      delTables = DelTables)
-  }
-
-  // the shared tombstone/purge machinery lives in [[BatchState]] —
-  // these keep the family-local names readable
-  private def hasDeletions(spark: SparkSession, stateDir: String): Boolean =
-    BatchState.hasDeletionRoot(spark, stateDir)
-  private def purgeCommitted(spark: SparkSession,
-      stateDir: String): Boolean =
-    BatchState.purgeCommitted(spark, stateDir)
-  private def healPurge(spark: SparkSession, stateDir: String,
-      delTables: Seq[String] = DelTables): Unit =
-    BatchState.healPurge(spark, stateDir, delTables)
-
-  /** PHYSICALLY reclaim tombstoned documents: one transformed
-    * compaction that anti-joins the tombstone set out of
-    * postings/doclen and RECOMPUTES tokstats/globals from the
-    * survivors, then retires the whole deletion root — after which
-    * searches pay neither the anti-join nor the delta re-aggregation,
-    * and the bytes are actually gone (the logical tombstones of
-    * [[deleteTextDocs]] retract correctness-wise but keep paying
-    * storage and one anti-join per search forever).
-    *
-    * Crash-safe across the two roots via a commit ARBITER: the purge
-    * records the main manifest version its flip will create in
-    * `_deletes/.purged_at` BEFORE compacting; readers and writers then
-    * decide "deltas live" vs "deltas folded" by comparing the current
-    * main version against the marker ([[purgeCommitted]] — version
-    * read first, see there). A crash before the flip leaves the marker
-    * stale (discarded by the next writer); a crash after the flip
-    * leaves tombstones that every reader ignores and the next writer
-    * retires ([[healPurge]]). Use [[compactText]]/[[deleteTextDocs]]/
-    * this — never raw `BatchState.compactState` — on a BM25 state
-    * directory that has ever had deletions, so the healing always runs
-    * under the leases first.
-    */
-  def purgeText(spark: SparkSession, root: String): Unit = {
-    val stateDir = BatchState.resolveGeneration(spark, root)
-    BatchState.purgeState(spark, stateDir, additiveTables = Bm25Tables,
-      snapshotTables = Seq.empty, delTables = DelTables) { deleted =>
-      val landed = landedBatchIds(spark, stateDir, Bm25Tables, None)
-      def survivors(table: String) =
-        readBatches(spark, stateDir, table, landed).get
-          .join(deleted, Seq("id"), "left_anti")
-      val t: (String, DataFrame) => DataFrame = {
-        case ("postings", df) => df.join(deleted, Seq("id"), "left_anti")
-        case ("doclen", df) => df.join(deleted, Seq("id"), "left_anti")
-        case ("tokstats", _) => survivors("postings")
-          .groupBy(col("token")).agg(count(lit(1)).as("df"))
-        case ("globals", _) => survivors("doclen")
-          .agg(count(lit(1)).as("n_docs"),
-            coalesce(sum(col("dl")), lit(0L)).as("totlen"))
-        case (_, df) => df
-      }
-      t
-    }
-  }
-
-  /** `DESCRIBE` for a BM25 state root ([[BatchState.describeState]]):
-    * batches, manifest/watermark, TTL floor, deletion state, params —
-    * metadata-only, generation-resolved.
-    */
-  def describeTextState(spark: SparkSession, root: String): DataFrame =
-    BatchState.describeState(spark, root, Bm25Tables, DelTables)
-
-  /** `DESCRIBE` for an IVF state root. */
-  def describeVectorState(spark: SparkSession, root: String): DataFrame =
-    BatchState.describeState(spark, root, IvfTables, VecDelTables)
-
-  /** Age-based retention for the BM25 family
-    * ([[BatchState.setRetention]]): retire every index batch below
-    * `minActiveBatchId` from the active view — the TTL verb ("drop
-    * shards older than the training-data cutoff") completing the
-    * family's operational set (ingest/delete/purge/compact/reindex).
-    * Exact by construction: every BM25 statistic is additive over
-    * per-batch-disjoint doc sets, so the TTL'd view IS the index of
-    * the surviving batches. Requires a tombstone-free directory (purge
-    * first): a live deletion delta references the whole pre-TTL corpus
-    * — its negative df/globals rows for docs in retired batches would
-    * undercount the surviving statistics.
-    *
-    * TTL granularity is the PRE-compaction batch id space: compaction
-    * folds every active batch into ONE merged id at the top of the id
-    * space, after which a floor can only keep everything (floor ≤
-    * merged id) or retire everything — "drop shards older than X"
-    * stops being expressible once the shards are folded. Expire BEFORE
-    * compacting, or run compaction on a cadence coarser than the TTL.
-    */
-  def expireTextBatches(spark: SparkSession, root: String,
-      minActiveBatchId: Long): Unit = {
-    val stateDir = BatchState.resolveGeneration(spark, root)
-    BatchState.withLease(spark, stateDir) {
-      require(BatchState.readTombstones(spark, stateDir, DelTables).isEmpty,
-        s"$stateDir holds live tombstones; purge before expiring — " +
-          "deletion deltas reference retired batches' statistics")
-      BatchState.setRetention(spark, stateDir, minActiveBatchId)
-    }
-  }
-
-  /** Age-based retention for the IVF family — exact for the same
-    * reason (cells are per-batch-disjoint postings; the frozen
-    * codebook lives outside batch visibility and survives the TTL).
-    * Same granularity caveat as [[expireTextBatches]]: compaction
-    * folds the batch id space, so expire before compacting.
-    */
-  def expireVectorBatches(spark: SparkSession, root: String,
-      minActiveBatchId: Long): Unit = {
-    val stateDir = BatchState.resolveGeneration(spark, root)
-    BatchState.withLease(spark, stateDir) {
-      require(BatchState.readTombstones(spark, stateDir,
-        VecDelTables).isEmpty,
-        s"$stateDir holds live tombstones; purge before expiring")
-      BatchState.setRetention(spark, stateDir, minActiveBatchId)
-    }
-  }
-
-  /** Opt-in bucketed layout for the scan-heavy BM25 tables
-    * ([[BatchState.setBucketing]]): postings and doclen land as
-    * `batch=k/gbkt=hash(id)%n` partitions, so a deletion's delta
-    * derivation — the per-batch cost of the streaming deletion twin —
-    * scans only the deleted ids' buckets instead of the whole table
-    * (partition pruning at planning time). Declare BEFORE the first
-    * ingest; search results are bit-identical either way.
-    */
-  def bucketTextState(spark: SparkSession, root: String,
-      nBuckets: Int): Unit = {
-    val stateDir = BatchState.resolveGeneration(spark, root)
-    BatchState.setBucketing(spark, stateDir, "postings", "id", nBuckets)
-    BatchState.setBucketing(spark, stateDir, "doclen", "id", nBuckets)
-  }
-
-  /** [[bucketTextState]] for the IVF family: cell postings bucketed by
-    * the vector id, pruning the deletion probe's scan.
-    */
-  def bucketVectorState(spark: SparkSession, root: String,
-      nBuckets: Int): Unit = {
-    val stateDir = BatchState.resolveGeneration(spark, root)
-    BatchState.setBucketing(spark, stateDir, "cells", "cid", nBuckets)
-  }
-
-  /** Declare audit-history retention for a BM25 root
-    * ([[BatchState.setHistoryFloor]]): compaction keeps folded batch
-    * directories at or above `floor` on disk (invisible to the live
-    * view), so [[bm25Search]] with `asOfBatch` can resolve cuts BELOW
-    * a fold through the pre-fold manifest — the audit verb survives
-    * routine compaction. Raising the floor is the history-GC verb;
-    * cuts below it refuse loudly. A purge overrides retention
-    * (compliance beats audit).
-    */
-  def retainTextHistory(spark: SparkSession, root: String,
-      floor: Long = 0L): Unit =
-    BatchState.setHistoryFloor(spark,
-      BatchState.resolveGeneration(spark, root), floor)
-
-  /** [[retainTextHistory]] for an IVF root. */
-  def retainVectorHistory(spark: SparkSession, root: String,
-      floor: Long = 0L): Unit =
-    BatchState.setHistoryFloor(spark,
-      BatchState.resolveGeneration(spark, root), floor)
-
-  /** Reclaim superseded BM25 generations after a cutover
-    * ([[BatchState.retireGenerations]]): reindex → cutover → retire
-    * leaves exactly ONE generation on disk — without it every cutover
-    * doubles the index's storage footprint forever. Crash-safe and
-    * re-runnable; searches through the root are untouched.
-    */
-  def retireTextGenerations(spark: SparkSession, root: String): Unit =
-    BatchState.retireGenerations(spark, root, Bm25Tables)
-
-  /** [[retireTextGenerations]] for the IVF family (the frozen
-    * codebook's `centroids` table is part of each generation's inline
-    * state).
-    */
-  def retireVectorGenerations(spark: SparkSession, root: String): Unit =
-    BatchState.retireGenerations(spark, root, IvfTables :+ "centroids")
-
   // -------------------------------------------------------------- IVF
 
   private[graft] val IvfTables = Seq("cells")
-
-  /** True iff the batch's cells landed and a committed codebook exists. */
-  def vectorBatchLanded(spark: SparkSession, stateDir: String,
-      batchId: Long): Boolean =
-    BatchState.allLanded(spark, stateDir, IvfTables, batchId) &&
-      BatchState.hasCodebook(spark, stateDir)
 
   /** Assign one new vector shard under the frozen codebook and land its
     * cell postings. Whichever batch first finds no committed codebook
@@ -578,7 +360,7 @@ object IncrementalIndexOps {
   private def ingestVectorShardBody(spark: SparkSession, emb: DataFrame,
       idCol: String, vecCol: String, stateDir: String, batchId: Long,
       nCells: Int, iters: Int): Unit = {
-    if (vectorBatchLanded(spark, stateDir, batchId)) return
+    if (StateRoot.landedIn(spark, Ivf, stateDir, batchId)) return
     BatchState.ensureParams(spark, stateDir,
       Map("nCells" -> nCells.toString, "iters" -> iters.toString))
     val landed = landedBatchIds(spark, stateDir, IvfTables, None)
@@ -606,18 +388,6 @@ object IncrementalIndexOps {
     * and already-tombstoned ids are exact no-ops, deletion is by id and
     * permanent (ids are never reused).
     */
-  /** [[deleteVectors]] with the batch id chosen inside the main lease —
-    * see the [[deleteTextDocs]] overload for why.
-    */
-  def deleteVectors(spark: SparkSession, dels: DataFrame, idCol: String,
-      root: String): Unit = {
-    val stateDir = BatchState.resolveGeneration(spark, root)
-    BatchState.withLease(spark, stateDir) {
-      deleteVectors(spark, dels, idCol, stateDir,
-        BatchState.nextTombstoneBatchId(spark, stateDir, VecDelTables))
-    }
-  }
-
   def deleteVectors(spark: SparkSession, dels: DataFrame, idCol: String,
       root: String, batchId: Long): Unit = {
     val stateDir = BatchState.resolveGeneration(spark, root)
@@ -626,16 +396,16 @@ object IncrementalIndexOps {
       require(landed.nonEmpty,
         s"no landed batches under $stateDir — nothing to delete from")
       val asked = dels.select(col(idCol).as("id")).distinct()
-      // bucketed directories ([[bucketVectorState]]) scan only the
+      // bucketed directories ([[StateRoot.bucket]]) scan only the
       // asked ids' buckets of the cell postings
       val indexed = asked.join(
         BatchState.readBatchesPrunedBy(spark, stateDir, "cells", landed,
           asked, "id").get
           .select(col("cid").as("id")), Seq("id"), "left_semi")
       // never create the deletion root for a complete no-op
-      if (hasDeletions(spark, stateDir) || !indexed.isEmpty)
+      if (BatchState.hasDeletionRoot(spark, stateDir) || !indexed.isEmpty)
         BatchState.withLease(spark, delDir(stateDir)) {
-          healPurge(spark, stateDir, VecDelTables)
+          BatchState.healPurge(spark, stateDir, VecDelTables)
           if (!BatchState.allLanded(spark, delDir(stateDir), VecDelTables,
               batchId)) {
             val delLanded =
@@ -650,34 +420,6 @@ object IncrementalIndexOps {
           }
         }
     }
-  }
-
-  /** Physically reclaim tombstoned vectors — [[purgeText]]'s vector
-    * twin (same commit-arbiter protocol, same healing), one transformed
-    * compaction that anti-joins the tombstone set out of `cells`.
-    */
-  def purgeVectors(spark: SparkSession, root: String): Unit = {
-    val stateDir = BatchState.resolveGeneration(spark, root)
-    BatchState.purgeState(spark, stateDir, additiveTables = IvfTables,
-      snapshotTables = Seq.empty, delTables = VecDelTables) { deleted0 =>
-      val deleted = deleted0.select(col("id").as("cid"))
-      val t: (String, DataFrame) => DataFrame = {
-        case ("cells", df) => df.join(deleted, Seq("cid"), "left_anti")
-        case (_, df) => df
-      }
-      t
-    }
-  }
-
-  /** Compact the IVF cell postings into one batch (additive facts;
-    * the frozen codebook lives outside batch visibility and is
-    * untouched). Heals crashed purges first — see [[compactText]].
-    */
-  def compactVectors(spark: SparkSession, root: String): Unit = {
-    val stateDir = BatchState.resolveGeneration(spark, root)
-    BatchState.compactWithDeletions(spark, stateDir,
-      additiveTables = IvfTables, snapshotTables = Seq.empty,
-      delTables = VecDelTables)
   }
 
   /** Offline codebook REFIT + state-only reindex — the operator the
@@ -813,4 +555,59 @@ object IncrementalIndexOps {
       .partitionBy(col("qid")).orderBy(col("cos").desc, col("cid"))
     scored.withColumn("rnk", row_number().over(w)).where(col("rnk") <= k)
   }
+
+  // -------------------------------------------------- lifecycle families
+
+  import StateFamily.{Describe, Expire, RetainHistory, RetireGenerations}
+
+  /** The BM25 family's [[StateRoot]] declaration. Every statistic is
+    * additive over per-batch-disjoint doc sets, so compaction
+    * concatenates all four tables (search re-aggregates) and a TTL'd
+    * view is exactly the index of the surviving batches. Purge drops
+    * the tombstoned postings/doclen and recomputes tokstats/globals
+    * from the survivors.
+    */
+  val Bm25: StateFamily = StateFamily("bm25",
+    additiveTables = Bm25Tables, delTables = DelTables,
+    delete = deleteTextDocs,
+    bucketColumns = Seq("postings" -> "id", "doclen" -> "id"),
+    purgeFold = Some { (spark, stateDir, deleted) =>
+      val landed = landedBatchIds(spark, stateDir, Bm25Tables, None)
+      def survivors(table: String) =
+        readBatches(spark, stateDir, table, landed).get
+          .join(deleted, Seq("id"), "left_anti")
+      val t: (String, DataFrame) => DataFrame = {
+        case ("postings", df) => df.join(deleted, Seq("id"), "left_anti")
+        case ("doclen", df) => df.join(deleted, Seq("id"), "left_anti")
+        case ("tokstats", _) => survivors("postings")
+          .groupBy(col("token")).agg(count(lit(1)).as("df"))
+        case ("globals", _) => survivors("doclen")
+          .agg(count(lit(1)).as("n_docs"),
+            coalesce(sum(col("dl")), lit(0L)).as("totlen"))
+        case (_, df) => df
+      }
+      t
+    },
+    verbs = Set(Describe, Expire, RetainHistory, RetireGenerations))
+
+  /** The IVF family's [[StateRoot]] declaration: cell postings are
+    * per-batch-disjoint (exact under compaction and TTL); the frozen
+    * codebook lives outside batch visibility, survives both, and is
+    * part of each generation's inline state. Purge anti-joins the
+    * tombstones out of `cells`.
+    */
+  val Ivf: StateFamily = StateFamily("ivf",
+    additiveTables = IvfTables, delTables = VecDelTables,
+    delete = deleteVectors, generationTables = Seq("centroids"),
+    bucketColumns = Seq("cells" -> "cid"),
+    purgeFold = Some { (_, _, deleted0) =>
+      val deleted = deleted0.select(col("id").as("cid"))
+      val t: (String, DataFrame) => DataFrame = {
+        case ("cells", df) => df.join(deleted, Seq("cid"), "left_anti")
+        case (_, df) => df
+      }
+      t
+    },
+    needsCodebook = true,
+    verbs = Set(Describe, Expire, RetainHistory, RetireGenerations))
 }

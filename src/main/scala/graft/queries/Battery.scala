@@ -2790,7 +2790,8 @@ object Battery {
     Some(curationOracle))
 
   /** Streaming incremental curation
-    * ([[graft.streaming.Streaming.curationIngest]]): c2's two shards
+    * ([[graft.streaming.Streaming.stateIngest]] around
+    * [[graft.ops.IncrementalCurateOps.ingestShard]]): c2's two shards
     * arrive as FILES in a watched directory, each drained by an
     * `AvailableNow` pass whose `foreachBatch` folds the micro-batch
     * into the same cross-batch curation state — the file-source
@@ -2821,8 +2822,13 @@ object Battery {
         val part = fs.globStatus(new Path(s"$tmp/part-*"))(0).getPath
         fs.rename(part, new Path(s"$watch/$name.parquet"))
       }
-      def drain(): Unit = graft.streaming.Streaming.curationIngest(
-        s, watch, docs.schema, ckpt, state, "doc_id", "text")
+      def drain(): Unit = graft.streaming.Streaming.stateIngest(
+        s, watch, docs.schema, ckpt,
+        graft.ops.StateRoot(IncrementalCurateOps.Curation, state),
+        "doc_id") { (df, batchId) =>
+        IncrementalCurateOps.ingestShard(df.sparkSession, df, "doc_id",
+          "text", state, batchId)
+      }
       val r = docs.agg(min(col("doc_id")), max(col("doc_id"))).head
       val mid = (r.getLong(0) + r.getLong(1)) / 2
       landShard(docs.where(col("doc_id") <= mid), "s1")
@@ -4275,7 +4281,7 @@ object Battery {
            |SELECT qid, rank, doc_id, score, n_match FROM r WHERE rank <= 10""".stripMargin))
 
   /** x38 — AGE-BASED RETENTION (TTL,
-    * [[graft.ops.IncrementalIndexOps.expireTextBatches]]): the last
+    * [[graft.ops.StateRoot.expire]]): the last
     * operational verb of the state family — batches below the floor
     * leave the ACTIVE view wholesale (no per-id tombstones), and the
     * search over what remains must equal an index built from the
@@ -4304,7 +4310,8 @@ object Battery {
         "doc_id", "text", stateDir, batchId = 1L)
       I.ingestTextShard(s, corpus.where(col("doc_id") > cut2),
         "doc_id", "text", stateDir, batchId = 2L)
-      I.expireTextBatches(s, stateDir, minActiveBatchId = 1L)
+      graft.ops.StateRoot(I.Bm25, stateDir)
+        .expire(s, minActiveBatchId = 1L)
       I.bm25Search(s, stateDir, queries, "qid", "text", k = 10)
         .withColumnRenamed("id", "doc_id")
     },
@@ -4479,7 +4486,8 @@ object Battery {
       val r = corpus.agg(min(col("doc_id")), max(col("doc_id"))).head
       val (lo, hi) = (r.getLong(0), r.getLong(1))
       val (cut1, cut2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-      I.retainTextHistory(s, stateDir)
+      val root = graft.ops.StateRoot(I.Bm25, stateDir)
+      root.retainHistory(s)
       I.ingestTextShard(s, corpus.where(col("doc_id") <= cut1),
         "doc_id", "text", stateDir, batchId = 0L)
       I.ingestTextShard(s, corpus.where(
@@ -4487,7 +4495,7 @@ object Battery {
         "doc_id", "text", stateDir, batchId = 1L)
       I.ingestTextShard(s, corpus.where(col("doc_id") > cut2),
         "doc_id", "text", stateDir, batchId = 2L)
-      I.compactText(s, stateDir)
+      root.compact(s)
       I.bm25Search(s, stateDir, queries, "qid", "text", k = 10,
         asOfBatch = Some(1L))
         .withColumnRenamed("id", "doc_id")
@@ -4517,8 +4525,8 @@ object Battery {
            |SELECT qid, rank, doc_id, score, n_match FROM r WHERE rank <= 10""".stripMargin))
 
   /** st_streamed_deletion — the streaming DELETION twin
-    * ([[graft.streaming.Streaming.textDeletionIngest]]): a continuous
-    * takedown feed drained through the deletion harness — each
+    * ([[graft.streaming.Streaming.deletionIngest]] on a BM25 root): a
+    * continuous takedown feed drained through the deletion harness — each
     * micro-batch of ids lands a tombstone batch in the index's
     * deletion root under the root's own `_input` ledger (replay skips,
     * crash re-chooses the same id). Two micro-batches together delete
@@ -4557,8 +4565,9 @@ object Battery {
         val part = fs.globStatus(new Path(s"$tmp/part-*"))(0).getPath
         fs.rename(part, new Path(s"$watch/$name.parquet"))
       }
-      def drain(): Unit = graft.streaming.Streaming.textDeletionIngest(
-        s, watch, doomed.schema, ckpt, state, "doc_id")
+      def drain(): Unit = graft.streaming.Streaming.deletionIngest(
+        s, watch, doomed.schema, ckpt, graft.ops.StateRoot(I.Bm25, state),
+        "doc_id")
       landShard(doomed.where(pmod(col("doc_id"), lit(26)) === 0), "d1")
       drain()
       landShard(doomed.where(pmod(col("doc_id"), lit(26)) === 13), "d2")

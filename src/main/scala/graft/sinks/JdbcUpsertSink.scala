@@ -3,7 +3,7 @@ package graft.sinks
 import java.sql.{Connection, DriverManager}
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, max, struct}
 
 /** The Postgres-sink variant of S7 (SURVEY §2.1): a staged, batched
   * `INSERT … ON CONFLICT (key) DO UPDATE` over `foreachPartition` — the
@@ -99,7 +99,10 @@ object JdbcUpsertSink {
     * injectable for tests; defaults to DriverManager on config.url.
     * Input is de-duplicated by key first: Postgres rejects a statement
     * batch that touches the same conflict key twice ("cannot affect row
-    * a second time"), which would make retries fail identically.
+    * a second time"), which would make retries fail identically. The
+    * row kept per key is the one with the greatest `jsonCol` (then
+    * `typeCol`), so a re-run stores the same bytes whatever the input
+    * order.
     */
   def upsert(docs: DataFrame, config: Config,
       keyCol: String = "key", typeCol: String = "resource_type",
@@ -109,8 +112,10 @@ object JdbcUpsertSink {
     val sql = config.dialect.upsertSql(config.table, keyCol, cols)
     val order = config.dialect.paramOrder(keyCol, cols)
     val (batchSize, cfg) = (config.batchSize, config)
-    docs.select(col(keyCol), col(typeCol), col(jsonCol))
-      .dropDuplicates(keyCol)
+    docs.groupBy(col(keyCol))
+      .agg(max(struct(col(jsonCol), col(typeCol))).as("pick"))
+      .select(col(keyCol), col("pick").getField(typeCol),
+        col("pick").getField(jsonCol))
       .foreachPartition {
       (rows: Iterator[org.apache.spark.sql.Row]) =>
         val conn = connect(cfg)

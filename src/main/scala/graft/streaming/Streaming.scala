@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.ops.StateRoot
+
 /** Structured Streaming surface (SURVEY §2.7 — green-field beyond the
   * strictly-batch reference): windowed aggregates, session windows,
   * watermarked dedup. Each transform is expressed once and works on BOTH
@@ -84,12 +86,6 @@ object Streaming {
     */
   def dedupKeys(events: DataFrame, keys: Seq[String]): DataFrame =
     events.select(keys.map(col): _*).dropDuplicates()
-
-  /** File-source stream reader with an explicit schema (required for
-    * streaming reads).
-    */
-  def readEventStream(spark: SparkSession, dir: String, schema: StructType): DataFrame =
-    spark.readStream.schema(schema).parquet(dir)
 
   /** Stream-stream inner join with event-time bounds: clicks joined to
     * the impressions they follow within `maxDelay`. Works identically
@@ -271,54 +267,6 @@ object Streaming {
     q.awaitTermination()
   }
 
-  /** Streaming incremental corpus curation: watch a directory for new
-    * document shards (parquet files) and fold each micro-batch into
-    * [[graft.ops.IncrementalCurateOps]]' cross-batch state — the full
-    * production loop for a continuously-ingested corpus: the file
-    * source's checkpoint decides exactly-once WHICH files form each
-    * micro-batch, `foreachBatch` hands them to `ingestShard` under the
-    * stream's monotonic `batchId`, and ingestShard's own directory
-    * ledger makes the write idempotent — a restart that replays the
-    * last uncommitted micro-batch re-lands byte-identical state, and a
-    * replay of a COMMITTED batch is a no-op (the two ledgers compose;
-    * neither trusts the other). Each invocation drains everything
-    * currently in `watchDir` ([[runAvailableNow]]) and stops — the
-    * periodic-ingest pattern; run it from a scheduler as shards land.
-    *
-    * [[graft.ops.IncrementalCurateOps.curated]] over `stateDir` then
-    * serves the corpus view, row-identical to the one-shot batch
-    * curation of every document ever streamed (the
-    * `st_incremental_curation` battery row pins this against c1's
-    * oracle).
-    *
-    * The checkpoint and the state dir SHARE FATE: the state ledger keys
-    * on the checkpoint-assigned batch id, so losing EITHER against the
-    * other corrupts silently — a recreated checkpoint renumbers new
-    * data from 0 (absorbed as "replays"), a wiped state dir makes the
-    * stream land new batches on an empty history (old corpus silently
-    * gone). Three guards make every mismatch loud: (1) a micro-batch id
-    * below the newest landed batch ⇒ checkpoint reset (a legitimate
-    * engine replay re-delivers the LAST batch, never an earlier one);
-    * (2) a non-zero first micro-batch against EMPTY state ⇒ state dir
-    * lost; (3) a replayed batch id whose content fingerprint (count +
-    * id range, recorded under `_input/batch=k` at first ingest)
-    * differs ⇒ renumbered new data colliding with a landed id — the
-    * case pure id arithmetic cannot see. Recovery is always the same:
-    * keep checkpoint and state together, or start both fresh.
-    */
-  def curationIngest(spark: SparkSession, watchDir: String,
-      schema: StructType, checkpoint: String, stateDir: String,
-      idCol: String, textCol: String,
-      cfg: graft.ops.IncrementalCurateOps.CurateConfig =
-        graft.ops.IncrementalCurateOps.CurateConfig(),
-      compactEvery: Int = 0): Unit =
-    stateIngest(spark, watchDir, schema, checkpoint, stateDir,
-      graft.ops.IncrementalCurateOps.CoreTables, idCol, compactEvery,
-      graft.ops.IncrementalCurateOps.compact(_, stateDir)) { (df, batchId) =>
-      graft.ops.IncrementalCurateOps.ingestShard(
-        df.sparkSession, df, idCol, textCol, stateDir, batchId, cfg)
-    }
-
   /** Streaming CURATE → INDEX composition — the full production loop a
     * continuously-ingested training corpus runs: every document shard
     * landing in `watchDir` is, inside ONE guarded micro-batch,
@@ -360,11 +308,11 @@ object Streaming {
     // a fold keep resolving; pass keepHistory = false to reclaim
     // aggressively instead. Retained dirs and manifests do grow the
     // per-listing metadata cost over the stream's life — raising the
-    // floor (retain*History with a higher floor) is the operator's
-    // history-GC cadence. Declared only when NO floor exists yet: a
-    // purge or an operator GC legitimately RAISES the floor, and a
-    // restart re-declaring 0 would trip the monotonic guard and wedge
-    // the stream.
+    // floor ([[graft.ops.StateRoot.retainHistory]] with a higher floor)
+    // is the operator's history-GC cadence. Declared only when NO floor
+    // exists yet: a purge or an operator GC legitimately RAISES the
+    // floor, and a restart re-declaring 0 would trip the monotonic
+    // guard and wedge the stream.
     if (keepHistory) {
       val B = graft.ops.BatchState
       Seq(curateDir, indexDir).foreach { root =>
@@ -401,8 +349,10 @@ object Streaming {
             df.sparkSession, curateDir,
             graft.ops.IncrementalCurateOps.CoreTables, None)
             .size >= compactEvery) {
-          graft.ops.IncrementalCurateOps.compact(df.sparkSession, curateDir)
-          graft.ops.IncrementalIndexOps.compactText(df.sparkSession, indexDir)
+          StateRoot(graft.ops.IncrementalCurateOps.Curation, curateDir)
+            .compact(df.sparkSession)
+          StateRoot(graft.ops.IncrementalIndexOps.Bm25, indexDir)
+            .compact(df.sparkSession)
         }
     }
   }
@@ -478,7 +428,7 @@ object Streaming {
     // the deletion root and put every future search on its slow path
     // (replay-deterministic — nonReps recomputes identically)
     if (!nonReps.isEmpty) {
-      val delRoot = graft.ops.IncrementalIndexOps.deletionRoot(indexDir)
+      val delRoot = graft.ops.BatchState.deletionRoot(indexDir)
       val delId = graft.ops.BatchState.mapExternalBatchId(
         s, delRoot, extKey, graft.ops.IncrementalIndexOps.DelTables)
       if (delId != graft.ops.BatchState.ExternalIdAlreadyLanded)
@@ -489,34 +439,35 @@ object Streaming {
 
   /** Composed TAKEDOWN — the compliance write path of the composed
     * curate → index state ([[curateAndIndexIngest]]'s layout): remove
-    * the documents from the curated view
-    * ([[graft.ops.IncrementalCurateOps.takedown]]) AND retract them
-    * from the searchable index
-    * ([[graft.ops.IncrementalIndexOps.deleteTextDocs]]), each under its
-    * roots' writer leases. Batch ids are chosen above everything landed
-    * OR promised in each deletion root, so the call composes with a
-    * live stream's ledger mirrors. Idempotent: re-running after a crash
-    * between the two halves finishes the retraction (already-tombstoned
-    * ids no-op); until then the transient state is "curated view
-    * excludes, search still returns" — re-run to converge.
+    * the documents from the curated view AND retract them from the
+    * searchable index ([[graft.ops.StateRoot.delete]] on each root),
+    * each under its roots' writer leases. Batch ids are chosen above
+    * everything landed OR promised in each deletion root, so the call
+    * composes with a live stream's ledger mirrors. Idempotent:
+    * re-running after a crash between the two halves finishes the
+    * retraction (already-tombstoned ids no-op); until then the
+    * transient state is "curated view excludes, search still returns"
+    * — re-run to converge.
     */
   def composedTakedown(spark: SparkSession, stateDir: String,
       ids: DataFrame, idCol: String): Unit = {
-    // the auto-id overloads choose each deletion batch id INSIDE the
-    // writer leases — an id chosen out here could be raced to by a
-    // concurrent takedown, whose idempotency check would then silently
-    // absorb this call's ids
-    graft.ops.IncrementalCurateOps.takedown(
-      spark, ids, idCol, s"$stateDir/curate")
-    graft.ops.IncrementalIndexOps.deleteTextDocs(
-      spark, ids, idCol, s"$stateDir/index")
+    // the delete verb chooses each deletion batch id INSIDE the writer
+    // leases — an id chosen out here could be raced to by a concurrent
+    // takedown, whose idempotency check would then silently absorb this
+    // call's ids
+    StateRoot(graft.ops.IncrementalCurateOps.Curation, s"$stateDir/curate")
+      .delete(spark, ids, idCol)
+    StateRoot(graft.ops.IncrementalIndexOps.Bm25, s"$stateDir/index")
+      .delete(spark, ids, idCol)
   }
 
-  /** Streaming DELETION twin — the compliance write path as a
-    * continuous feed: each micro-batch of ids landing in `watchDir` is
-    * applied to the state family's deletion ledger with the same
-    * exactly-once contract as the ingest harnesses, wired through the
-    * deletion root's OWN `_input` ledger:
+  /** Streaming DELETION — the compliance write path as a continuous
+    * feed: each micro-batch of ids (in `idCol`) landing in `watchDir` is
+    * applied through the root family's delete op to its deletion ledger
+    * with the same exactly-once contract as the ingest harnesses, wired
+    * through the deletion root's OWN `_input` ledger (after every
+    * drain, reads equal the batch [[graft.ops.StateRoot.delete]] fed the
+    * same ids):
     *
     *  - the mapping `<stateDir>/_deletes/_input/batch=<ckptId>` records
     *    which tombstone batch id the micro-batch used, so a replay
@@ -529,9 +480,8 @@ object Streaming {
     *  - a PURGE between drains retires the deletion root, ledger
     *    included — legitimate lifecycle, not state loss: the next
     *    micro-batch simply starts a fresh root, and a replay of a
-    *    pre-purge batch is a content no-op (its ids are no longer
-    *    indexed, [[graft.ops.IncrementalIndexOps.deleteTextDocs]]'
-    *    no-op contract);
+    *    pre-purge batch is a content no-op (its ids are no longer held —
+    *    every family delete op's no-op contract);
     *  - crash-mid-delete replays overwrite the same tombstone batch id
     *    (a half-landed batch is invisible to the all-or-nothing
     *    listing, so the id is re-chosen); a crash between the apply
@@ -543,13 +493,15 @@ object Streaming {
     * replay SKIPS and stable ids, never correctness.
     */
   def deletionIngest(spark: SparkSession, watchDir: String,
-      schema: StructType, checkpoint: String, stateDir: String,
-      delTables: Seq[String])(
-      applyDelete: (DataFrame, String, Long) => Unit): Unit =
+      schema: StructType, checkpoint: String, root: StateRoot,
+      idCol: String): Unit =
     runAvailableNow(
       spark.readStream.schema(schema).parquet(watchDir), checkpoint) {
       (df, ckptId) =>
-        deletionMicroBatch(df, ckptId, stateDir, delTables)(applyDelete)
+        deletionMicroBatch(df, ckptId, root.path, root.family.delTables) {
+          (d, dir, eff) =>
+            root.family.delete(d.sparkSession, d, idCol, dir, eff)
+        }
     }
 
   /** One micro-batch of [[deletionIngest]] — extracted so specs can
@@ -598,128 +550,16 @@ object Streaming {
     }
   }
 
-  /** [[deletionIngest]] over the BM25 family
-    * ([[graft.ops.IncrementalIndexOps.deleteTextDocs]]): after every
-    * drain, `bm25Search` equals the batch twin fed the same ids.
-    */
-  def textDeletionIngest(spark: SparkSession, watchDir: String,
-      schema: StructType, checkpoint: String, stateDir: String,
-      idCol: String): Unit =
-    deletionIngest(spark, watchDir, schema, checkpoint, stateDir,
-      graft.ops.IncrementalIndexOps.DelTables) { (df, dir, eff) =>
-      graft.ops.IncrementalIndexOps.deleteTextDocs(
-        df.sparkSession, df, idCol, dir, eff)
-    }
-
-  /** [[deletionIngest]] over the IVF family
-    * ([[graft.ops.IncrementalIndexOps.deleteVectors]]). */
-  def vectorDeletionIngest(spark: SparkSession, watchDir: String,
-      schema: StructType, checkpoint: String, stateDir: String,
-      idCol: String): Unit =
-    deletionIngest(spark, watchDir, schema, checkpoint, stateDir,
-      graft.ops.IncrementalIndexOps.VecDelTables) { (df, dir, eff) =>
-      graft.ops.IncrementalIndexOps.deleteVectors(
-        df.sparkSession, df, idCol, dir, eff)
-    }
-
-  /** [[deletionIngest]] over the image near-dup family
-    * ([[graft.ops.IncrementalDedupOps.deleteImages]]). */
-  def imageDeletionIngest(spark: SparkSession, watchDir: String,
-      schema: StructType, checkpoint: String, stateDir: String,
-      idCol: String): Unit =
-    deletionIngest(spark, watchDir, schema, checkpoint, stateDir,
-      graft.ops.IncrementalDedupOps.DelIdsTables) { (df, dir, eff) =>
-      graft.ops.IncrementalDedupOps.deleteImages(
-        df.sparkSession, df, idCol, dir, eff)
-    }
-
-  /** [[deletionIngest]] over the SemDeDup family
-    * ([[graft.ops.IncrementalDedupOps.deleteEmbeddings]]). */
-  def embeddingDeletionIngest(spark: SparkSession, watchDir: String,
-      schema: StructType, checkpoint: String, stateDir: String,
-      idCol: String): Unit =
-    deletionIngest(spark, watchDir, schema, checkpoint, stateDir,
-      graft.ops.IncrementalDedupOps.DelIdsTables) { (df, dir, eff) =>
-      graft.ops.IncrementalDedupOps.deleteEmbeddings(
-        df.sparkSession, df, idCol, dir, eff)
-    }
-
-  /** [[deletionIngest]] over the curation family
-    * ([[graft.ops.IncrementalCurateOps.takedown]]): a continuous
-    * takedown-request feed; after every drain, `curated` equals the
-    * batch takedown fed the same ids.
-    */
-  def takedownIngest(spark: SparkSession, watchDir: String,
-      schema: StructType, checkpoint: String, stateDir: String,
-      idCol: String): Unit =
-    deletionIngest(spark, watchDir, schema, checkpoint, stateDir,
-      graft.ops.IncrementalCurateOps.TakedownTables) { (df, dir, eff) =>
-      graft.ops.IncrementalCurateOps.takedown(
-        df.sparkSession, df, idCol, dir, eff)
-    }
-
-  /** Streaming inverted-index maintenance: the [[stateIngest]] harness
-    * around [[graft.ops.IncrementalIndexOps.ingestTextShard]] — each
-    * document shard landing in `watchDir` is tokenized once into the
-    * batch-partitioned BM25 state;
-    * [[graft.ops.IncrementalIndexOps.bm25Search]] then serves queries
-    * over the accumulated index, row-identical to a from-scratch
-    * rebuild over every document ever streamed.
-    */
-  def textIndexIngest(spark: SparkSession, watchDir: String,
-      schema: StructType, checkpoint: String, stateDir: String,
-      idCol: String, textCol: String, compactEvery: Int = 0): Unit =
-    stateIngest(spark, watchDir, schema, checkpoint, stateDir,
-      graft.ops.IncrementalIndexOps.Bm25Tables, idCol, compactEvery,
-      graft.ops.IncrementalIndexOps.compactText(_, stateDir)) {
-      (df, batchId) =>
-      graft.ops.IncrementalIndexOps.ingestTextShard(
-        df.sparkSession, df, idCol, textCol, stateDir, batchId)
-    }
-
-  /** Streaming image near-dup state maintenance: [[stateIngest]] around
-    * [[graft.ops.IncrementalDedupOps.ingestImageShard]] — each image
-    * shard is decoded + dHashed once into the banded index;
-    * [[graft.ops.IncrementalDedupOps.imagePairs]] serves the
-    * accumulated pair set.
-    */
-  def imageIngest(spark: SparkSession, watchDir: String,
-      schema: StructType, checkpoint: String, stateDir: String,
-      idCol: String, bytesCol: String, maxDist: Int = 3,
-      compactEvery: Int = 0): Unit =
-    stateIngest(spark, watchDir, schema, checkpoint, stateDir,
-      graft.ops.IncrementalDedupOps.ImageTables, idCol, compactEvery,
-      graft.ops.IncrementalDedupOps.compactImages(_, stateDir)) {
-      (df, batchId) =>
-      graft.ops.IncrementalDedupOps.ingestImageShard(
-        df.sparkSession, df, idCol, bytesCol, stateDir, batchId, maxDist)
-    }
-
-  /** Streaming IVF index maintenance: [[stateIngest]] around
-    * [[graft.ops.IncrementalIndexOps.ingestVectorShard]] — the first
-    * micro-batch fits and freezes the codebook, every batch lands its
-    * own cell postings;
-    * [[graft.ops.IncrementalIndexOps.ivfSearch]] serves queries over
-    * the accumulated index.
-    */
-  def vectorIndexIngest(spark: SparkSession, watchDir: String,
-      schema: StructType, checkpoint: String, stateDir: String,
-      idCol: String, vecCol: String, nCells: Int, iters: Int,
-      compactEvery: Int = 0): Unit =
-    stateIngest(spark, watchDir, schema, checkpoint, stateDir,
-      graft.ops.IncrementalIndexOps.IvfTables, idCol, compactEvery,
-      graft.ops.IncrementalIndexOps.compactVectors(_, stateDir)) {
-      (df, batchId) =>
-      graft.ops.IncrementalIndexOps.ingestVectorShard(
-        df.sparkSession, df, idCol, vecCol, stateDir, batchId,
-        nCells, iters)
-    }
-
   /** The guarded streaming harness every incremental-state ingest runs
     * under: an `AvailableNow` drain of `watchDir` whose `foreachBatch`
-    * first proves the checkpoint and the state directory still belong
-    * together, then hands the micro-batch to `ingest` under an
-    * EFFECTIVE state batch id.
+    * first proves the checkpoint and `root` still belong together, then
+    * hands the micro-batch to `ingest` (the family's ingest op, e.g.
+    * [[graft.ops.IncrementalCurateOps.ingestShard]] or
+    * [[graft.ops.IncrementalIndexOps.ingestTextShard]] on `root.path`)
+    * under an EFFECTIVE state batch id. The ledger and its guards read
+    * the family's additive tables. Each invocation drains everything
+    * currently in `watchDir` and stops — the periodic-ingest pattern;
+    * run it from a scheduler as shards land.
     *
     * The `_input/batch=<checkpointId>` ledger records each micro-batch's
     * content fingerprint (row count + two order-independent folds of
@@ -764,30 +604,28 @@ object Streaming {
     * Recovery is always the same: keep checkpoint and state together,
     * or start both fresh.
     *
-    * `compactEvery` > 0 wires [[graft.ops.BatchState.compactState]] in
-    * as an automatic policy: after any micro-batch that leaves at least
-    * `compactEvery` landed batches, `compact` runs under its own lease
-    * — a long-running stream never needs an operator cron to keep its
-    * state listing constant-time.
+    * `compactEvery` > 0 wires [[graft.ops.StateRoot.compact]] in as an
+    * automatic policy: after any micro-batch that leaves at least
+    * `compactEvery` landed batches, the root compacts under its own
+    * lease — a long-running stream never needs an operator cron to keep
+    * its state listing constant-time.
     */
   def stateIngest(spark: SparkSession, watchDir: String,
-      schema: StructType, checkpoint: String, stateDir: String,
-      coreTables: Seq[String], idCol: String, compactEvery: Int = 0,
-      compact: SparkSession => Unit = _ => (),
-      composed: Boolean = false)(
-      ingest: (DataFrame, Long) => Unit): Unit =
+      schema: StructType, checkpoint: String, root: StateRoot,
+      idCol: String, compactEvery: Int = 0)(
+      ingest: (DataFrame, Long) => Unit): Unit = {
+    val coreTables = root.family.additiveTables
     runAvailableNow(
       spark.readStream.schema(schema).parquet(watchDir), checkpoint) {
       (df, ckptId) =>
-        ingestMicroBatch(df, ckptId, stateDir, coreTables, idCol,
-          composed)(ingest)
+        val s = df.sparkSession
+        ingestMicroBatch(df, ckptId, root.path, coreTables, idCol)(ingest)
         if (compactEvery > 0 && graft.ops.BatchState
-            .landedBatchIds(df.sparkSession,
-              graft.ops.BatchState.resolveGeneration(
-                df.sparkSession, stateDir), coreTables, None)
+            .landedBatchIds(s, root.dir(s), coreTables, None)
             .size >= compactEvery)
-          compact(df.sparkSession)
+          root.compact(s)
     }
+  }
 
   /** One guarded micro-batch of [[stateIngest]] — extracted so specs
     * can drive crash/replay/compaction interleavings directly with

@@ -939,7 +939,7 @@ class PlanQualitySpec extends AnyFunSuite {
       .createTempDirectory("graft_bktplan").toString
     val docs = graft.Tables.documents(spark, dir)
       .where(pmod(col("doc_id"), lit(97)) =!= 0)
-    I.bucketTextState(spark, state, nBuckets = 16)
+    graft.ops.StateRoot(I.Bm25, state).bucket(spark, nBuckets = 16)
     I.ingestTextShard(spark, docs, "doc_id", "text", state, 0L)
     import spark.implicits._
     val dels = docs.limit(2).select(col("doc_id").as("id"))

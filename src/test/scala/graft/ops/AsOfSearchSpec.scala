@@ -10,7 +10,7 @@ import graft.etl.SparkTestSession
 /** AS-OF reads + the DESCRIBE surface: the index at a historical batch
   * cut is row-identical to a search taken at that moment, the honest
   * bounds (folded history, live tombstones) refuse loudly, and
-  * describeState reports the operational facts an operator keys
+  * [[StateRoot.describe]] reports the operational facts an operator keys
   * compact/purge/expire/cutover decisions on.
   */
 class AsOfSearchSpec extends AnyFunSuite {
@@ -63,7 +63,7 @@ class AsOfSearchSpec extends AnyFunSuite {
       "text", 10, asOfBatch = Some(2L))) ==
       sortedRows(I.bm25Search(spark, state, queries, "qid", "text", 10)))
     // compaction folds the history: the old cuts now refuse loudly
-    I.compactText(spark, state)
+    StateRoot(I.Bm25, state).compact(spark)
     val e = intercept[IllegalArgumentException] {
       I.bm25Search(spark, state, queries, "qid", "text", 10,
         asOfBatch = Some(1L))
@@ -82,13 +82,13 @@ class AsOfSearchSpec extends AnyFunSuite {
       "doc_id", "text", state, 1L)
     import spark.implicits._
     val victim = corpus.agg(min(col("doc_id"))).head.getLong(0)
-    I.deleteTextDocs(spark, Seq(victim).toDF("doc_id"), "doc_id", state)
+    StateRoot(I.Bm25, state).delete(spark, Seq(victim).toDF("doc_id"), "doc_id")
     val e = intercept[IllegalArgumentException] {
       I.bm25Search(spark, state, queries, "qid", "text", 10,
         asOfBatch = Some(0L))
     }
     assert(e.getMessage.contains("purge first"))
-    I.purgeText(spark, state)
+    StateRoot(I.Bm25, state).purge(spark)
     // post-purge the whole history is one merged batch; the newest cut
     // serves (and equals the plain search)
     val merged = BatchState.landedBatchIds(
@@ -137,7 +137,8 @@ class AsOfSearchSpec extends AnyFunSuite {
     // historical view
     import spark.implicits._
     val victim = emb.where(col("vec_id") <= mid).limit(1).head.getLong(0)
-    D.deleteEmbeddings(spark, Seq(victim).toDF("vec_id"), "vec_id", state)
+    StateRoot(D.Embeddings, state)
+      .delete(spark, Seq(victim).toDF("vec_id"), "vec_id")
     val cut = sortedRows(D.semanticDedupView(spark, state, "vec_id",
       asOfBatch = Some(0L)))
     assert(!cut.exists(_.startsWith(s"$victim|")))
@@ -155,16 +156,17 @@ class AsOfSearchSpec extends AnyFunSuite {
       "doc_id", "text", state, 1L)
     import spark.implicits._
     val victim = corpus.agg(min(col("doc_id"))).head.getLong(0)
-    I.deleteTextDocs(spark, Seq(victim).toDF("doc_id"), "doc_id", state)
+    StateRoot(I.Bm25, state).delete(spark, Seq(victim).toDF("doc_id"), "doc_id")
     def info(dir: String): Map[String, String] =
-      I.describeTextState(spark, dir).collect()
+      StateRoot(I.Bm25, dir).describe(spark).collect()
         .map(r => r.getString(0) -> r.getString(1)).toMap
     val m = info(state)
     assert(m("landed_batches") == "2" && m("newest_batch") == "1")
     assert(m("deletion_root") == "true" && m("deletion_batches") == "1")
     assert(m("purge_committed") == "false")
     assert(m("retention_floor") == "")
-    I.expireTextBatches _ // (compile-time presence; TTL spec covers it)
+    // (compile-time presence; TTL spec covers it)
+    StateRoot(I.Bm25, state).expire _
     // a cutover re-points the description at the new generation
     val gen2 = fresh()
     I.ingestTextShard(spark, corpus, "doc_id", "text", gen2, 0L)
@@ -219,7 +221,7 @@ class AsOfSearchSpec extends AnyFunSuite {
     val I = IncrementalIndexOps
     val (cut1, cut2) = thirds(corpus)
     val state = fresh()
-    I.retainTextHistory(spark, state)
+    StateRoot(I.Bm25, state).retainHistory(spark)
     I.ingestTextShard(spark, corpus.where(col("doc_id") <= cut1),
       "doc_id", "text", state, 0L)
     val at0 = sortedRows(I.bm25Search(spark, state, queries,
@@ -230,13 +232,13 @@ class AsOfSearchSpec extends AnyFunSuite {
     val at1 = sortedRows(I.bm25Search(spark, state, queries,
       "qid", "text", 10))
     // first fold: batches {0,1} -> merged 2
-    I.compactText(spark, state)
+    StateRoot(I.Bm25, state).compact(spark)
     I.ingestTextShard(spark, corpus.where(col("doc_id") > cut2),
       "doc_id", "text", state, 3L)
     val at3 = sortedRows(I.bm25Search(spark, state, queries,
       "qid", "text", 10))
     // second fold: {2,3} -> merged 4 — TWO manifest versions retained
-    I.compactText(spark, state)
+    StateRoot(I.Bm25, state).compact(spark)
     assert(sortedRows(I.bm25Search(spark, state, queries, "qid",
       "text", 10)) == at3, "the live view is untouched by retention")
     // a cut below BOTH folds: resolves through the raw retained dirs
@@ -250,8 +252,8 @@ class AsOfSearchSpec extends AnyFunSuite {
       "text", 10, asOfBatch = Some(3L))) == at3,
       "cut between folds must resolve through the pre-fold manifest")
     // history GC: raise the floor past everything but the live fold
-    I.retainTextHistory(spark, state, floor = 5L)
-    I.compactText(spark, state)
+    StateRoot(I.Bm25, state).retainHistory(spark, floor = 5L)
+    StateRoot(I.Bm25, state).compact(spark)
     val e = intercept[IllegalArgumentException] {
       I.bm25Search(spark, state, queries, "qid", "text", 10,
         asOfBatch = Some(3L))
@@ -268,15 +270,15 @@ class AsOfSearchSpec extends AnyFunSuite {
     val I = IncrementalIndexOps
     val (cut1, _) = thirds(corpus)
     val state = fresh()
-    I.retainTextHistory(spark, state)
+    StateRoot(I.Bm25, state).retainHistory(spark)
     I.ingestTextShard(spark, corpus.where(col("doc_id") <= cut1),
       "doc_id", "text", state, 0L)
     I.ingestTextShard(spark, corpus.where(col("doc_id") > cut1),
       "doc_id", "text", state, 1L)
     import spark.implicits._
     val victim = corpus.agg(min(col("doc_id"))).head.getLong(0)
-    I.deleteTextDocs(spark, Seq(victim).toDF("doc_id"), "doc_id", state)
-    I.purgeText(spark, state)
+    StateRoot(I.Bm25, state).delete(spark, Seq(victim).toDF("doc_id"), "doc_id")
+    StateRoot(I.Bm25, state).purge(spark)
     val fs = new org.apache.hadoop.fs.Path("/").getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
@@ -298,7 +300,7 @@ class AsOfSearchSpec extends AnyFunSuite {
     val half = emb.agg(percentile_approx(col("vec_id"), lit(0.5),
       lit(100))).head.getLong(0)
     val state = fresh()
-    D.retainEmbeddingHistory(spark, state)
+    StateRoot(D.Embeddings, state).retainHistory(spark)
     D.ingestEmbeddingShard(spark, emb.where(col("vec_id") <= half),
       "vec_id", "embedding", state, 0L, k = 4, iters = 2,
       threshold = 0.95)
@@ -307,7 +309,7 @@ class AsOfSearchSpec extends AnyFunSuite {
       "vec_id", "embedding", state, 1L, k = 4, iters = 2,
       threshold = 0.95)
     val at1 = sortedRows(D.semanticDedupView(spark, state, "vec_id"))
-    D.compactEmbeddings(spark, state)
+    StateRoot(D.Embeddings, state).compact(spark)
     assert(sortedRows(D.semanticDedupView(spark, state, "vec_id",
       asOfBatch = Some(0L))) == at0,
       "the pre-fold cut must serve from retained directories")

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.etl.SparkTestSession
 
 /** Physical tombstone reclamation
-  * ([[IncrementalIndexOps.purgeText]]): one transformed compaction
+  * ([[StateRoot.purge]] on a BM25 root): one transformed compaction
   * anti-joins the tombstoned docs out of postings/doclen, recomputes
   * the statistics from the survivors, and retires the deletion root —
   * search results identical before/after, bytes actually gone, and
@@ -67,7 +67,7 @@ class Bm25PurgeSpec extends AnyFunSuite {
       "survivors; later deletions start a clean ledger") {
     val (state, d, surviving) = deletedState()
     val before = search(state)
-    I.purgeText(spark, state)
+    StateRoot(I.Bm25, state).purge(spark)
     assert(search(state) == before)
     // bytes actually gone: no tombstoned id anywhere in postings/doclen
     val landed = BatchState.landedBatchIds(spark, state,
@@ -115,7 +115,7 @@ class Bm25PurgeSpec extends AnyFunSuite {
     // a PLAIN compaction now increments the version to exactly v+1 —
     // without healing, the stale marker would 'commit' and resurrect
     // the deleted docs
-    I.compactText(spark, state)
+    StateRoot(I.Bm25, state).compact(spark)
     assert(!fs.exists(new Path(s"$state/_deletes/.purged_at")),
       "compactText must discard the stale marker before flipping")
     assert(search(state) == before,
@@ -126,7 +126,7 @@ class Bm25PurgeSpec extends AnyFunSuite {
       "ignore the surviving tombstones (no double-subtraction); the " +
       "next deletion heals and lands cleanly") {
     val (state, _, surviving) = deletedState()
-    I.purgeText(spark, state)
+    StateRoot(I.Bm25, state).purge(spark)
     val purged = search(state)
     // resurrect the window: tombstone tables + a marker naming the
     // already-reached version (exactly what a crash between the flip

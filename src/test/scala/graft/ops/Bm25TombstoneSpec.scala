@@ -114,7 +114,7 @@ class Bm25TombstoneSpec extends AnyFunSuite {
       s2.where(pmod(col("doc_id"), lit(29)) === 0).select("doc_id"),
       "doc_id", state, 1L)
     val before = search(state)
-    I.compactText(spark, state)
+    StateRoot(I.Bm25, state).compact(spark)
     assert(search(state) == before)
     val fs = new Path(state).getFileSystem(
       spark.sparkContext.hadoopConfiguration)

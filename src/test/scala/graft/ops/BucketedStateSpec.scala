@@ -43,7 +43,7 @@ class BucketedStateSpec extends AnyFunSuite {
       "partitions on disk) and survives compaction") {
     val I = IncrementalIndexOps
     val (bkt, flat) = (fresh(), fresh())
-    I.bucketTextState(spark, bkt, nBuckets = 8)
+    StateRoot(I.Bm25, bkt).bucket(spark, nBuckets = 8)
     val r = corpus.agg(min(col("doc_id")), max(col("doc_id"))).head
     val mid = (r.getLong(0) + r.getLong(1)) / 2
     val victims = corpus.where(col("doc_id") <= mid &&
@@ -61,8 +61,8 @@ class BucketedStateSpec extends AnyFunSuite {
       sortedRows(I.bm25Search(spark, dir, queries, "qid", "text", 10))
     assert(search(bkt) == search(flat),
       "bucketing must be invisible to search results")
-    I.compactText(spark, bkt)
-    I.compactText(spark, flat)
+    StateRoot(I.Bm25, bkt).compact(spark)
+    StateRoot(I.Bm25, flat).compact(spark)
     assert(search(bkt) == search(flat),
       "compaction must preserve results on the bucketed root")
     val merged = BatchState.landedBatchIds(
@@ -73,8 +73,8 @@ class BucketedStateSpec extends AnyFunSuite {
     // a later deletion against the compacted bucketed root still works
     val extra = corpus.where(col("doc_id") > mid &&
       pmod(col("doc_id"), lit(17)) === 0).select("doc_id")
-    I.deleteTextDocs(spark, extra, "doc_id", bkt)
-    I.deleteTextDocs(spark, extra, "doc_id", flat)
+    StateRoot(I.Bm25, bkt).delete(spark, extra, "doc_id")
+    StateRoot(I.Bm25, flat).delete(spark, extra, "doc_id")
     assert(search(bkt) == search(flat))
   }
 
@@ -90,8 +90,8 @@ class BucketedStateSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("before the first landed batch"))
     val state2 = fresh()
-    I.bucketTextState(spark, state2, 8)
-    I.bucketTextState(spark, state2, 8) // idempotent
+    StateRoot(I.Bm25, state2).bucket(spark, 8)
+    StateRoot(I.Bm25, state2).bucket(spark, 8) // idempotent
     val e2 = intercept[IllegalArgumentException] {
       BatchState.setBucketing(spark, state2, "postings", "id", 16)
     }
@@ -104,13 +104,13 @@ class BucketedStateSpec extends AnyFunSuite {
     val D = IncrementalDedupOps
     val emb = graft.Tables.embeddings(spark, srcDir)
     val (bkt, flat) = (fresh(), fresh())
-    I.bucketVectorState(spark, bkt, 8)
+    StateRoot(I.Ivf, bkt).bucket(spark, 8)
     import spark.implicits._
     val victims = emb.limit(5).select(col("vec_id"))
     for (state <- Seq(bkt, flat)) {
       I.ingestVectorShard(spark, emb, "vec_id", "embedding", state, 0L,
         nCells = 4, iters = 2)
-      I.deleteVectors(spark, victims, "vec_id", state)
+      StateRoot(I.Ivf, state).delete(spark, victims, "vec_id")
     }
     val qs = emb.limit(6).select(col("vec_id").as("qid"),
       SimilarityOps.asDouble(col("embedding")).as("qv"))

@@ -77,7 +77,7 @@ class DedupTombstoneSpec extends AnyFunSuite {
       "pairwise deletion must be exactly the survivor one-shot")
     // purge: bytes gone, view unchanged, deletion root retired
     val before = sortedRows(I.imagePairs(spark, state))
-    I.purgeImages(spark, state)
+    StateRoot(I.Images, state).purge(spark)
     assert(sortedRows(I.imagePairs(spark, state)) == before)
     val landed = BatchState.landedBatchIds(spark, state,
       Seq("bands", "edges"), None)
@@ -128,7 +128,7 @@ class DedupTombstoneSpec extends AnyFunSuite {
         "survivors keep their groups, re-keyed to the min survivor")
       // purge: self-contained snapshot — the plain view path (no
       // tombstones) must reproduce the takedown view exactly
-      I.purgeEmbeddings(spark, state)
+      StateRoot(I.Embeddings, state).purge(spark)
       assert(!fs.exists(new Path(s"$state/_deletes/.purged_at")))
       assert(sortedRows(I.semanticDedupView(spark, state, "vec_id")) ==
         sortedRows(expected))

@@ -58,7 +58,7 @@ class GenerationCutoverSpec extends AnyFunSuite {
     I.reindexVectors(spark, root, gen2, nCells = 4, iters = 2)
     val victim = oldResults.head.split("\\|")(1).toLong
     import spark.implicits._
-    I.deleteVectors(spark, Seq(victim).toDF("vec_id"), "vec_id", gen2)
+    StateRoot(I.Ivf, gen2).delete(spark, Seq(victim).toDF("vec_id"), "vec_id")
     // pre-flip: the root still serves the OLD generation, victim and all
     assert(search(root) == oldResults,
       "the root must keep serving the old generation until the flip")
@@ -140,7 +140,7 @@ class GenerationCutoverSpec extends AnyFunSuite {
     // searchable
     val victim = search(gen2).head.split("\\|")(2).toLong
     import spark.implicits._
-    I.deleteTextDocs(spark, Seq(victim).toDF("doc_id"), "doc_id", root)
+    StateRoot(I.Bm25, root).delete(spark, Seq(victim).toDF("doc_id"), "doc_id")
     assert(!search(root).exists(_.split("\\|")(2).toLong == victim))
     assert(!BatchState.hasDeletionRoot(spark, root),
       "the deletion must not touch the retired generation's directory")
@@ -181,8 +181,13 @@ class GenerationCutoverSpec extends AnyFunSuite {
       val part = fs.globStatus(new Path(s"$tmp/part-*"))(0).getPath
       assert(fs.rename(part, new Path(s"$watch/$name.parquet")))
     }
-    def drain(): Unit = graft.streaming.Streaming.textIndexIngest(
-      spark, watch, corpus.schema, ckpt, root, "doc_id", "text")
+    def drain(): Unit = graft.streaming.Streaming.stateIngest(
+      spark, watch, corpus.schema, ckpt,
+      StateRoot(IncrementalIndexOps.Bm25, root),
+      "doc_id") { (df, k) =>
+      IncrementalIndexOps.ingestTextShard(df.sparkSession, df, "doc_id",
+        "text", root, k)
+    }
     landShard(sB, "s1")
     drain()
     landShard(sC, "s2")
@@ -208,7 +213,8 @@ class GenerationCutoverSpec extends AnyFunSuite {
     import spark.implicits._
     // delete one vector from the NEW generation only
     val victim = emb.limit(1).head.getLong(0)
-    D.deleteEmbeddings(spark, Seq(victim).toDF("vec_id"), "vec_id", gen2)
+    StateRoot(D.Embeddings, gen2)
+      .delete(spark, Seq(victim).toDF("vec_id"), "vec_id")
     def view(dir: String) =
       sortedRows(D.semanticDedupView(spark, dir, "vec_id"))
     assert(view(root).exists(_.startsWith(s"$victim|")),

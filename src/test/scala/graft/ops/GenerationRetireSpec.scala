@@ -57,7 +57,7 @@ class GenerationRetireSpec extends AnyFunSuite {
     val before = sortedRows(I.ivfSearch(spark, root, queries, 4, 5))
     assert(fs.exists(new Path(s"$root/cells")),
       "precondition: the superseded inline generation is on disk")
-    I.retireVectorGenerations(spark, root)
+    StateRoot(I.Ivf, root).retireGenerations(spark)
     assert(!fs.exists(new Path(s"$root/cells")) &&
       !fs.exists(new Path(s"$root/centroids")) &&
       !fs.exists(new Path(s"$root/_params")),
@@ -67,7 +67,7 @@ class GenerationRetireSpec extends AnyFunSuite {
     assert(sortedRows(I.ivfSearch(spark, root, queries, 4, 5)) == before,
       "retirement must not change what the root serves")
     // idempotent re-run
-    I.retireVectorGenerations(spark, root)
+    StateRoot(I.Ivf, root).retireGenerations(spark)
     assert(sortedRows(I.ivfSearch(spark, root, queries, 4, 5)) == before)
   }
 
@@ -87,7 +87,7 @@ class GenerationRetireSpec extends AnyFunSuite {
     BatchState.cutoverGeneration(spark, root, gen3)
     val before =
       sortedRows(I.bm25Search(spark, root, queries, "qid", "text", 10))
-    I.retireTextGenerations(spark, root)
+    StateRoot(I.Bm25, root).retireGenerations(spark)
     assert(!fs.exists(new Path(gen2)), "gen2 is superseded — reclaimed")
     assert(fs.exists(new Path(gen3)))
     assert(!fs.exists(new Path(s"$root/_current/v1")),
@@ -118,7 +118,7 @@ class GenerationRetireSpec extends AnyFunSuite {
       "a dangling old pointer must not affect resolution")
     assert(I.bm25Search(spark, root, queries, "qid", "text", 10)
       .count() > 0)
-    I.retireTextGenerations(spark, root)
+    StateRoot(I.Bm25, root).retireGenerations(spark)
     assert(!fs.exists(new Path(s"$root/_current/v1")),
       "the re-run must sweep the dangling pointer file")
     assert(fs.exists(new Path(gen3)))
@@ -131,13 +131,13 @@ class GenerationRetireSpec extends AnyFunSuite {
     val root = fresh()
     I.ingestTextShard(spark, docs, "doc_id", "text", root, 0L)
     val before = children(root)
-    I.retireTextGenerations(spark, root)
+    StateRoot(I.Bm25, root).retireGenerations(spark)
     assert(children(root) == before,
       "no pointer, nothing superseded — the root must be untouched")
     // a TORN pointer alone (crashed first flip) must also retire nothing
     fs.mkdirs(new Path(s"$root/_current"))
     fs.create(new Path(s"$root/_current/v1"), false).close()
-    I.retireTextGenerations(spark, root)
+    StateRoot(I.Bm25, root).retireGenerations(spark)
     assert(fs.exists(new Path(s"$root/postings")),
       "a torn-only pointer names no committed generation; the inline " +
         "state still serves and must survive")

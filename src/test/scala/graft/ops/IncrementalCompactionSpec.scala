@@ -51,7 +51,7 @@ class IncrementalCompactionSpec extends AnyFunSuite {
       docs.where(col("doc_id") > cut1 && col("doc_id") <= cut2),
       "doc_id", "text", state, 1L)
     val before = sortedRows(IncrementalCurateOps.curated(spark, state))
-    IncrementalCurateOps.compact(spark, state)
+    StateRoot(IncrementalCurateOps.Curation, state).compact(spark)
     assert(sortedRows(IncrementalCurateOps.curated(spark, state)) == before)
     assert(batchDirs(state, "docs") == Seq("batch=2"),
       s"old batch dirs must be swept: ${batchDirs(state, "docs")}")
@@ -92,9 +92,10 @@ class IncrementalCompactionSpec extends AnyFunSuite {
       "doc_id", "text", state, 1L)
     def search() = I.bm25Search(spark, state, queries, "qid", "text", 10)
     val before = sortedRows(search())
-    I.compactText(spark, state)
+    StateRoot(I.Bm25, state).compact(spark)
     assert(sortedRows(search()) == before)
-    I.compactText(spark, state) // single batch left: no-op + gc only
+    // single batch left: no-op + gc only
+    StateRoot(I.Bm25, state).compact(spark)
     assert(sortedRows(search()) == before)
     I.ingestTextShard(spark, corpus.where(col("doc_id") > cut2),
       "doc_id", "text", state, 5L)
@@ -121,8 +122,13 @@ class IncrementalCompactionSpec extends AnyFunSuite {
       val part = fs.globStatus(new Path(s"$tmp/part-*"))(0).getPath
       assert(fs.rename(part, new Path(s"$watch/$name.parquet")))
     }
-    def drain(): Unit = graft.streaming.Streaming.textIndexIngest(
-      spark, watch, corpus.schema, ckpt, state, "doc_id", "text")
+    def drain(): Unit = graft.streaming.Streaming.stateIngest(
+      spark, watch, corpus.schema, ckpt,
+      StateRoot(IncrementalIndexOps.Bm25, state),
+      "doc_id") { (df, k) =>
+      IncrementalIndexOps.ingestTextShard(df.sparkSession, df, "doc_id",
+        "text", state, k)
+    }
     val r = corpus.agg(min(col("doc_id")), max(col("doc_id"))).head
     val (lo, hi) = (r.getLong(0), r.getLong(1))
     val cut1 = lo + (hi - lo) / 3
@@ -132,7 +138,8 @@ class IncrementalCompactionSpec extends AnyFunSuite {
     landShard(corpus.where(col("doc_id") > cut1 && col("doc_id") <= cut2),
       "s2")
     drain() // checkpoint batch 1 -> state batch 1
-    I.compactText(spark, state) // state batches 0,1 -> compacted batch 2
+    // state batches 0,1 -> compacted batch 2
+    StateRoot(I.Bm25, state).compact(spark)
     // the checkpoint will number the NEXT micro-batch 2 — exactly the
     // compacted batch's id; the input ledger must remap it, not absorb it
     landShard(corpus.where(col("doc_id") > cut2), "s3")
@@ -162,9 +169,13 @@ class IncrementalCompactionSpec extends AnyFunSuite {
       val part = fs.globStatus(new Path(s"$tmp/part-*"))(0).getPath
       assert(fs.rename(part, new Path(s"$watch/$name.parquet")))
     }
-    def drain(): Unit = graft.streaming.Streaming.textIndexIngest(
-      spark, watch, corpus.schema, ckpt, state, "doc_id", "text",
-      compactEvery = 2)
+    def drain(): Unit = graft.streaming.Streaming.stateIngest(
+      spark, watch, corpus.schema, ckpt,
+      StateRoot(IncrementalIndexOps.Bm25, state),
+      "doc_id", compactEvery = 2) { (df, k) =>
+      IncrementalIndexOps.ingestTextShard(df.sparkSession, df, "doc_id",
+        "text", state, k)
+    }
     val r = corpus.agg(min(col("doc_id")), max(col("doc_id"))).head
     val (lo, hi) = (r.getLong(0), r.getLong(1))
     val q1 = lo + (hi - lo) / 4
@@ -211,7 +222,7 @@ class IncrementalCompactionSpec extends AnyFunSuite {
       "doc_id", "text", state, 1L)
     def search() = I.bm25Search(spark, state, queries, "qid", "text", 10)
     val before = sortedRows(search())
-    I.compactText(spark, state)
+    StateRoot(I.Bm25, state).compact(spark)
     // simulate the window: resurrect one OLD batch dir (as if gc never
     // ran) and strip the compacted batch's markers (as if restore never
     // ran) — the manifest alone must still produce the compacted view

@@ -92,7 +92,7 @@ class IncrementalCurateSpec extends AnyFunSuite {
     val fs = new Path(state).getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.delete(new Path(s"$state/edges/batch=1/_SUCCESS"), false))
     assert(fs.delete(new Path(s"$state/stats/batch=1"), true))
-    assert(!IncrementalCurateOps.batchLanded(spark, state, 1L))
+    assert(!StateRoot(IncrementalCurateOps.Curation, state).landed(spark, 1L))
     // curated() must ignore the half-landed batch entirely
     val partial = IncrementalCurateOps.curated(spark, state)
     val batch0Only = {
@@ -104,7 +104,7 @@ class IncrementalCurateSpec extends AnyFunSuite {
       "uncommitted batches must be invisible")
     // restart the shard: recompute + overwrite, then full parity again
     IncrementalCurateOps.ingestShard(spark, b, "doc_id", "text", state, 1L)
-    assert(IncrementalCurateOps.batchLanded(spark, state, 1L))
+    assert(StateRoot(IncrementalCurateOps.Curation, state).landed(spark, 1L))
     val incr = IncrementalCurateOps.curated(spark, state)
     val oneShot = CorpusOps.curate(docs, "doc_id", "text")
     assert(sortedRows(incr.select(oneShot.columns.map(col): _*)) ==
@@ -226,15 +226,19 @@ class IncrementalCurateSpec extends AnyFunSuite {
       val part = fs.globStatus(new Path(s"$tmp/part-*"))(0).getPath
       assert(fs.rename(part, new Path(s"$watch/$name.parquet")))
     }
-    def drain(): Unit = graft.streaming.Streaming.curationIngest(
-      spark, watch, docs.schema, ckpt, state, "doc_id", "text")
+    def drain(): Unit = graft.streaming.Streaming.stateIngest(
+      spark, watch, docs.schema, ckpt,
+      StateRoot(IncrementalCurateOps.Curation, state), "doc_id") {
+      (df, k) => IncrementalCurateOps.ingestShard(df.sparkSession, df,
+        "doc_id", "text", state, k)
+    }
     val (a, b) = splitAt(midId)
     landShard(a, "s1")
     drain()
     landShard(b, "s2")
     drain()
-    assert(IncrementalCurateOps.batchLanded(spark, state, 0L))
-    assert(IncrementalCurateOps.batchLanded(spark, state, 1L))
+    assert(StateRoot(IncrementalCurateOps.Curation, state).landed(spark, 0L))
+    assert(StateRoot(IncrementalCurateOps.Curation, state).landed(spark, 1L))
     val streamed = sortedRows(IncrementalCurateOps.curated(spark, state))
     val oneShot = sortedRows(CorpusOps.curate(docs, "doc_id", "text"))
     assert(streamed == oneShot)

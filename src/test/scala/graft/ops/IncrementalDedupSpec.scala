@@ -81,9 +81,9 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val fs = new Path(state).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     assert(fs.delete(new Path(s"$state/edges/batch=1/_SUCCESS"), false))
-    assert(!IncrementalDedupOps.imageBatchLanded(spark, state, 1L))
+    assert(!StateRoot(IncrementalDedupOps.Images, state).landed(spark, 1L))
     IncrementalDedupOps.ingestImageShard(spark, b, "doc_id", "img", state, 1L)
-    assert(IncrementalDedupOps.imageBatchLanded(spark, state, 1L))
+    assert(StateRoot(IncrementalDedupOps.Images, state).landed(spark, 1L))
     assert(sortedRows(IncrementalDedupOps.imagePairs(spark, state)) == before)
   }
 
@@ -118,8 +118,12 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val (iwatch, ickpt, istate) = (s"$base/iin", s"$base/ickpt", s"$base/ist")
     val m = media
     val mid = midOf(m, "doc_id")
-    def idrain(): Unit = graft.streaming.Streaming.imageIngest(
-      spark, iwatch, m.schema, ickpt, istate, "doc_id", "img")
+    def idrain(): Unit = graft.streaming.Streaming.stateIngest(
+      spark, iwatch, m.schema, ickpt,
+      StateRoot(IncrementalDedupOps.Images, istate), "doc_id") {
+      (df, k) => IncrementalDedupOps.ingestImageShard(df.sparkSession, df,
+        "doc_id", "img", istate, k)
+    }
     landShard(m.where(col("doc_id") <= mid), iwatch, "s1")
     idrain()
     landShard(m.where(col("doc_id") > mid), iwatch, "s2")
@@ -130,9 +134,12 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val (vwatch, vckpt, vstate) = (s"$base/vin", s"$base/vckpt", s"$base/vst")
     val emid = midOf(emb, "vec_id")
     val fit = emb.where(col("vec_id") <= emid)
-    def vdrain(): Unit = graft.streaming.Streaming.vectorIndexIngest(
-      spark, vwatch, emb.schema, vckpt, vstate, "vec_id", "embedding",
-      nCells = 4, iters = 2)
+    def vdrain(): Unit = graft.streaming.Streaming.stateIngest(
+      spark, vwatch, emb.schema, vckpt,
+      StateRoot(IncrementalIndexOps.Ivf, vstate), "vec_id") {
+      (df, k) => IncrementalIndexOps.ingestVectorShard(df.sparkSession,
+        df, "vec_id", "embedding", vstate, k, nCells = 4, iters = 2)
+    }
     landShard(fit, vwatch, "s1")
     vdrain()
     landShard(emb.where(col("vec_id") > emid), vwatch, "s2")
@@ -269,7 +276,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
       spark.sparkContext.hadoopConfiguration)
     assert(fs.delete(new Path(s"$state/assign/batch=0"), true))
     assert(fs.delete(new Path(s"$state/edges/batch=0/_SUCCESS"), false))
-    assert(!IncrementalDedupOps.embeddingBatchLanded(spark, state, 0L))
+    assert(!StateRoot(IncrementalDedupOps.Embeddings, state).landed(spark, 0L))
     IncrementalDedupOps.ingestEmbeddingShard(spark, fit,
       "vec_id", "embedding", state, 0L, k, iters, thr)
     IncrementalDedupOps.ingestEmbeddingShard(spark,

@@ -92,7 +92,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
     val fs = new Path(state).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     assert(fs.delete(new Path(s"$state/tokstats/batch=1/_SUCCESS"), false))
-    assert(!IncrementalIndexOps.textBatchLanded(spark, state, 1L))
+    assert(!StateRoot(IncrementalIndexOps.Bm25, state).landed(spark, 1L))
     IncrementalIndexOps.ingestTextShard(spark, b, "doc_id", "text", state, 1L)
     assert(sortedRows(IncrementalIndexOps.bm25Search(spark, state,
       queries, "qid", "text", k = 10)) == before)
@@ -113,8 +113,13 @@ class IncrementalIndexSpec extends AnyFunSuite {
       val part = fs.globStatus(new Path(s"$tmp/part-*"))(0).getPath
       assert(fs.rename(part, new Path(s"$watch/$name.parquet")))
     }
-    def drain(): Unit = graft.streaming.Streaming.textIndexIngest(
-      spark, watch, corpus.schema, ckpt, state, "doc_id", "text")
+    def drain(): Unit = graft.streaming.Streaming.stateIngest(
+      spark, watch, corpus.schema, ckpt,
+      StateRoot(IncrementalIndexOps.Bm25, state),
+      "doc_id") { (df, k) =>
+      IncrementalIndexOps.ingestTextShard(df.sparkSession, df, "doc_id",
+        "text", state, k)
+    }
     def search() = IncrementalIndexOps.bm25Search(spark, state, queries,
       "qid", "text", k = 10)
     val mid = midDoc
@@ -152,8 +157,13 @@ class IncrementalIndexSpec extends AnyFunSuite {
       val part = fs.globStatus(new Path(s"$tmp/part-*"))(0).getPath
       assert(fs.rename(part, new Path(s"$watch2/$name.parquet")))
     }
-    def drain2(): Unit = graft.streaming.Streaming.textIndexIngest(
-      spark, watch2, corpus.schema, ckpt2, state2, "doc_id", "text")
+    def drain2(): Unit = graft.streaming.Streaming.stateIngest(
+      spark, watch2, corpus.schema, ckpt2,
+      StateRoot(IncrementalIndexOps.Bm25, state2),
+      "doc_id") { (df, k) =>
+      IncrementalIndexOps.ingestTextShard(df.sparkSession, df, "doc_id",
+        "text", state2, k)
+    }
     landShard2(corpus.where(col("doc_id") <= mid), "s1")
     drain2()
     assert(fs.delete(new Path(ckpt2), true))
@@ -219,7 +229,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
     val fs = new Path(state).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     assert(fs.delete(new Path(s"$state/cells/batch=2/_SUCCESS"), false))
-    assert(!IncrementalIndexOps.vectorBatchLanded(spark, state, 2L))
+    assert(!StateRoot(IncrementalIndexOps.Ivf, state).landed(spark, 2L))
     IncrementalIndexOps.ingestVectorShard(spark,
       emb.where(col("vec_id") > mid),
       "vec_id", "embedding", state, 2L, nCells, iters)

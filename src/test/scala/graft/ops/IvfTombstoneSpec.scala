@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.etl.SparkTestSession
 
 /** Tombstones for the IVF index ([[IncrementalIndexOps.deleteVectors]] /
-  * [[IncrementalIndexOps.purgeVectors]]): search after deletions equals
+  * [[StateRoot.purge]]): search after deletions equals
   * a from-scratch index over the survivors UNDER THE SAME frozen
   * codebook (deletion never refits — the cells of surviving vectors are
   * untouched); purge physically removes the cells and retires the
@@ -74,7 +74,7 @@ class IvfTombstoneSpec extends AnyFunSuite {
       d.unionAll(Seq(-5L).toDF("vec_id")), "vec_id", state, 1L)
     assert(search(state) == after)
     // purge: cells physically gone, root retired, search unchanged
-    I.purgeVectors(spark, state)
+    StateRoot(I.Ivf, state).purge(spark)
     assert(search(state) == after)
     val landed = BatchState.landedBatchIds(spark, state, Seq("cells"), None)
     val cells = spark.read.parquet(

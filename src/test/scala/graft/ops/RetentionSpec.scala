@@ -55,7 +55,7 @@ class RetentionSpec extends AnyFunSuite {
     I.ingestTextShard(spark, sA, "doc_id", "text", state, 0L)
     I.ingestTextShard(spark, sB, "doc_id", "text", state, 1L)
     I.ingestTextShard(spark, sC, "doc_id", "text", state, 2L)
-    I.expireTextBatches(spark, state, minActiveBatchId = 1L)
+    StateRoot(I.Bm25, state).expire(spark, minActiveBatchId = 1L)
     val twin = fresh()
     I.ingestTextShard(spark, sB, "doc_id", "text", twin, 0L)
     I.ingestTextShard(spark, sC, "doc_id", "text", twin, 1L)
@@ -65,13 +65,13 @@ class RetentionSpec extends AnyFunSuite {
     assert(search(state) == expected,
       "the TTL'd view must equal the surviving-shards-only index")
     // compaction merges the survivors only and sweeps batch 0
-    I.compactText(spark, state)
+    StateRoot(I.Bm25, state).compact(spark)
     assert(search(state) == expected)
     assert(!fs.exists(new Path(s"$state/postings/batch=0")),
       "compaction must physically sweep the retired batch")
     // the floor is monotonic: re-admitting retired batches throws
     val e = intercept[IllegalArgumentException] {
-      I.expireTextBatches(spark, state, minActiveBatchId = 0L)
+      StateRoot(I.Bm25, state).expire(spark, minActiveBatchId = 0L)
     }
     assert(e.getMessage.contains("monotonic"))
   }
@@ -87,9 +87,9 @@ class RetentionSpec extends AnyFunSuite {
       "doc_id", "text", state, 1L)
     import spark.implicits._
     val victim = corpus.agg(min(col("doc_id"))).head.getLong(0)
-    I.deleteTextDocs(spark, Seq(victim).toDF("doc_id"), "doc_id", state)
+    StateRoot(I.Bm25, state).delete(spark, Seq(victim).toDF("doc_id"), "doc_id")
     val e = intercept[IllegalArgumentException] {
-      I.expireTextBatches(spark, state, minActiveBatchId = 1L)
+      StateRoot(I.Bm25, state).expire(spark, minActiveBatchId = 1L)
     }
     assert(e.getMessage.contains("purge"))
     // purge folds the tombstones (and — being a forced compaction —
@@ -97,11 +97,11 @@ class RetentionSpec extends AnyFunSuite {
     // space, so TTL granularity is the PRE-compaction batch id space);
     // after it the expire is legal and the view is the full survivor
     // set
-    I.purgeText(spark, state)
+    StateRoot(I.Bm25, state).purge(spark)
     val merged = BatchState.landedBatchIds(
       spark, state, IncrementalIndexOps.Bm25Tables, None)
     assert(merged.size == 1)
-    I.expireTextBatches(spark, state, minActiveBatchId = merged.head)
+    StateRoot(I.Bm25, state).expire(spark, minActiveBatchId = merged.head)
     val twin = fresh()
     I.ingestTextShard(spark,
       corpus.where(col("doc_id") =!= victim), "doc_id", "text", twin, 0L)
@@ -125,7 +125,7 @@ class RetentionSpec extends AnyFunSuite {
       nCells = 4, iters = 2)
     I.ingestVectorShard(spark, sB, "vec_id", "embedding", state, 1L,
       nCells = 4, iters = 2)
-    I.expireVectorBatches(spark, state, minActiveBatchId = 1L)
+    StateRoot(I.Ivf, state).expire(spark, minActiveBatchId = 1L)
     // twin: same frozen codebook (pre-landed), survivors only
     val twin = fresh()
     import spark.implicits._

@@ -133,7 +133,7 @@ class StateLeaseSpec extends AnyFunSuite {
     // compaction runs before the stream restarts: it must NOT occupy
     // the promised id 2 (pre-fix it landed there, and the replay below
     // would have been silently no-op'd away)
-    I.compactText(spark, state)
+    StateRoot(I.Bm25, state).compact(spark)
     val landed = BatchState.landedBatchIds(spark, state, I.Bm25Tables, None)
     assert(landed == Seq(3L),
       s"compacted batch must land above the promised effective id 2, " +
@@ -166,7 +166,7 @@ class StateLeaseSpec extends AnyFunSuite {
     assert(micro(sB, 1) == 1L)
     // simulate the crash between ingest and confirmation
     assert(fs.delete(new Path(s"$state/_input/batch=1/_LANDED"), false))
-    I.compactText(spark, state)
+    StateRoot(I.Bm25, state).compact(spark)
     assert(fs.exists(new Path(s"$state/_input/batch=1/_LANDED")),
       "compaction must confirm promised batches that actually landed")
     // replay of micro-batch 1 after its original dirs were retired:

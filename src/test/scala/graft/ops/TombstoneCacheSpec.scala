@@ -68,7 +68,7 @@ class TombstoneCacheSpec extends AnyFunSuite {
     import spark.implicits._
     val ids = emb.orderBy("vec_id").limit(20)
       .select("vec_id").as[Long].collect()
-    I.deleteVectors(spark, Seq(ids(0)).toDF("vec_id"), "vec_id", state)
+    StateRoot(I.Ivf, state).delete(spark, Seq(ids(0)).toDF("vec_id"), "vec_id")
     val q = emb.limit(4).select(col("vec_id").as("qid"),
       SimilarityOps.asDouble(col("embedding")).as("qv"))
     def planSearch(): Unit = I.ivfSearch(spark, state, q, 2, 5)
@@ -80,7 +80,7 @@ class TombstoneCacheSpec extends AnyFunSuite {
     assert(jobsDuring(planSearch()) == 0)
     // a NEW deletion batch changes the landed set: exactly one fresh
     // probe (schemas and codebook stay memoized)
-    I.deleteVectors(spark, Seq(ids(1)).toDF("vec_id"), "vec_id", state)
+    StateRoot(I.Ivf, state).delete(spark, Seq(ids(1)).toDF("vec_id"), "vec_id")
     assert(jobsDuring(planSearch()) == 1)
     assert(jobsDuring(planSearch()) == 0)
     // correctness untouched: both victims are gone
@@ -127,7 +127,7 @@ class TombstoneCacheSpec extends AnyFunSuite {
     I.ingestTextShard(spark, corpus, "doc_id", "text", state, 0L)
     import spark.implicits._
     val victim = corpus.agg(min(col("doc_id"))).head.getLong(0)
-    I.deleteTextDocs(spark, Seq(victim).toDF("doc_id"), "doc_id", state)
+    StateRoot(I.Bm25, state).delete(spark, Seq(victim).toDF("doc_id"), "doc_id")
     val q = docs.where(pmod(col("doc_id"), lit(97)) === 0)
       .select(col("doc_id").as("qid"), col("text"))
     def planSearch(): Unit =

@@ -49,29 +49,34 @@ class JdbcUpsertSinkSpec extends AnyFunSuite {
 
   test("upsert batches, commits per flush, and dedups conflict keys") {
     import spark.implicits._
-    RecordingJdbc.events.clear()
-    val docs = Seq(
+    val input = Seq(
       ("K1", "Patient", "{\"a\":1}"),
       ("K2", "Patient", "{\"a\":2}"),
       ("K2", "Patient", "{\"a\":2-dup}"), // same conflict key: must collapse
       ("K3", "Specimen", "{\"a\":3}"),
       ("K4", "Specimen", "{\"a\":4}"))
-      .toDF("key", "resource_type", "resource_json")
-    JdbcUpsertSink.upsert(docs,
-      JdbcUpsertSink.Config(url = "jdbc:fake", table = "t", batchSize = 2),
-      connect = _ => RecordingJdbc.connection())
-    val ev = RecordingJdbc.events.toArray(Array.empty[String]).toSeq
-    val rows = ev.filter(_.startsWith("row:"))
-    assert(rows.size == 4, s"expected 4 deduped rows, got $rows")
-    assert(rows.map(_.split("\\|")(0)).distinct.size == 4,
-      "duplicate conflict key reached the batch")
-    val flushes = ev.count(_ == "executeBatch")
-    assert(flushes >= 1)
-    assert(ev.count(_ == "commit") == flushes,
-      "every executeBatch must be followed by exactly one commit")
-    assert(ev.contains("autocommit:false"))
+    // the kept K2 row is the greatest resource_json, in either input order
+    for (ordered <- Seq(input, input.reverse)) {
+      RecordingJdbc.events.clear()
+      val docs = ordered.toDF("key", "resource_type", "resource_json")
+      JdbcUpsertSink.upsert(docs,
+        JdbcUpsertSink.Config(url = "jdbc:fake", table = "t", batchSize = 2),
+        connect = _ => RecordingJdbc.connection())
+      val ev = RecordingJdbc.events.toArray(Array.empty[String]).toSeq
+      val rows = ev.filter(_.startsWith("row:"))
+      assert(rows.size == 4, s"expected 4 deduped rows, got $rows")
+      assert(rows.map(_.split("\\|")(0)).distinct.size == 4,
+        "duplicate conflict key reached the batch")
+      assert(rows.filter(_.startsWith("row:K2|")) ==
+        Seq("row:K2|Patient|{\"a\":2}"),
+        s"K2 must keep its greatest resource_json, got $rows")
+      val flushes = ev.count(_ == "executeBatch")
+      assert(flushes >= 1)
+      assert(ev.count(_ == "commit") == flushes,
+        "every executeBatch must be followed by exactly one commit")
+      assert(ev.contains("autocommit:false"))
+    }
   }
-
 
   test("upsert statement is a keyed ON CONFLICT upsert over all non-key columns") {
     val sql = JdbcUpsertSink.upsertSql("fhir_resources", "key",

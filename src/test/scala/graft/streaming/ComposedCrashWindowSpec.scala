@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.etl.SparkTestSession
 import graft.ops.{BatchState, IncrementalCurateOps, IncrementalIndexOps,
-  RetrievalOps}
+  RetrievalOps, StateRoot}
 
 /** Crash/compaction windows specific to the COMPOSED curate → index
   * micro-batch (round-16 review findings): the parts of the closure
@@ -114,7 +114,7 @@ class ComposedCrashWindowSpec extends AnyFunSuite {
     // between drains: compact the INDEX root (main tables + deletion
     // ledger) — pre-fix this landed merged batches at the exact ids the
     // next micro-batch would map to, and the third shard would no-op
-    IncrementalIndexOps.compactText(spark, indexDir)
+    StateRoot(IncrementalIndexOps.Bm25, indexDir).compact(spark)
     assert(micro(corpus.where(col("doc_id") > cut2), 2) == 2L)
     assert(sortedRows(IncrementalIndexOps.bm25Search(
         spark, indexDir, queries, "qid", "text", 10)) ==
@@ -156,7 +156,7 @@ class ComposedCrashWindowSpec extends AnyFunSuite {
     // ABOVE the promise, moving the watermark past it — the recorded
     // mapping now points below the watermark, where a replayed ingest
     // would be invisible and swept by the next GC
-    IncrementalIndexOps.compactText(spark, indexDir)
+    StateRoot(IncrementalIndexOps.Bm25, indexDir).compact(spark)
     assert(micro(sC, 2)(full) == 2L)
     assert(sortedRows(IncrementalIndexOps.bm25Search(
         spark, indexDir, queries, "qid", "text", 10)) ==
@@ -193,7 +193,7 @@ class ComposedCrashWindowSpec extends AnyFunSuite {
     // the curate tables DID land, but confirming the entry off them
     // would make the replay skip the whole closure — shard B would
     // never be indexed
-    IncrementalCurateOps.compact(spark, curateDir)
+    StateRoot(IncrementalCurateOps.Curation, curateDir).compact(spark)
     val eff = micro(sB, 1)(full)
     assert(eff > 1L,
       s"expected a fresh effective id after compaction, got $eff")
@@ -228,8 +228,8 @@ class ComposedCrashWindowSpec extends AnyFunSuite {
         sys.error("simulated crash before the confirmation write")
       }
     }
-    IncrementalCurateOps.compact(spark, curateDir)
-    IncrementalIndexOps.compactText(spark, indexDir)
+    StateRoot(IncrementalCurateOps.Curation, curateDir).compact(spark)
+    StateRoot(IncrementalIndexOps.Bm25, indexDir).compact(spark)
     val before = sortedRows(IncrementalIndexOps.bm25Search(
       spark, indexDir, queries, "qid", "text", 10))
     assert(before == oneShotOverKept(corpus))
@@ -266,7 +266,8 @@ class ComposedCrashWindowSpec extends AnyFunSuite {
     intercept[RuntimeException] {
       micro(sC, 2)((_, _) => sys.error("crash mid-ingest"))
     }
-    I.compactText(spark, state) // lands merged batch 3 (above promise 2)
+    // lands merged batch 3 (above promise 2)
+    StateRoot(I.Bm25, state).compact(spark)
     // the restart's fresh-id rewrite of entry 2 dies mid-write: old
     // content gone, new content uncommitted — the ledger's ONLY entry
     // has no _SUCCESS

@@ -7,7 +7,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.etl.SparkTestSession
-import graft.ops.{BatchState, IncrementalCurateOps, IncrementalIndexOps}
+import graft.ops.{BatchState, IncrementalCurateOps, IncrementalIndexOps,
+  StateRoot}
 
 /** Streaming deletion twin (round-16 "missing #2"): a continuous
   * takedown/deletion feed applied through
@@ -60,14 +61,14 @@ class DeletionStreamSpec extends AnyFunSuite {
       .select("doc_id")
     val dels2 = corpus.where(pmod(col("doc_id"), lit(11)) === 0)
       .select("doc_id")
-    def drain(): Unit = Streaming.textDeletionIngest(
-      spark, watch, dels1.schema, ckpt, state, "doc_id")
+    def drain(): Unit = Streaming.deletionIngest(
+      spark, watch, dels1.schema, ckpt, StateRoot(I.Bm25, state), "doc_id")
     landShard(base, watch, dels1, "d1")
     drain()
     landShard(base, watch, dels2, "d2")
     drain()
-    I.deleteTextDocs(spark, dels1, "doc_id", twin)
-    I.deleteTextDocs(spark, dels2, "doc_id", twin)
+    StateRoot(I.Bm25, twin).delete(spark, dels1, "doc_id")
+    StateRoot(I.Bm25, twin).delete(spark, dels2, "doc_id")
     def search(dir: String) =
       sortedRows(I.bm25Search(spark, dir, queries, "qid", "text", 10))
     val streamed = search(state)
@@ -111,7 +112,7 @@ class DeletionStreamSpec extends AnyFunSuite {
     assert(eff == 0L, s"expected the crashed id re-chosen, got $eff")
     val twin = s"$base/twin"
     I.ingestTextShard(spark, corpus, "doc_id", "text", twin, 0L)
-    I.deleteTextDocs(spark, dels, "doc_id", twin)
+    StateRoot(I.Bm25, twin).delete(spark, dels, "doc_id")
     def search(dir: String) =
       sortedRows(I.bm25Search(spark, dir, queries, "qid", "text", 10))
     assert(search(state) == search(twin))
@@ -136,7 +137,7 @@ class DeletionStreamSpec extends AnyFunSuite {
       I.deleteTextDocs(spark, df, "doc_id", dir, e)
     assert(Streaming.deletionMicroBatch(dels1, 0L, state,
       I.DelTables)(apply) == 0L)
-    I.purgeText(spark, state)
+    StateRoot(I.Bm25, state).purge(spark)
     assert(!BatchState.hasDeletionRoot(spark, state),
       "purge must retire the deletion root")
     // a replay of the PRE-purge micro-batch: its ids are no longer
@@ -150,8 +151,8 @@ class DeletionStreamSpec extends AnyFunSuite {
       I.DelTables)(apply) == 0L)
     val twin = s"$base/twin"
     I.ingestTextShard(spark, corpus, "doc_id", "text", twin, 0L)
-    I.deleteTextDocs(spark, dels1, "doc_id", twin)
-    I.deleteTextDocs(spark, dels2, "doc_id", twin)
+    StateRoot(I.Bm25, twin).delete(spark, dels1, "doc_id")
+    StateRoot(I.Bm25, twin).delete(spark, dels2, "doc_id")
     def search(dir: String) =
       sortedRows(I.bm25Search(spark, dir, queries, "qid", "text", 10))
     assert(search(state) == search(twin))
@@ -169,14 +170,14 @@ class DeletionStreamSpec extends AnyFunSuite {
     val kept = C.curated(spark, state).select("doc_id")
     val d1 = kept.orderBy("doc_id").limit(4)
     val d2 = kept.orderBy(col("doc_id").desc).limit(4)
-    def drain(): Unit = Streaming.takedownIngest(
-      spark, watch, d1.schema, ckpt, state, "doc_id")
+    def drain(): Unit = Streaming.deletionIngest(
+      spark, watch, d1.schema, ckpt, StateRoot(C.Curation, state), "doc_id")
     landShard(base, watch, d1, "t1")
     drain()
     landShard(base, watch, d2, "t2")
     drain()
-    C.takedown(spark, d1, "doc_id", twin)
-    C.takedown(spark, d2, "doc_id", twin)
+    StateRoot(C.Curation, twin).delete(spark, d1, "doc_id")
+    StateRoot(C.Curation, twin).delete(spark, d2, "doc_id")
     assert(sortedRows(C.curated(spark, state)) ==
       sortedRows(C.curated(spark, twin)))
   }
