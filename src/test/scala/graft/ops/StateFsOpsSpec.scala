@@ -27,6 +27,7 @@ class StateFsOpsSpec extends AnyFunSuite {
   private val srcDir = "/root/testdata/sf0.001"
   private val I = IncrementalIndexOps
   private val C = IncrementalCurateOps
+  private val D = IncrementalDedupOps
 
   private def docs: DataFrame = graft.Tables.documents(spark, srcDir)
   private lazy val mid: Long = {
@@ -82,6 +83,15 @@ class StateFsOpsSpec extends AnyFunSuite {
     "bm25 deletionIngest" -> Map("create" -> 7, "delete" -> 10,
       "exists" -> 23, "getFileStatus" -> 10, "globStatus" -> 12,
       "listStatus" -> 12, "mkdirs" -> 6, "open" -> 2, "rename" -> 4),
+    "ivf delete" -> Map("create" -> 3, "delete" -> 4, "exists" -> 12,
+      "getFileStatus" -> 2, "globStatus" -> 4, "listStatus" -> 6,
+      "mkdirs" -> 3, "open" -> 1, "rename" -> 1),
+    "image delete" -> Map("create" -> 3, "delete" -> 4, "exists" -> 11,
+      "getFileStatus" -> 2, "globStatus" -> 5, "listStatus" -> 6,
+      "mkdirs" -> 3, "rename" -> 1),
+    "embedding delete" -> Map("create" -> 3, "delete" -> 4, "exists" -> 12,
+      "getFileStatus" -> 2, "globStatus" -> 6, "listStatus" -> 6,
+      "mkdirs" -> 3, "rename" -> 1),
     "curation ingest" -> Map("create" -> 8, "delete" -> 13, "exists" -> 15,
       "getFileStatus" -> 13, "globStatus" -> 24, "listStatus" -> 18,
       "mkdirs" -> 8, "open" -> 1, "rename" -> 6),
@@ -185,6 +195,63 @@ class StateFsOpsSpec extends AnyFunSuite {
     check("bm25 deletionIngest") {
       Streaming.deletionIngest(spark, s"$base/in", dels.schema,
         s"$base/ckpt", StateRoot(I.Bm25, root), "doc_id")
+    }
+  }
+
+  // --------------------------------------- IVF, images, embeddings
+
+  private def emb: DataFrame = graft.Tables.embeddings(spark, srcDir)
+  private lazy val vecMid: Long = {
+    val r = emb.agg(min(col("vec_id")), max(col("vec_id"))).head
+    (r.getLong(0) + r.getLong(1)) / 2
+  }
+  private def vecDels: DataFrame =
+    emb.where(pmod(col("vec_id"), lit(9)) === 0).select("vec_id")
+
+  test("ivf delete") {
+    val root = CountingFs.freshDir("graft_fsops_ivf")
+    I.ingestVectorShard(spark, emb.where(col("vec_id") <= vecMid),
+      "vec_id", "embedding", root, 0L, nCells = 4, iters = 2)
+    I.ingestVectorShard(spark, emb.where(col("vec_id") > vecMid),
+      "vec_id", "embedding", root, 1L, nCells = 4, iters = 2)
+    check("ivf delete") {
+      StateRoot(I.Ivf, root).delete(spark, vecDels, "vec_id")
+    }
+  }
+
+  /** Synthetic images keyed by document id (groups of ten share one
+    * picture, so the shards carry near-dup pairs).
+    */
+  private def media: DataFrame = {
+    import spark.implicits._
+    docs.where(pmod(col("doc_id"), lit(3)) === 1)
+      .select(col("doc_id")).as[Long]
+      .mapPartitions(it => it.map { id =>
+        (id, ImageIoCodecs.syntheticPng(id - id % 10))
+      }).toDF("doc_id", "img")
+  }
+
+  test("image delete") {
+    val root = CountingFs.freshDir("graft_fsops_img")
+    D.ingestImageShard(spark, media.where(col("doc_id") <= mid),
+      "doc_id", "img", root, 0L)
+    D.ingestImageShard(spark, media.where(col("doc_id") > mid),
+      "doc_id", "img", root, 1L)
+    check("image delete") {
+      StateRoot(D.Images, root).delete(spark,
+        media.where(pmod(col("doc_id"), lit(7)) === 1).select("doc_id"),
+        "doc_id")
+    }
+  }
+
+  test("embedding delete") {
+    val root = CountingFs.freshDir("graft_fsops_emb")
+    D.ingestEmbeddingShard(spark, emb.where(col("vec_id") <= vecMid),
+      "vec_id", "embedding", root, 0L, k = 4, iters = 2, threshold = 0.35)
+    D.ingestEmbeddingShard(spark, emb.where(col("vec_id") > vecMid),
+      "vec_id", "embedding", root, 1L, k = 4, iters = 2, threshold = 0.35)
+    check("embedding delete") {
+      StateRoot(D.Embeddings, root).delete(spark, vecDels, "vec_id")
     }
   }
 

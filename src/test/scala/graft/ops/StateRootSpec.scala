@@ -85,4 +85,82 @@ class StateRootSpec extends AnyFunSuite {
     assert(Seq(D.Embeddings, IncrementalCurateOps.Curation)
       .forall(_.bucketColumns.isEmpty))
   }
+
+  // ---------------------------------------------- tombstone layout pin
+
+  private val srcDir = "/root/testdata/sf0.001"
+
+  private def docs = graft.Tables.documents(spark, srcDir)
+  private def emb = graft.Tables.embeddings(spark, srcDir)
+
+  private def fresh(): String =
+    Files.createTempDirectory("graft_stateroot").toString
+
+  /** `simpleString` of one deletion table's stored schema. */
+  private def delSchema(state: String, table: String): String =
+    spark.read.parquet(s"$state/_deletes/$table/batch=0").schema
+      .simpleString
+
+  private def delTableNames(state: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val listing = Files.list(Paths.get(state, "_deletes"))
+    try listing.iterator().asScala.map(_.getFileName.toString)
+      .filterNot(_.startsWith("_")).filterNot(_.startsWith(".")).toSet
+    finally listing.close()
+  }
+
+  test("one delete per family lands the same tombstone layout") {
+    import org.apache.spark.sql.functions._
+    val I = IncrementalIndexOps
+    val D = IncrementalDedupOps
+    val C = IncrementalCurateOps
+    val docDels = docs.where(pmod(col("doc_id"), lit(13)) === 0)
+      .select("doc_id")
+    val vecDels = emb.where(pmod(col("vec_id"), lit(9)) === 0)
+      .select("vec_id")
+
+    val bm25 = fresh()
+    I.ingestTextShard(spark, docs, "doc_id", "text", bm25, 0L)
+    StateRoot(I.Bm25, bm25).delete(spark, docDels, "doc_id")
+    assert(delTableNames(bm25) == Set("del_ids", "del_tokstats",
+      "del_globals"))
+    assert(delSchema(bm25, "del_ids") == "struct<id:bigint>")
+    assert(delSchema(bm25, "del_tokstats") == "struct<token:string,df:bigint>")
+    assert(delSchema(bm25, "del_globals") ==
+      "struct<n_docs:bigint,totlen:bigint,ceiling:bigint>")
+
+    val ivf = fresh()
+    I.ingestVectorShard(spark, emb, "vec_id", "embedding", ivf, 0L,
+      nCells = 4, iters = 2)
+    StateRoot(I.Ivf, ivf).delete(spark, vecDels, "vec_id")
+    assert(delTableNames(ivf) == Set("del_ids"))
+    assert(delSchema(ivf, "del_ids") == "struct<id:bigint>")
+
+    import spark.implicits._
+    val media = docs.where(pmod(col("doc_id"), lit(3)) === 1)
+      .select(col("doc_id")).as[Long]
+      .mapPartitions(it => it.map { id =>
+        (id, ImageIoCodecs.syntheticPng(id - id % 10))
+      }).toDF("doc_id", "img")
+    val img = fresh()
+    D.ingestImageShard(spark, media, "doc_id", "img", img, 0L)
+    StateRoot(D.Images, img).delete(spark,
+      media.where(pmod(col("doc_id"), lit(7)) === 1).select("doc_id"),
+      "doc_id")
+    assert(delTableNames(img) == Set("del_ids"))
+    assert(delSchema(img, "del_ids") == "struct<id:bigint>")
+
+    val embState = fresh()
+    D.ingestEmbeddingShard(spark, emb, "vec_id", "embedding", embState, 0L,
+      k = 4, iters = 2, threshold = 0.35)
+    StateRoot(D.Embeddings, embState).delete(spark, vecDels, "vec_id")
+    assert(delTableNames(embState) == Set("del_ids"))
+    assert(delSchema(embState, "del_ids") == "struct<id:bigint>")
+
+    val cur = fresh()
+    C.ingestShard(spark, docs, "doc_id", "text", cur, 0L)
+    StateRoot(C.Curation, cur).delete(spark, docDels, "doc_id")
+    assert(delTableNames(cur) == Set("del_ids"))
+    assert(delSchema(cur, "del_ids") == "struct<doc_id:bigint>")
+  }
 }
