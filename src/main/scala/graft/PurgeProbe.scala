@@ -70,7 +70,8 @@ object PurgeProbe {
           val slice = ids.slice(i * 5, i * 5 + 5).toSeq.toDF("doc_id")
           graft.streaming.Streaming.deletionMicroBatch(
             slice, i.toLong, state, I.DelTables) { (df, dir, eff) =>
-            I.deleteTextDocs(spark, df, "doc_id", dir, eff)
+            graft.ops.StateRoot.deleteIn(spark, I.Bm25, df, "doc_id", dir,
+              eff)
           }
           i += 1
         }
@@ -129,7 +130,7 @@ object PurgeProbe {
         val (delSec, _) = timed {
           var i = 0
           while (i < n) {
-            I.deleteTextDocs(spark,
+            graft.ops.StateRoot.deleteIn(spark, I.Bm25,
               ids.slice(i * 5, i * 5 + 5).toSeq.toDF("doc_id"),
               "doc_id", state, i.toLong)
             i += 1

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Shared machinery of the batch-partitioned parquet state pattern
@@ -94,18 +94,35 @@ private[graft] object BatchState {
 
   // ------------------------------------------------- streaming ledger
 
-  /** Committed entries of the streaming input ledger
-    * ([[graft.streaming.Streaming.stateIngest]] writes one per
-    * checkpoint micro-batch under `<stateDir>/_input/batch=<ckptId>`).
-    * Empty for state directories never fed by a stream.
+  /** Committed entries of the streaming input ledger, (id, entry dir)
+    * in ascending id order ([[graft.streaming.Streaming.stateIngest]]
+    * writes one per checkpoint micro-batch under
+    * `<stateDir>/_input/batch=<ckptId>`). Empty for state directories
+    * never fed by a stream. One `globStatus`.
     */
-  private def inputLedgerDirs(spark: SparkSession,
-      stateDir: String): Seq[Path] = {
+  private[graft] def inputLedger(spark: SparkSession,
+      stateDir: String): Seq[(Long, Path)] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val glob = new Path(s"$stateDir/_input/batch=*/_SUCCESS")
     val found = glob.getFileSystem(conf).globStatus(glob)
-    if (found == null) Seq.empty else found.toSeq.map(_.getPath.getParent)
+    if (found == null) Seq.empty
+    else found.toSeq.map(_.getPath.getParent).flatMap(d => scala.util.Try(
+      d.getName.stripPrefix("batch=").toLong -> d).toOption).sortBy(_._1)
   }
+
+  /** Delete the ledger entries below `extId` — the engine only ever
+    * re-delivers the LAST micro-batch, so older entries can never be
+    * replayed again, and keeping them would regrow in `_input` the very
+    * small-file problem [[compactState]] retires for the data tables.
+    */
+  private[graft] def retireLedgerBelow(spark: SparkSession, extId: Long,
+      ledger: Seq[(Long, Path)]): Unit =
+    ledger.collect { case (old, dir) if old < extId => dir }.foreach(d =>
+      d.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(d, true))
+
+  /** Stamp the `_LANDED` confirmation into one ledger entry directory. */
+  private[graft] def markLanded(fs: FileSystem, entry: Path): Unit =
+    fs.create(new Path(entry, "_LANDED"), true).close()
 
   /** Highest effective state-batch id any streaming ledger entry has
     * PROMISED to a micro-batch — landed or not. [[compactState]] must
@@ -116,7 +133,7 @@ private[graft] object BatchState {
     */
   private[graft] def maxPromisedEffectiveId(spark: SparkSession,
       stateDir: String): Option[Long] = {
-    val dirs = inputLedgerDirs(spark, stateDir)
+    val dirs = inputLedger(spark, stateDir).map(_._2)
     if (dirs.isEmpty) None
     else {
       import org.apache.spark.sql.functions.{col, max}
@@ -197,12 +214,7 @@ private[graft] object BatchState {
       val floor = freshId
       val own = if (floor == Long.MinValue) extId else floor + 1
       writeEntry(own)
-      inputLedgerDirs(spark, root)
-        .map(_.getName.stripPrefix("batch="))
-        .flatMap(s => scala.util.Try(s.toLong).toOption)
-        .filter(_ < extId)
-        .foreach(old =>
-          fs.delete(new Path(s"$root/_input/batch=$old"), true))
+      retireLedgerBelow(spark, extId, inputLedger(spark, root))
       own
     }
   }
@@ -231,14 +243,14 @@ private[graft] object BatchState {
   private def confirmLandedInputs(spark: SparkSession, stateDir: String,
       landed: Set[Long]): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    inputLedgerDirs(spark, stateDir).foreach { d =>
+    inputLedger(spark, stateDir).foreach { case (_, d) =>
       val fs = d.getFileSystem(conf)
       if (!fs.exists(new Path(d, "_LANDED"))) {
         val row = spark.read.parquet(d.toString).head
         val composed = row.schema.fieldNames.contains("composed") &&
           row.getAs[Boolean]("composed")
         if (!composed && landed.contains(row.getAs[Long]("effective_id")))
-          fs.create(new Path(d, "_LANDED"), true).close()
+          markLanded(fs, d)
       }
     }
   }
@@ -262,9 +274,9 @@ private[graft] object BatchState {
     val mdir = new Path(s"$stateDir/_manifest")
     val mfs = mdir.getFileSystem(conf)
     val entries =
-      if (!mfs.exists(mdir)) Seq.empty[org.apache.hadoop.fs.FileStatus]
+      if (!mfs.exists(mdir)) Seq.empty[FileStatus]
       else mfs.listStatus(mdir).toSeq
-    val visible = readManifestFrom(mfs, entries) match {
+    val visible = manifestsFrom(mfs, entries).nextOption() match {
       case Some((wm, listed)) =>
         // listed ids are visible UNCONDITIONALLY (their dirs are fully
         // written before the manifest lands; their markers may arrive
@@ -276,9 +288,9 @@ private[graft] object BatchState {
     // the TTL floor hides a PREFIX of the id space ([[setRetention]]):
     // applied last so compaction merges survivors only and its GC
     // sweeps the retired directories
-    val floor = retentionFloorFrom(mfs, entries)
+    val ttl = floorFrom(mfs, entries, "r")
     visible.toSeq
-      .filter(k => below.forall(k < _) && floor.forall(k >= _)).sorted
+      .filter(k => below.forall(k < _) && ttl.forall(k >= _)).sorted
   }
 
   /** Batch ids on disk with a `_SUCCESS` marker in EVERY table — the
@@ -304,12 +316,9 @@ private[graft] object BatchState {
     val dir = new Path(s"$stateDir/_manifest")
     val fs = dir.getFileSystem(conf)
     if (!fs.exists(dir)) return None
-    readManifestFrom(fs, fs.listStatus(dir).toSeq)
+    manifestsFrom(fs, fs.listStatus(dir).toSeq).nextOption()
   }
 
-  /** [[readManifest]] over a pre-fetched `_manifest` listing (shared
-    * with the TTL-floor parse so the hot path lists the dir once).
-    */
   /** Parse one manifest version's content: `<wm>;<ids>;`. The trailing
     * ';' is the commit terminator — create+write+close is not atomic on
     * every filesystem, and a truncated "12" of "123;4,5;" would parse
@@ -325,23 +334,46 @@ private[graft] object BatchState {
         else parts(1).split(",").map(_.toLong).toSeq)
     }.toOption
 
-  private def readManifestFrom(fs: org.apache.hadoop.fs.FileSystem,
-      entries: Seq[org.apache.hadoop.fs.FileStatus]):
-      Option[(Long, Seq[Long])] = {
-    val versions = entries
-      .flatMap(st => scala.util.Try(
-        st.getPath.getName.stripPrefix("v").toLong -> st.getPath).toOption)
-      .sortBy(-_._1)
-    // first COMMITTED version wins; a torn newest (compaction crashed
-    // mid-write) falls through to the previous committed view — the
-    // flip never happened
-    versions.iterator.flatMap { case (_, p) =>
-      val in = fs.open(p)
-      val line = try scala.io.Source.fromInputStream(in).mkString.trim
-      finally in.close()
-      parseManifestLine(line)
-    }.nextOption()
+  /** The whole (trimmed) content of one small metadata file. */
+  private def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+    finally in.close()
   }
+
+  /** The `<prefix><N>` version files of one listing, newest first:
+    * `v` = compaction manifests (and generation pointers under
+    * `_current`), `r` = TTL floors, `h` = audit-history floors.
+    */
+  private def versionsOf(entries: Seq[FileStatus],
+      prefix: String): Seq[(Long, Path)] =
+    entries.map(_.getPath).filter(_.getName.startsWith(prefix))
+      .flatMap(p => scala.util.Try(
+        p.getName.stripPrefix(prefix).toLong -> p).toOption)
+      .sortBy(-_._1)
+
+  /** Create `<dir>/<prefix><newest + 1>` holding `content`.
+    * create(overwrite = false) is the atomic publish: a racing writer
+    * targets the same version number and loses with an exception
+    * instead of clobbering.
+    */
+  private def publishVersion(fs: FileSystem, dir: Path, prefix: String,
+      entries: Seq[FileStatus], content: String): Unit = {
+    val next = versionsOf(entries, prefix).headOption.fold(0L)(_._1) + 1
+    val out = fs.create(new Path(dir, s"$prefix$next"), false)
+    try out.write(content.getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  /** The committed manifests of a pre-fetched `_manifest` listing,
+    * newest first (shared with the floor parses so the hot path lists
+    * the dir once). Torn (unterminated) versions are skipped: the flip
+    * never happened, so the first one read is the current view.
+    */
+  private def manifestsFrom(fs: FileSystem,
+      entries: Seq[FileStatus]): Iterator[(Long, Seq[Long])] =
+    versionsOf(entries, "v").iterator
+      .flatMap { case (_, p) => parseManifestLine(readText(fs, p)) }
 
   private def writeManifest(spark: SparkSession, stateDir: String,
       watermark: Long, listed: Seq[Long]): Unit = {
@@ -349,13 +381,9 @@ private[graft] object BatchState {
     val dir = new Path(s"$stateDir/_manifest")
     val fs = dir.getFileSystem(conf)
     fs.mkdirs(dir)
-    val next = readManifestVersion(fs, dir) + 1
-    // create(overwrite = false) is the atomic publish: a racing writer
-    // loses with an exception instead of clobbering; the trailing ';'
-    // is the commit terminator readers require
-    val out = fs.create(new Path(dir, s"v$next"), false)
-    try out.write(s"$watermark;${listed.mkString(",")};".getBytes("UTF-8"))
-    finally out.close()
+    // the trailing ';' is the commit terminator readers require
+    publishVersion(fs, dir, "v", fs.listStatus(dir).toSeq,
+      s"$watermark;${listed.mkString(",")};")
   }
 
   /** Current manifest version of a state directory (0 when none) —
@@ -369,11 +397,9 @@ private[graft] object BatchState {
     if (!fs.exists(dir)) 0L else readManifestVersion(fs, dir)
   }
 
-  private def readManifestVersion(fs: org.apache.hadoop.fs.FileSystem,
+  private def readManifestVersion(fs: FileSystem,
       dir: Path): Long =
-    fs.listStatus(dir).toSeq.flatMap(st =>
-      scala.util.Try(st.getPath.getName.stripPrefix("v").toLong).toOption)
-      .sorted.lastOption.getOrElse(0L)
+    versionsOf(fs.listStatus(dir).toSeq, "v").headOption.fold(0L)(_._1)
 
   /** Compact every landed batch of a state directory into ONE batch —
     * the answer to the small-file problem a years-long shard-by-shard
@@ -525,25 +551,19 @@ private[graft] object BatchState {
       }
       val mdir = new Path(s"$stateDir/_manifest")
       val latest = readManifestVersion(fs, mdir)
-      fs.listStatus(mdir).foreach { st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("v").toLong)
-          .toOption.filter(_ < latest).foreach { _ =>
-            hist match {
-              case None => fs.delete(st.getPath, false)
-              case Some(h) =>
-                // a manifest whose fold sits below the floor can never
-                // legally resolve a cut (the wm >= floor guard) — sweep
-                // it with its directories; parse failures are left
-                scala.util.Try {
-                  val in = fs.open(st.getPath)
-                  val w = try scala.io.Source.fromInputStream(in)
-                    .mkString.trim.split(";")(0).toLong
-                  finally in.close()
-                  if (w < h) fs.delete(st.getPath, false)
-                }
-            }
+      versionsOf(fs.listStatus(mdir).toSeq, "v")
+        .filter(_._1 < latest).foreach { case (_, p) =>
+          hist match {
+            case None => fs.delete(p, false)
+            case Some(h) =>
+              // a manifest whose fold sits below the floor can never
+              // legally resolve a cut (the wm >= floor guard) — sweep
+              // it with its directories; torn versions are left
+              parseManifestLine(readText(fs, p)).foreach { case (w, _) =>
+                if (w < h) fs.delete(p, false)
+              }
           }
-      }
+        }
     }
   }
 
@@ -565,12 +585,7 @@ private[graft] object BatchState {
       import spark.implicits._
       Seq(eff).toDF("effective_id").coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(fpDir)
-      inputLedgerDirs(spark, root)
-        .map(_.getName.stripPrefix("batch="))
-        .flatMap(x => scala.util.Try(x.toLong).toOption)
-        .filter(_ < extId)
-        .foreach(old =>
-          fs.delete(new Path(s"$root/_input/batch=$old"), true))
+      retireLedgerBelow(spark, extId, inputLedger(spark, root))
     }
   }
 
@@ -583,8 +598,7 @@ private[graft] object BatchState {
       extId: Long): Unit = {
     val fpDir = new Path(s"$root/_input/batch=$extId")
     val fs = fpDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(fpDir, "_SUCCESS")))
-      fs.create(new Path(fpDir, "_LANDED"), true).close()
+    if (fs.exists(new Path(fpDir, "_SUCCESS"))) markLanded(fs, fpDir)
   }
 
   // --------------------------------------------------- retention (TTL)
@@ -615,25 +629,11 @@ private[graft] object BatchState {
     * floor BEFORE compacting when sub-corpus TTL is the intent.
     */
   def setRetention(spark: SparkSession, stateDir: String,
-      minActiveBatchId: Long): Unit = withLease(spark, stateDir) {
-    val dir = new Path(s"$stateDir/_manifest")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dir)
-    val cur = retentionFloor(spark, stateDir)
-    require(cur.forall(minActiveBatchId >= _),
-      s"retention floor must be monotonic: ${cur.get} -> " +
-        s"$minActiveBatchId would RE-ADMIT batches readers have " +
-        "already been served without")
-    val next = retentionVersions(fs.listStatus(dir).toSeq)
-      .map(_._1).maxOption.getOrElse(0L) + 1
-    val out = fs.create(new Path(dir, s"r$next"), false)
-    // ';' terminates the committed write: create+write+close is not
-    // atomic on every filesystem, and a truncated floor ("12" of
-    // "123;") parses to a VALID but wrong number — readers require the
-    // terminator and skip unterminated (torn) versions
-    try out.write(s"$minActiveBatchId;".getBytes("UTF-8"))
-    finally out.close()
-  }
+      minActiveBatchId: Long): Unit =
+    publishFloor(spark, stateDir, "r", minActiveBatchId) { cur =>
+      s"retention floor must be monotonic: $cur -> $minActiveBatchId " +
+        "would RE-ADMIT batches readers have already been served without"
+    }
 
   /** The current retention floor (None when no TTL was ever set):
     * batch ids below it are invisible to [[landedBatchIds]]. Torn
@@ -641,34 +641,50 @@ private[graft] object BatchState {
     * write never committed.
     */
   private[graft] def retentionFloor(spark: SparkSession,
-      stateDir: String): Option[Long] = {
+      stateDir: String): Option[Long] = readFloor(spark, stateDir, "r")
+
+  /** The newest committed `<prefix><N>` floor of a pre-fetched
+    * `_manifest` listing. Only terminator-committed floors count — a
+    * torn write's truncated digits would otherwise parse as a smaller,
+    * WRONG floor; an unterminated version is skipped like an empty one.
+    */
+  private def floorFrom(fs: FileSystem, entries: Seq[FileStatus],
+      prefix: String): Option[Long] =
+    versionsOf(entries, prefix).iterator.flatMap { case (_, p) =>
+      val txt = readText(fs, p)
+      if (txt.endsWith(";")) scala.util.Try(txt.dropRight(1).toLong).toOption
+      else None
+    }.nextOption()
+
+  private def readFloor(spark: SparkSession, stateDir: String,
+      prefix: String): Option[Long] = {
     val dir = new Path(s"$stateDir/_manifest")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) None
-    else retentionFloorFrom(fs, fs.listStatus(dir).toSeq)
+    else floorFrom(fs, fs.listStatus(dir).toSeq, prefix)
   }
 
-  /** [[retentionFloor]] over a pre-fetched `_manifest` listing. */
-  private def retentionFloorFrom(fs: org.apache.hadoop.fs.FileSystem,
-      entries: Seq[org.apache.hadoop.fs.FileStatus]): Option[Long] =
-    retentionVersions(entries).sortBy(-_._1).iterator
-      .flatMap { case (_, p) =>
-        val in = fs.open(p)
-        val txt = try scala.io.Source.fromInputStream(in).mkString.trim
-        finally in.close()
-        // only terminator-committed floors count — a torn write's
-        // truncated digits would otherwise parse as a smaller, WRONG
-        // floor; an unterminated version is skipped like an empty one
-        if (txt.endsWith(";"))
-          scala.util.Try(txt.dropRight(1).toLong).toOption
-        else None
-      }.nextOption()
-
-  private def retentionVersions(
-      entries: Seq[org.apache.hadoop.fs.FileStatus]): Seq[(Long, Path)] =
-    entries.filter(_.getPath.getName.startsWith("r"))
-      .flatMap(st => scala.util.Try(
-        st.getPath.getName.stripPrefix("r").toLong -> st.getPath).toOption)
+  /** Publish a new `<prefix><N>` floor version under the lease: a
+    * no-op when `floor` is already current, and monotonic — a lower
+    * floor throws with `lowered(current floor)`. ';' terminates the
+    * committed write: create+write+close is not atomic on every
+    * filesystem, and a truncated floor ("12" of "123;") parses to a
+    * VALID but wrong number — readers require the terminator and skip
+    * unterminated (torn) versions.
+    */
+  private def publishFloor(spark: SparkSession, stateDir: String,
+      prefix: String, floor: Long)(lowered: Long => String): Unit =
+    withLease(spark, stateDir) {
+      val dir = new Path(s"$stateDir/_manifest")
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.mkdirs(dir)
+      val entries = fs.listStatus(dir).toSeq
+      val cur = floorFrom(fs, entries, prefix)
+      if (!cur.contains(floor)) {
+        require(cur.forall(floor >= _), lowered(cur.get))
+        publishVersion(fs, dir, prefix, entries, s"$floor;")
+      }
+    }
 
   // ------------------------------------------- retained history (audit)
 
@@ -691,49 +707,15 @@ private[graft] object BatchState {
     * content is neither servable through any cut nor left on disk.
     */
   def setHistoryFloor(spark: SparkSession, stateDir: String,
-      floor: Long): Unit = withLease(spark, stateDir) {
-    val dir = new Path(s"$stateDir/_manifest")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dir)
-    val cur = historyFloor(spark, stateDir)
-    if (!cur.contains(floor)) {
-      require(cur.forall(floor >= _),
-        s"history floor must be monotonic: ${cur.getOrElse(0L)} -> " +
-          s"$floor would claim directories already swept are retained")
-      val next = historyVersions(fs.listStatus(dir).toSeq)
-        .map(_._1).maxOption.getOrElse(0L) + 1
-      val out = fs.create(new Path(dir, s"h$next"), false)
-      try out.write(s"$floor;".getBytes("UTF-8"))
-      finally out.close()
+      floor: Long): Unit =
+    publishFloor(spark, stateDir, "h", floor) { cur =>
+      s"history floor must be monotonic: $cur -> $floor would claim " +
+        "directories already swept are retained"
     }
-  }
 
   /** The declared audit-history floor (None = history retention off). */
   private[graft] def historyFloor(spark: SparkSession,
-      stateDir: String): Option[Long] = {
-    val dir = new Path(s"$stateDir/_manifest")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) None
-    else historyFloorFrom(fs, fs.listStatus(dir).toSeq)
-  }
-
-  private def historyFloorFrom(fs: org.apache.hadoop.fs.FileSystem,
-      entries: Seq[org.apache.hadoop.fs.FileStatus]): Option[Long] =
-    historyVersions(entries).sortBy(-_._1).iterator
-      .flatMap { case (_, p) =>
-        val in = fs.open(p)
-        val txt = try scala.io.Source.fromInputStream(in).mkString.trim
-        finally in.close()
-        if (txt.endsWith(";"))
-          scala.util.Try(txt.dropRight(1).toLong).toOption
-        else None
-      }.nextOption()
-
-  private def historyVersions(
-      entries: Seq[org.apache.hadoop.fs.FileStatus]): Seq[(Long, Path)] =
-    entries.filter(_.getPath.getName.startsWith("h"))
-      .flatMap(st => scala.util.Try(
-        st.getPath.getName.stripPrefix("h").toLong -> st.getPath).toOption)
+      stateDir: String): Option[Long] = readFloor(spark, stateDir, "h")
 
   /** The batch ids that were VISIBLE as state when `cut` was the
     * newest landed batch — the as-of resolution verb. Without a
@@ -759,25 +741,15 @@ private[graft] object BatchState {
     val mdir = new Path(s"$stateDir/_manifest")
     val mfs = mdir.getFileSystem(conf)
     val entries =
-      if (!mfs.exists(mdir)) Seq.empty[org.apache.hadoop.fs.FileStatus]
+      if (!mfs.exists(mdir)) Seq.empty[FileStatus]
       else mfs.listStatus(mdir).toSeq
-    historyFloorFrom(mfs, entries) match {
+    floorFrom(mfs, entries, "h") match {
       case None => landedBatchIds(spark, stateDir, tables, Some(cut + 1))
       case Some(h) =>
         val globbed = globbedIds(conf, stateDir, tables)
-        val manifests = entries
-          .flatMap(st => scala.util.Try(
-            st.getPath.getName.stripPrefix("v").toLong -> st.getPath)
-            .toOption)
-          .flatMap { case (_, p) =>
-            val in = mfs.open(p)
-            val line =
-              try scala.io.Source.fromInputStream(in).mkString.trim
-              finally in.close()
-            // torn (unterminated) versions are never-committed flips —
-            // skipped here exactly as the live listing skips them
-            parseManifestLine(line)
-          }
+        // torn (unterminated) versions are never-committed flips —
+        // skipped here exactly as the live listing skips them
+        val manifests = manifestsFrom(mfs, entries).toSeq
         manifests.filter(_._1 <= cut).sortBy(-_._1).headOption match {
           case Some((wm, listed)) =>
             require(wm >= h,
@@ -839,10 +811,7 @@ private[graft] object BatchState {
     val stored =
       if (newP.startsWith(rootP + "/")) newP.stripPrefix(rootP + "/")
       else newP
-    val next = readManifestVersion(fs, dir) + 1
-    val out = fs.create(new Path(dir, s"v$next"), false)
-    try out.write(stored.getBytes("UTF-8"))
-    finally out.close()
+    publishVersion(fs, dir, "v", fs.listStatus(dir).toSeq, stored)
   }
 
   /** Memoized generation resolutions, keyed by (root, version file
@@ -884,18 +853,15 @@ private[graft] object BatchState {
     val fs = dir.getFileSystem(conf)
     if (!fs.exists(dir)) root
     else {
-      val versions = fs.listStatus(dir).toSeq
-        .flatMap(st => scala.util.Try(
-          st.getPath.getName.stripPrefix("v").toLong -> st).toOption)
-        .sortBy(-_._1)
-      versions.iterator.flatMap { case (_, st) =>
-        val key = new Path(root).toString + "|" + st.getPath.getName +
-          "|" + st.getModificationTime
+      val listing = fs.listStatus(dir).toSeq
+      val mtimes = listing.map(st => st.getPath -> st.getModificationTime)
+        .toMap
+      versionsOf(listing, "v").iterator.flatMap { case (_, p) =>
+        val key = new Path(root).toString + "|" + p.getName + "|" +
+          mtimes(p)
         Option(generationMemo.get(key)).orElse {
           generationReads.incrementAndGet()
-          val in = fs.open(st.getPath)
-          val txt = try scala.io.Source.fromInputStream(in).mkString.trim
-          finally in.close()
+          val txt = readText(fs, p)
           val resolved =
             if (txt.isEmpty) None
             else {
@@ -949,15 +915,9 @@ private[graft] object BatchState {
     val dir = new Path(s"$root/_current")
     val fs = dir.getFileSystem(conf)
     if (fs.exists(dir)) {
-      val versions = fs.listStatus(dir).toSeq
-        .flatMap(st => scala.util.Try(
-          st.getPath.getName.stripPrefix("v").toLong -> st.getPath)
-          .toOption)
-        .sortBy(-_._1)
+      val versions = versionsOf(fs.listStatus(dir).toSeq, "v")
       def target(p: Path): Option[Path] = {
-        val in = fs.open(p)
-        val txt = try scala.io.Source.fromInputStream(in).mkString.trim
-        finally in.close()
+        val txt = readText(fs, p)
         if (txt.isEmpty) None
         else Some(
           if (txt.startsWith("/") || txt.contains("://")) new Path(txt)
@@ -1024,12 +984,11 @@ private[graft] object BatchState {
       stateDir: String): Option[Long] = {
     val p = purgeMarkerPath(stateDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // an empty or non-numeric marker is a purge that crashed between
+    // creating and writing it: uncommitted, so healPurge discards it
+    // and the tombstones stay live
     if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in).mkString.trim.toLong)
-      finally in.close()
-    }
+    else scala.util.Try(readText(fs, p).toLong).toOption
   }
 
   /** True iff a purge's main-table flip COMMITTED but its deletion-root
@@ -1342,9 +1301,7 @@ private[graft] object BatchState {
         bucketingsNeg.add(key)
         None
       } else {
-        val in = fs.open(marker)
-        val txt = try scala.io.Source.fromInputStream(in).mkString.trim
-        finally in.close()
+        val txt = readText(fs, marker)
         val parts = txt.split(";")
         if (!txt.endsWith(";") || parts.length < 2) None // torn — unbucketed
         else {

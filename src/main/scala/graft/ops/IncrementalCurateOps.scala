@@ -186,7 +186,7 @@ object IncrementalCurateOps {
     BatchState.landedBatchIds(spark, stateDir, Tables, below)
 
   private def readState(spark: SparkSession, stateDir: String,
-      table: String, below: Option[Long] = None): Option[DataFrame] = {
+      table: String, below: Option[Long]): Option[DataFrame] = {
     val paths = landedBatchIds(spark, stateDir, below)
       .map(k => s"$stateDir/$table/batch=$k")
     if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
@@ -396,8 +396,8 @@ object IncrementalCurateOps {
       carry = Seq(col("pred_lang"), col("quality_e6"), col("red_md5")),
       tokenCount = Some(col("n_tok")))
     // takedowns apply AFTER packing: survivors keep their pack ids (a
-    // resumed run sees a hole, never a reshuffle) — see [[takedown]]
-    takedowns(spark, stateDir) match {
+    // resumed run sees a hole, never a reshuffle) — see [[Curation]]
+    BatchState.readTombstones(spark, stateDir, TakedownTables) match {
       case Some(d) => packed.join(d, Seq("doc_id"), "left_anti")
       case None => packed
     }
@@ -406,78 +406,6 @@ object IncrementalCurateOps {
   // ------------------------------------------------------------ takedown
 
   private[graft] val TakedownTables = Seq("del_ids")
-
-  private def delRoot(stateDir: String): String =
-    BatchState.deletionRoot(stateDir)
-
-  /** TAKEDOWN: permanently remove documents from the curated corpus —
-    * the write side of the compliance loop whose read side is
-    * [[CorpusOps.curationReport]] ("why is doc X in/out of the training
-    * set" → "remove doc X"). Lands tombstone id batches under the state
-    * directory's own `_deletes` root (ascending ids, idempotent per
-    * batch, unknown/already-removed ids are exact no-ops);
-    * [[curated]] and [[corpusStats]] honor them.
-    *
-    * Semantics — deliberately NOT "curate the union minus these docs":
-    *
-    *  - a taken-down doc's exact/near duplicates stay suppressed (their
-    *    losing dispositions were decided when they ingested, and
-    *    resurrecting a near-copy of removed content would defeat the
-    *    takedown);
-    *  - surviving docs keep their pack assignments (the tombstone is
-    *    applied AFTER packing, so a resumed training run sees a hole,
-    *    never a reshuffle).
-    *
-    * Concurrent callers use [[StateRoot.delete]], which chooses the
-    * batch id inside the main lease.
-    */
-  def takedown(spark: SparkSession, ids: DataFrame, idCol: String,
-      stateDir: String, batchId: Long): Unit =
-    BatchState.withLease(spark, stateDir) {
-      val landed = landedBatchIds(spark, stateDir, None)
-      require(landed.nonEmpty,
-        s"no landed batches under $stateDir — nothing to take down")
-      val asked = ids.select(col(idCol).as("doc_id")).distinct()
-      // only ids the corpus actually HOLDS (stage-1 survivors)
-      // tombstone; everything else is a no-op
-      val held = asked.join(
-        readState(spark, stateDir, "docs").get.select("doc_id"),
-        Seq("doc_id"), "left_semi")
-      // never create the deletion root for a complete no-op (pristine
-      // directories' reads stay one-exists-probe)
-      if (BatchState.hasDeletionRoot(spark, stateDir) || !held.isEmpty)
-        BatchState.withLease(spark, delRoot(stateDir)) {
-          // same protocol as every other deletion writer: finish (or
-          // discard) a crashed purge BEFORE landing tombstones — the
-          // curation family has no purge operator TODAY, but landing
-          // into a committed-but-unretired root would let the next
-          // healer wipe these tombstones (silent resurrection) the
-          // moment one is added
-          BatchState.healPurge(spark, stateDir, TakedownTables)
-          if (!BatchState.allLanded(spark, delRoot(stateDir),
-              TakedownTables, batchId)) {
-            val delLanded = BatchState.landedBatchIds(spark,
-              delRoot(stateDir), TakedownTables, None)
-            BatchState.requireInOrder(delLanded, batchId)
-            val newDel = BatchState.readBatches(spark, delRoot(stateDir),
-                "del_ids", delLanded) match {
-              case Some(prev) =>
-                held.join(prev, Seq("doc_id"), "left_anti")
-              case None => held
-            }
-            BatchState.land(newDel, delRoot(stateDir), "del_ids", batchId)
-          }
-        }
-    }
-
-  /** The effective tombstoned doc ids ([[BatchState.readTombstones]] —
-    * None when absent or all-no-op, keeping the takedown-free fast
-    * paths).
-    */
-  private def takedowns(spark: SparkSession,
-      stateDir: String): Option[DataFrame] =
-    BatchState.readTombstones(spark, stateDir, TakedownTables)
-      .map(_.withColumnRenamed("id", "doc_id"))
 
   /** The doc_id column of every stage-1-kept document currently VISIBLE
     * in state — the recovery source for a composed replay whose own
@@ -507,7 +435,7 @@ object IncrementalCurateOps {
   def corpusStats(spark: SparkSession, stateDir: String): DataFrame = {
     val landed = landedBatchIds(spark, stateDir, None)
     require(landed.nonEmpty, s"no landed batches under $stateDir")
-    takedowns(spark, stateDir) match {
+    BatchState.readTombstones(spark, stateDir, TakedownTables) match {
       case None =>
         spark.read.parquet(landed.map(k => s"$stateDir/stats/batch=$k"): _*)
           .groupBy(col("pred_lang")).agg(
@@ -536,13 +464,26 @@ object IncrementalCurateOps {
     * edges and stats are per-batch-disjoint facts, the cluster map is a
     * snapshot (compaction keeps its newest batch — already the folded
     * view of all history; [[curated]] and [[ingestShard]] continue
-    * unchanged on top). Takedowns are its deletions; it declares no
-    * purge, TTL or bucketing. Retained history keeps folded batches on
-    * disk so [[curated]] cuts below a compaction fold stay servable —
-    * takedowns still apply at EVERY cut.
+    * unchanged on top). It declares no purge, TTL or bucketing.
+    * Retained history keeps folded batches on disk so [[curated]] cuts
+    * below a compaction fold stay servable — takedowns still apply at
+    * EVERY cut.
+    *
+    * TAKEDOWNS are its deletions ([[StateRoot.delete]]): documents
+    * permanently removed from the curated corpus — the write side of
+    * the compliance loop whose read side is [[CorpusOps.curationReport]]
+    * ("why is doc X in/out of the training set" → "remove doc X");
+    * only stage-1 survivors (the `docs` table) can be taken down, and
+    * [[curated]] and [[corpusStats]] honor them. Deliberately NOT
+    * "curate the union minus these docs": a taken-down doc's exact and
+    * near duplicates stay suppressed (resurrecting a near-copy of
+    * removed content would defeat the takedown), and surviving docs
+    * keep their pack assignments (the tombstone applies AFTER packing,
+    * so a resumed training run sees a hole, never a reshuffle).
     */
   val Curation: StateFamily = StateFamily("curation",
     additiveTables = CoreTables, delTables = TakedownTables,
-    delete = takedown, snapshotTables = Seq("clusters"),
+    liveIds = "docs" -> "doc_id", tombstoneCol = "doc_id",
+    snapshotTables = Seq("clusters"),
     verbs = Set(StateFamily.RetainHistory))
 }

@@ -138,8 +138,9 @@ object IncrementalDedupOps {
       val newOld = readBatches(spark, stateDir, "bands", landed) match {
         case Some(old0) =>
           // tombstoned images' stored bands must not mint NEW edges —
-          // removed content stays removed ([[deleteImages]])
-          val old = tombstones(spark, stateDir) match {
+          // removed content stays removed ([[StateRoot.delete]])
+          val old = BatchState.readTombstones(spark, stateDir,
+              DelIdsTables) match {
             case Some(d) => old0.join(d, Seq("id"), "left_anti")
             case None => old0
           }
@@ -169,66 +170,11 @@ object IncrementalDedupOps {
 
   private[graft] val DelIdsTables = Seq("del_ids")
 
-  private def delRoot(stateDir: String): String =
-    BatchState.deletionRoot(stateDir)
-
-  /** Retract images from the near-dup state by tombstone. Near-dup
-    * pairs are PAIRWISE facts, so — unlike the component-folding
-    * families — deletion here is exact: [[imagePairs]] after deleting
-    * `d` is row-identical to one-shot
-    * [[DedupOps.imageNearDupPairs]] over the union minus `d` (every
-    * pair touching a deleted image drops; nothing else moves). Later
-    * [[ingestImageShard]]s also stop matching the deleted images'
-    * stored bands, so no new edge ever forms against removed content.
-    * Own BatchState root, ascending ids, idempotent, unknown ids no-op
-    * — the family contract ([[StateRoot.delete]] chooses the id).
-    */
-  def deleteImages(spark: SparkSession, dels: DataFrame, idCol: String,
-      stateDir: String, batchId: Long): Unit =
-    BatchState.withLease(spark, stateDir) {
-      val landed = landedBatchIds(spark, stateDir, ImageTables, None)
-      require(landed.nonEmpty,
-        s"no landed batches under $stateDir — nothing to delete from")
-      val asked = dels.select(col(idCol).as("id")).distinct()
-      // bucketed directories scan only the asked ids' band buckets
-      val held = asked.join(
-        BatchState.readBatchesPrunedBy(spark, stateDir, "bands", landed,
-          asked, "id").get
-          .select(col("id")), Seq("id"), "left_semi")
-      // never create the deletion root for a complete no-op
-      if (BatchState.hasDeletionRoot(spark, stateDir) || !held.isEmpty)
-        BatchState.withLease(spark, delRoot(stateDir)) {
-          // a crashed purge must be finished/discarded BEFORE landing:
-          // tombstones landed into a committed-but-unretired root would
-          // be wiped by the next healer (silent resurrection)
-          BatchState.healPurge(spark, stateDir, DelIdsTables)
-          if (!BatchState.allLanded(spark, delRoot(stateDir),
-              DelIdsTables, batchId)) {
-            val delLanded = landedBatchIds(spark, delRoot(stateDir),
-              DelIdsTables, None)
-            requireInOrder(delLanded, batchId)
-            val newDel = readBatches(spark, delRoot(stateDir),
-                "del_ids", delLanded) match {
-              case Some(prev) => held.join(prev, Seq("id"), "left_anti")
-              case None => held
-            }
-            land(newDel, delRoot(stateDir), "del_ids", batchId)
-          }
-        }
-    }
-
-  /** The effective tombstone set of either modality's state directory
-    * (see [[BatchState.readTombstones]]).
-    */
-  private def tombstones(spark: SparkSession,
-      stateDir: String): Option[DataFrame] =
-    BatchState.readTombstones(spark, stateDir, DelIdsTables)
-
   /** Every near-dup image pair across all landed batches — the same
     * rows one-shot [[DedupOps.imageNearDupPairs]] produces over the
     * union (each pair landed exactly once, at its later member's
     * batch) minus every pair touching a tombstoned image
-    * ([[deleteImages]]). Reads edge state only; no image bytes are
+    * ([[StateRoot.delete]]). Reads edge state only; no image bytes are
     * touched.
     */
   def imagePairs(spark: SparkSession, stateDir: String): DataFrame = {
@@ -236,7 +182,7 @@ object IncrementalDedupOps {
     require(landed.nonEmpty, s"no landed batches under $stateDir")
     val edges = readBatches(spark, stateDir, "edges", landed).get
       .select("doc_a", "doc_b", "hamming")
-    tombstones(spark, stateDir) match {
+    BatchState.readTombstones(spark, stateDir, DelIdsTables) match {
       case Some(d) => edges
         .join(d.select(col("id").as("doc_a")), Seq("doc_a"), "left_anti")
         .join(d.select(col("id").as("doc_b")), Seq("doc_b"), "left_anti")
@@ -303,8 +249,9 @@ object IncrementalDedupOps {
       val newOld = readBatches(spark, stateDir, "assign", landed) match {
         case Some(old0) =>
           // tombstoned vectors' stored assignments must not mint NEW
-          // edges or merge components ([[deleteEmbeddings]])
-          val old = tombstones(spark, stateDir) match {
+          // edges or merge components ([[StateRoot.delete]])
+          val old = BatchState.readTombstones(spark, stateDir,
+              DelIdsTables) match {
             case Some(d) => old0.join(d, Seq("id"), "left_anti")
             case None => old0
           }
@@ -381,7 +328,8 @@ object IncrementalDedupOps {
         // clean, empty deletion root)
         val allStored = readBatches(spark, oldStateDir, "assign",
           landedOld).get.select(col("id"), col("v"))
-        val stored = tombstones(spark, oldStateDir) match {
+        val stored = BatchState.readTombstones(spark, oldStateDir,
+            DelIdsTables) match {
           case Some(d) => allStored.join(d, Seq("id"), "left_anti")
           case None => allStored
         }
@@ -424,51 +372,6 @@ object IncrementalDedupOps {
     }
   }
 
-  /** Retract vectors from the SemDeDup state by tombstone. Component
-    * structure is HISTORY here, so — unlike the pairwise image family —
-    * deletion is takedown-shaped, not a re-clustering: the deleted
-    * vectors leave the view, clusters never SPLIT (two docs whose only
-    * connection ran through a deleted bridge stay together — grouping
-    * near-dups of removed content remains correct and conservative),
-    * and a component whose representative is deleted re-elects the
-    * smallest surviving member ([[semanticDedupView]]). Later
-    * [[ingestEmbeddingShard]]s stop matching the deleted vectors'
-    * stored assignments, so no new edge forms against removed content.
-    */
-  def deleteEmbeddings(spark: SparkSession, dels: DataFrame, idCol: String,
-      root: String, batchId: Long): Unit = {
-    val stateDir = BatchState.resolveGeneration(spark, root)
-    BatchState.withLease(spark, stateDir) {
-      val landed = landedBatchIds(spark, stateDir, EmbTables, None)
-      require(landed.nonEmpty,
-        s"no landed batches under $stateDir — nothing to delete from")
-      val asked = dels.select(col(idCol).as("id")).distinct()
-      val held = asked.join(
-        readBatches(spark, stateDir, "assign", landed).get
-          .select(col("id")), Seq("id"), "left_semi")
-      // never create the deletion root for a complete no-op
-      if (BatchState.hasDeletionRoot(spark, stateDir) || !held.isEmpty)
-        BatchState.withLease(spark, delRoot(stateDir)) {
-          // finish/discard a crashed purge BEFORE landing — tombstones
-          // landed into a committed-but-unretired root would be wiped
-          // by the next healer (silent resurrection)
-          BatchState.healPurge(spark, stateDir, DelIdsTables)
-          if (!BatchState.allLanded(spark, delRoot(stateDir),
-              DelIdsTables, batchId)) {
-            val delLanded = landedBatchIds(spark, delRoot(stateDir),
-              DelIdsTables, None)
-            requireInOrder(delLanded, batchId)
-            val newDel = readBatches(spark, delRoot(stateDir),
-                "del_ids", delLanded) match {
-              case Some(prev) => held.join(prev, Seq("id"), "left_anti")
-              case None => held
-            }
-            land(newDel, delRoot(stateDir), "del_ids", batchId)
-          }
-        }
-    }
-  }
-
   /** The SemDeDup view after every landed batch — one row per vector,
     * (idCol, cluster, rep), row-identical to one-shot
     * [[SimilarityOps.semanticDedupAssigned]] over the union with the
@@ -507,13 +410,13 @@ object IncrementalDedupOps {
     val snap = spark.read
       .parquet(s"$stateDir/clusters/batch=${landed.max}")
       .select(col("doc_id").as("id"), col("cluster").as("rep0"))
-    tombstones(spark, stateDir) match {
+    BatchState.readTombstones(spark, stateDir, DelIdsTables) match {
       case None =>
         assign.join(snap, Seq("id"), "left")
           .select(col("id").as(idCol), col("cluster"),
             coalesce(col("rep0"), col("id")).as("rep"))
       case Some(d) =>
-        // takedown semantics ([[deleteEmbeddings]]): deleted vectors
+        // takedown semantics ([[StateRoot.delete]]): deleted vectors
         // leave the view, components never split (the historical comp
         // label — the pre-deletion min — keys the group even when that
         // member is gone), and each component re-elects its smallest
@@ -535,11 +438,15 @@ object IncrementalDedupOps {
 
   /** The image near-dup family's [[StateRoot]] declaration: band index
     * and edges are additive facts; purge drops the deleted ids' band
-    * rows and every edge touching them.
+    * rows and every edge touching them. Near-dup pairs are PAIRWISE
+    * facts, so deletion is exact: [[imagePairs]] after deleting `d` is
+    * row-identical to one-shot [[DedupOps.imageNearDupPairs]] over the
+    * union minus `d`, and later [[ingestImageShard]]s stop matching the
+    * deleted images' stored bands.
     */
   val Images: StateFamily = StateFamily("image",
     additiveTables = ImageTables, delTables = DelIdsTables,
-    delete = deleteImages, bucketColumns = Seq("bands" -> "id"),
+    liveIds = "bands" -> "id", bucketColumns = Seq("bands" -> "id"),
     purgeFold = Some { (_, _, deleted) =>
       val t: (String, DataFrame) => DataFrame = {
         case ("bands", df) => df.join(deleted, Seq("id"), "left_anti")
@@ -561,11 +468,15 @@ object IncrementalDedupOps {
     * out of assignments and edges and rewrites the component SNAPSHOT
     * with each component's re-elected surviving representative, so the
     * purged directory is self-contained: the plain [[semanticDedupView]]
-    * path reproduces exactly the tombstoned view.
+    * path reproduces exactly the tombstoned view. Component structure
+    * is history, so deletion is takedown-shaped, not a re-clustering:
+    * deleted vectors leave the view, clusters never split, a deleted
+    * representative re-elects the smallest survivor, and later
+    * [[ingestEmbeddingShard]]s stop matching the deleted vectors.
     */
   val Embeddings: StateFamily = StateFamily("embedding",
     additiveTables = Seq("assign", "edges"), delTables = DelIdsTables,
-    delete = deleteEmbeddings, snapshotTables = Seq("clusters"),
+    liveIds = "assign" -> "id", snapshotTables = Seq("clusters"),
     generationTables = Seq("centroids"),
     purgeFold = Some { (spark, stateDir, deleted) =>
       val landed = landedBatchIds(spark, stateDir, EmbTables, None)

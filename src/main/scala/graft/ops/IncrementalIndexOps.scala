@@ -122,109 +122,6 @@ object IncrementalIndexOps {
   private[graft] val DelTables =
     Seq("del_ids", "del_tokstats", "del_globals")
 
-  private def delDir(stateDir: String): String =
-    BatchState.deletionRoot(stateDir)
-
-  /** Retract documents from the inverted-index state — the curation
-    * composition (dedup losers, takedowns) that an append-only index
-    * cannot express without a rebuild. BM25's statistics are additive,
-    * so a deletion is a NEGATIVE-delta batch: per-token −df for the
-    * deleted docs' vocabularies and one −(n_docs, totlen) row, both
-    * derived from the STORED postings/doclen (text is never re-read);
-    * the doc ids land in a tombstone set that [[bm25Search]] anti-joins
-    * against postings and doclen. Deletion batches carry their own
-    * ascending id space under `<stateDir>/_deletes` — idempotent per
-    * (stateDir, batchId), in-order enforced, and ids not currently
-    * indexed (or already tombstoned) contribute nothing, so a replay or
-    * an over-broad deletion set can never push a statistic negative.
-    *
-    * Contract note: deletion is by id and permanent for that id —
-    * corpus ids are unique and never reused (the family's standing
-    * ascending-id assumption); re-introducing a deleted document means
-    * ingesting it under a fresh id.
-    *
-    * IO shape: computing the deltas is one column-pruned scan of the
-    * accumulated postings semi-joined by the (tiny, broadcast) deletion
-    * set — per DELETION BATCH, not per search. At 100 TB bucket the
-    * postings by id ([[graft.sinks.ParquetSink.writeBucketed]]) so the
-    * semi-join prunes to the deleted ids' buckets; deletions being rare
-    * relative to searches is what makes scan-at-delete the right side
-    * of the trade (the search path pays only the tombstone anti-join,
-    * and [[StateRoot.purge]] retires even that). Concurrent callers use
-    * [[StateRoot.delete]], which chooses the batch id inside the lease.
-    */
-  def deleteTextDocs(spark: SparkSession, dels: DataFrame, idCol: String,
-      root: String, batchId: Long): Unit = {
-    val stateDir = BatchState.resolveGeneration(spark, root)
-    // BOTH leases: the parent's (mutual exclusion with ingest and with
-    // the main-table compaction) and the deletion root's own (mutual
-    // exclusion with compactState(delDir), which holds only that one —
-    // without it a landing tombstone batch could be destroyed as a
-    // "crashed prior attempt" by a concurrent delete-ledger compaction)
-    BatchState.withLease(spark, stateDir) {
-      val landed = landedBatchIds(spark, stateDir, Bm25Tables, None)
-      require(landed.nonEmpty,
-        s"no landed batches under $stateDir — nothing to delete from")
-      val asked = dels.select(col(idCol).as("id")).distinct()
-      // only ids that are indexed AND not already tombstoned produce
-      // deltas — double-deletes and unknown ids are exact no-ops. On a
-      // bucketed directory ([[StateRoot.bucket]]) both probes scan only
-      // the asked ids' buckets
-      val indexed = asked.join(
-        BatchState.readBatchesPrunedBy(spark, stateDir, "doclen", landed,
-          asked, "id").get, Seq("id"),
-        "left_semi")
-      // a deletion that would be a COMPLETE no-op must not create the
-      // deletion root on a pristine directory (whose searches would pay
-      // the deletion listing forever after)
-      if (BatchState.hasDeletionRoot(spark, stateDir) || !indexed.isEmpty)
-        BatchState.withLease(spark, delDir(stateDir)) {
-        BatchState.healPurge(spark, stateDir, DelTables)
-        if (!BatchState.allLanded(spark, delDir(stateDir), DelTables,
-            batchId)) {
-          val delLanded =
-            landedBatchIds(spark, delDir(stateDir), DelTables, None)
-          requireInOrder(delLanded, batchId)
-          val newDel = readBatches(spark, delDir(stateDir), "del_ids",
-              delLanded) match {
-            case Some(prev) => indexed.join(prev, Seq("id"), "left_anti")
-            case None => indexed
-          }
-          // pruned by `asked` (a superset of newDel's buckets): the
-          // bucket set comes from the caller's tiny id frame, never
-          // from re-evaluating the newDel join
-          val delPostings = BatchState.readBatchesPrunedBy(spark,
-              stateDir, "postings", landed, asked, "id")
-            .get.join(newDel, Seq("id"), "left_semi")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            // `ceiling` records the max MAIN batch id this delta was
-            // derived against: an as-of cut at or above every landed
-            // ceiling is consistent with the interleaved (ingest,
-            // delete) ledger order — the deltas only reference docs in
-            // batches ≤ ceiling — which is what lets the audit verb
-            // serve tombstoned-but-unpurged directories for ALIGNED
-            // cuts instead of refusing outright.
-            // The three delta tables derive from the one persisted
-            // probe and land independently — overlapped
-            // ([[BatchState.inParallel]])
-            BatchState.inParallel(Seq(
-              () => land(newDel, delDir(stateDir), "del_ids", batchId),
-              () => land(delPostings.groupBy(col("token"))
-                .agg((-count(lit(1))).as("df")),
-                delDir(stateDir), "del_tokstats", batchId),
-              () => land(delPostings.groupBy(col("id"))
-                .agg(sum(col("tf")).as("dl"))
-                .agg((-count(lit(1))).as("n_docs"),
-                  (-coalesce(sum(col("dl")), lit(0L))).as("totlen"))
-                .withColumn("ceiling", lit(landed.max)),
-                delDir(stateDir), "del_globals", batchId)))
-          } finally delPostings.unpersist(blocking = false)
-        }
-        }
-    }
-  }
-
   /** BM25 top-k over the accumulated index — row-identical to
     * [[RetrievalOps.bm25TopK]] on the union of every ingested shard
     * MINUS every tombstoned document (same integer-rational scoring,
@@ -263,12 +160,13 @@ object IncrementalIndexOps {
       asOfBatch: Option[Long]): DataFrame = {
     require(k >= 1 && k <= 1000, s"k in 1..1000, got $k")
     val stateDir = BatchState.resolveGeneration(spark, root)
+    val delRoot = BatchState.deletionRoot(stateDir)
     val delLanded =
       if (!BatchState.hasDeletionRoot(spark, stateDir)) Seq.empty[Long]
       // a committed-but-unretired purge already folded every delta into
       // the merged tables — the surviving tombstones must NOT re-apply
       else if (BatchState.purgeCommitted(spark, stateDir)) Seq.empty[Long]
-      else landedBatchIds(spark, delDir(stateDir), DelTables, None)
+      else landedBatchIds(spark, delRoot, DelTables, None)
     asOfBatch.foreach { c =>
       // tombstone deltas are derived against the postings AT DELETE
       // TIME, so an arbitrary cut cannot apply them consistently — but
@@ -281,8 +179,7 @@ object IncrementalIndexOps {
       // all-no-op deletion history never refuses a cut.)
       if (delLanded.nonEmpty &&
           BatchState.readTombstones(spark, stateDir, DelTables).nonEmpty) {
-        val g = readBatches(spark, delDir(stateDir), "del_globals",
-          delLanded).get
+        val g = readBatches(spark, delRoot, "del_globals", delLanded).get
         val maxCeil =
           if (!g.columns.contains("ceiling")) Long.MaxValue
           else {
@@ -305,7 +202,7 @@ object IncrementalIndexOps {
       s"no landed batches under $stateDir" + asOfBatch.map(b =>
         s" at or below batch $b (compaction may have folded the " +
           "history you are asking for)").getOrElse(""))
-    val deleted = readBatches(spark, delDir(stateDir), "del_ids", delLanded)
+    val deleted = readBatches(spark, delRoot, "del_ids", delLanded)
     def live(df: DataFrame): DataFrame = deleted match {
       case Some(d) => df.join(d, Seq("id"), "left_anti")
       case None => df
@@ -317,15 +214,13 @@ object IncrementalIndexOps {
     // token whose postings are all tombstoned sums to 0 and drops —
     // the exact dfTab a from-scratch build over the survivors produces
     val tokAll = readBatches(spark, stateDir, "tokstats", landed).get
-    val dfTab = (readBatches(spark, delDir(stateDir), "del_tokstats",
-        delLanded) match {
+    val dfTab = (readBatches(spark, delRoot, "del_tokstats", delLanded) match {
       case Some(d) => tokAll.unionAll(d)
       case None => tokAll
     }).groupBy(col("token")).agg(sum(col("df")).as("df"))
       .where(col("df") > 0)
     val globAll = readBatches(spark, stateDir, "globals", landed).get
-    val globals = (readBatches(spark, delDir(stateDir), "del_globals",
-        delLanded) match {
+    val globals = (readBatches(spark, delRoot, "del_globals", delLanded) match {
       // project: the delta rows also carry the alignment `ceiling`
       case Some(d) => globAll.unionAll(d.select("n_docs", "totlen"))
       case None => globAll
@@ -378,49 +273,6 @@ object IncrementalIndexOps {
   // IVF deletions carry no statistics (search is pure candidate
   // ranking), so the tombstone root holds only the id set
   private[graft] val VecDelTables = Seq("del_ids")
-
-  /** Retract vectors from the IVF index — the tombstone counterpart of
-    * [[deleteTextDocs]] for the vector modality, simpler because IVF
-    * search carries no corpus statistics: the deletion batch is just
-    * the id set, anti-joined against the accumulated cells at search.
-    * Same contracts: own BatchState root (`<stateDir>/_deletes`), own
-    * ascending batch ids, idempotent per (stateDir, batchId), unknown
-    * and already-tombstoned ids are exact no-ops, deletion is by id and
-    * permanent (ids are never reused).
-    */
-  def deleteVectors(spark: SparkSession, dels: DataFrame, idCol: String,
-      root: String, batchId: Long): Unit = {
-    val stateDir = BatchState.resolveGeneration(spark, root)
-    BatchState.withLease(spark, stateDir) {
-      val landed = landedBatchIds(spark, stateDir, IvfTables, None)
-      require(landed.nonEmpty,
-        s"no landed batches under $stateDir — nothing to delete from")
-      val asked = dels.select(col(idCol).as("id")).distinct()
-      // bucketed directories ([[StateRoot.bucket]]) scan only the
-      // asked ids' buckets of the cell postings
-      val indexed = asked.join(
-        BatchState.readBatchesPrunedBy(spark, stateDir, "cells", landed,
-          asked, "id").get
-          .select(col("cid").as("id")), Seq("id"), "left_semi")
-      // never create the deletion root for a complete no-op
-      if (BatchState.hasDeletionRoot(spark, stateDir) || !indexed.isEmpty)
-        BatchState.withLease(spark, delDir(stateDir)) {
-          BatchState.healPurge(spark, stateDir, VecDelTables)
-          if (!BatchState.allLanded(spark, delDir(stateDir), VecDelTables,
-              batchId)) {
-            val delLanded =
-              landedBatchIds(spark, delDir(stateDir), VecDelTables, None)
-            requireInOrder(delLanded, batchId)
-            val newDel = readBatches(spark, delDir(stateDir), "del_ids",
-                delLanded) match {
-              case Some(prev) => indexed.join(prev, Seq("id"), "left_anti")
-              case None => indexed
-            }
-            land(newDel, delDir(stateDir), "del_ids", batchId)
-          }
-        }
-    }
-  }
 
   /** Offline codebook REFIT + state-only reindex — the operator the
     * frozen-codebook contract points at when the embedding distribution
@@ -536,7 +388,7 @@ object IncrementalIndexOps {
           "history you are asking for)").getOrElse(""))
     val cents = BatchState.readCodebook(spark, stateDir)
     val allCells = readBatches(spark, stateDir, "cells", landed).get
-    // tombstones ([[deleteVectors]]): anti-join the effective set (None
+    // tombstones ([[StateRoot.delete]]): anti-join the effective set (None
     // when absent, all-no-op, or already folded by a committed purge)
     val cells = BatchState.readTombstones(spark, stateDir,
         VecDelTables) match {
@@ -569,7 +421,26 @@ object IncrementalIndexOps {
     */
   val Bm25: StateFamily = StateFamily("bm25",
     additiveTables = Bm25Tables, delTables = DelTables,
-    delete = deleteTextDocs,
+    liveIds = "doclen" -> "id",
+    // the negative-delta batch: per-token −df for the deleted docs'
+    // vocabularies and one −(n_docs, totlen) row, derived from the
+    // STORED postings (text is never re-read) in one probe per
+    // deletion batch — deletions are rare next to searches, so the
+    // scan belongs here and search pays only the anti-join (purge
+    // retires even that). `ceiling` records the
+    // max main batch id the delta was derived against — an as-of cut
+    // at or above every landed ceiling is consistent with the
+    // interleaved (ingest, delete) order, so [[bm25Search]] serves
+    // ALIGNED cuts of tombstoned-but-unpurged directories
+    tombstoneDeltas = Some(StateFamily.TombstoneDeltas("postings",
+      (delPostings, landed) => Seq(
+        "del_tokstats" -> delPostings.groupBy(col("token"))
+          .agg((-count(lit(1))).as("df")),
+        "del_globals" -> delPostings.groupBy(col("id"))
+          .agg(sum(col("tf")).as("dl"))
+          .agg((-count(lit(1))).as("n_docs"),
+            (-coalesce(sum(col("dl")), lit(0L))).as("totlen"))
+          .withColumn("ceiling", lit(landed.max))))),
     bucketColumns = Seq("postings" -> "id", "doclen" -> "id"),
     purgeFold = Some { (spark, stateDir, deleted) =>
       val landed = landedBatchIds(spark, stateDir, Bm25Tables, None)
@@ -598,7 +469,7 @@ object IncrementalIndexOps {
     */
   val Ivf: StateFamily = StateFamily("ivf",
     additiveTables = IvfTables, delTables = VecDelTables,
-    delete = deleteVectors, generationTables = Seq("centroids"),
+    liveIds = "cells" -> "cid", generationTables = Seq("centroids"),
     bucketColumns = Seq("cells" -> "cid"),
     purgeFold = Some { (_, _, deleted0) =>
       val deleted = deleted0.select(col("id").as("cid"))

@@ -2,11 +2,13 @@ package graft.ops
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 
 /** One incremental-state family, declared as data: the tables its
-  * batches land, how its deletion ledger is shaped and applied, and
-  * which optional lifecycle verbs it supports. [[StateRoot]] defines
-  * every verb once on top of these declarations.
+  * batches land, where its live ids are held and how its deletion
+  * ledger is shaped, and which optional lifecycle verbs it supports.
+  * [[StateRoot]] defines every verb once on top of these declarations.
   *
   * @param additiveTables per-batch-disjoint facts: compaction
   *   concatenates them, and the streaming ingest guard reads its
@@ -15,8 +17,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   of all history (compaction keeps only that batch).
   * @param delTables the deletion ledger's tables under
   *   `<stateDir>/_deletes`.
-  * @param delete the family's deletion op for an explicit tombstone
-  *   batch id: (spark, ids, idCol, stateDir, batchId).
+  * @param liveIds (table, id column) holding the ids a deletion can
+  *   retract; asked ids not found there are exact no-ops.
+  * @param tombstoneCol the id column of the `del_ids` table.
+  * @param tombstoneDeltas the statistics a deletion batch lands next
+  *   to `del_ids` (BM25's negative df/globals); None = ids only.
   * @param generationTables inline state beyond the batch tables that a
   *   superseded generation also holds (the frozen `centroids`).
   * @param bucketColumns (table, id column) pairs [[StateRoot.bucket]]
@@ -33,7 +38,9 @@ final case class StateFamily(
     name: String,
     additiveTables: Seq[String],
     delTables: Seq[String],
-    delete: (SparkSession, DataFrame, String, String, Long) => Unit,
+    liveIds: (String, String),
+    tombstoneCol: String = "id",
+    tombstoneDeltas: Option[StateFamily.TombstoneDeltas] = None,
     snapshotTables: Seq[String] = Seq.empty,
     generationTables: Seq[String] = Seq.empty,
     bucketColumns: Seq[(String, String)] = Seq.empty,
@@ -48,6 +55,14 @@ final case class StateFamily(
 object StateFamily {
   type PurgeFold =
     (SparkSession, String, DataFrame) => (String, DataFrame) => DataFrame
+
+  /** Statistics a deletion batch derives from ONE persisted probe: the
+    * rows of `probeTable` (pruned to the asked ids' buckets) whose id
+    * this batch tombstones. `derive` maps (probe, landed main batch
+    * ids) to the (deletion table, frame) pairs landed beside `del_ids`.
+    */
+  final case class TombstoneDeltas(probeTable: String,
+      derive: (DataFrame, Seq[Long]) => Seq[(String, DataFrame)])
 
   sealed abstract class Verb(val name: String)
   case object Describe extends Verb("describe")
@@ -174,11 +189,11 @@ final case class StateRoot(family: StateFamily, path: String) {
     }
   }
 
-  /** Tombstone `dels` (ids in `idCol`) through the family's delete op,
-    * with the batch id chosen INSIDE the main lease (above everything
-    * landed or promised in the deletion root) — the form concurrent
-    * callers should use: an id chosen outside the lease can be raced to
-    * by another deletion, whose idempotency check then silently absorbs
+  /** Tombstone `dels` (ids in `idCol`) — [[StateRoot.deleteIn]] with
+    * the batch id chosen INSIDE the main lease (above everything landed
+    * or promised in the deletion root) — the form concurrent callers
+    * should use: an id chosen outside the lease can be raced to by
+    * another deletion, whose idempotency check then silently absorbs
     * the loser's ids. The main lease alone protects the choice (every
     * deletion writer takes it first) without creating the deletion root
     * on a directory where this call turns out to be a no-op.
@@ -186,7 +201,7 @@ final case class StateRoot(family: StateFamily, path: String) {
   def delete(spark: SparkSession, dels: DataFrame, idCol: String): Unit = {
     val stateDir = dir(spark)
     withLease(spark, stateDir) {
-      family.delete(spark, dels, idCol, stateDir,
+      StateRoot.deleteIn(spark, family, dels, idCol, stateDir,
         nextTombstoneBatchId(spark, stateDir, family.delTables))
     }
   }
@@ -297,12 +312,85 @@ final case class StateRoot(family: StateFamily, path: String) {
 
 object StateRoot {
 
+  import BatchState._
+
   /** [[StateRoot.landed]] against an already-resolved state directory —
     * the replay check of the family ingest ops, which resolve once at
     * their own entry.
     */
   private[graft] def landedIn(spark: SparkSession, family: StateFamily,
       stateDir: String, batchId: Long): Boolean =
-    BatchState.allLanded(spark, stateDir, family.batchTables, batchId) &&
-      (!family.needsCodebook || BatchState.hasCodebook(spark, stateDir))
+    allLanded(spark, stateDir, family.batchTables, batchId) &&
+      (!family.needsCodebook || hasCodebook(spark, stateDir))
+
+  /** The tombstone-landing protocol of every family, against an
+    * already-resolved state directory and an explicit tombstone batch
+    * id (the streaming harnesses and replays choose it; concurrent
+    * callers use [[StateRoot.delete]]). The asked ids held in the
+    * family's live-id table that no earlier batch tombstoned land in
+    * `<stateDir>/_deletes/del_ids/batch=<batchId>`, beside the family's
+    * [[StateFamily.TombstoneDeltas]]; readers anti-join them
+    * ([[BatchState.readTombstones]]) until [[StateRoot.purge]] folds
+    * them away.
+    *
+    *  - BOTH leases: the main one (mutual exclusion with ingest and the
+    *    main-table compaction) and the deletion root's own (mutual
+    *    exclusion with its ledger compaction, which holds only that one
+    *    — without it a landing batch could be destroyed as a "crashed
+    *    prior attempt").
+    *  - A deletion that would be a complete no-op never creates the
+    *    deletion root: a pristine directory keeps its one-exists-probe
+    *    read path.
+    *  - A crashed purge is finished or discarded first
+    *    ([[BatchState.healPurge]]): tombstones landed into a
+    *    committed-but-unretired root would be wiped by the next healer.
+    *  - Idempotent per (stateDir, batchId), in-order enforced, and ids
+    *    not held or already tombstoned contribute nothing — so a replay
+    *    or an over-broad set can never push a statistic negative.
+    *
+    * Deletion is by id and permanent for that id (ids are never
+    * reused). On a bucketed directory ([[StateRoot.bucket]]) the
+    * live-id and delta probes scan only the asked ids' buckets.
+    */
+  private[graft] def deleteIn(spark: SparkSession, family: StateFamily,
+      dels: DataFrame, idCol: String, stateDir: String,
+      batchId: Long): Unit = withLease(spark, stateDir) {
+    val landed = landedBatchIds(spark, stateDir, family.batchTables, None)
+    require(landed.nonEmpty,
+      s"no landed batches under $stateDir — nothing to delete from")
+    val id = family.tombstoneCol
+    val (liveTable, liveCol) = family.liveIds
+    val asked = dels.select(col(idCol).as(id)).distinct()
+    def pruned(table: String) =
+      readBatchesPrunedBy(spark, stateDir, table, landed, asked, id).get
+    val held = asked.join(pruned(liveTable).select(col(liveCol).as(id)),
+      Seq(id), "left_semi")
+    if (hasDeletionRoot(spark, stateDir) || !held.isEmpty) {
+      val delRoot = deletionRoot(stateDir)
+      withLease(spark, delRoot) {
+        healPurge(spark, stateDir, family.delTables)
+        if (!allLanded(spark, delRoot, family.delTables, batchId)) {
+          val delLanded = landedBatchIds(spark, delRoot, family.delTables,
+            None)
+          requireInOrder(delLanded, batchId)
+          val newDel = readBatches(spark, delRoot, "del_ids", delLanded) match {
+            case Some(prev) => held.join(prev, Seq(id), "left_anti")
+            case None => held
+          }
+          val probed = family.tombstoneDeltas.map(d => d ->
+            pruned(d.probeTable).join(newDel, Seq(id), "left_semi")
+              .persist(StorageLevel.MEMORY_AND_DISK))
+          try {
+            val deltas = probed.toSeq.flatMap { case (d, probe) =>
+              d.derive(probe, landed) }
+            // every table derives from newDel (and the one persisted
+            // probe) and lands independently — overlapped
+            inParallel((("del_ids" -> newDel) +: deltas).map {
+              case (t, df) => () => land(df, delRoot, t, batchId)
+            })
+          } finally probed.foreach(_._2.unpersist(blocking = false))
+        }
+      }
+    }
+  }
 }

@@ -2909,7 +2909,7 @@ object Battery {
          |SELECT qid, rank, doc_id, score, n_match FROM rr WHERE rank <= 10""".stripMargin
     })
 
-  /** c4 — TAKEDOWN ([[graft.ops.IncrementalCurateOps.takedown]]): the
+  /** c4 — TAKEDOWN ([[graft.ops.StateRoot.delete]]): the
     * compliance write path — documents permanently removed from the
     * curated corpus by tombstone, duplicates they suppressed staying
     * suppressed and survivors keeping their pack assignments (the
@@ -2931,7 +2931,7 @@ object Battery {
         "doc_id", "text", stateDir, 0L)
       I.ingestShard(s, docs.where(col("doc_id") > mid),
         "doc_id", "text", stateDir, 1L)
-      I.takedown(s,
+      graft.ops.StateRoot.deleteIn(s, I.Curation,
         docs.where(pmod(col("doc_id"), lit(11)) === 0).select("doc_id"),
         "doc_id", stateDir, 0L)
       I.curated(s, stateDir)
@@ -2966,7 +2966,7 @@ object Battery {
         "doc_id", "text", stateDir, 0L)
       I.ingestShard(s, docs.where(col("doc_id") > mid),
         "doc_id", "text", stateDir, 1L)
-      I.takedown(s,
+      graft.ops.StateRoot.deleteIn(s, I.Curation,
         docs.where(pmod(col("doc_id"), lit(11)) === 0).select("doc_id"),
         "doc_id", stateDir, 0L)
       I.curated(s, stateDir, I.CurateConfig(), asOfBatch = Some(0L))
@@ -3505,7 +3505,7 @@ object Battery {
     })
 
   /** n14 — IVF TOMBSTONES
-    * ([[graft.ops.IncrementalIndexOps.deleteVectors]]): vectors
+    * ([[graft.ops.StateRoot.delete]]): vectors
     * retracted from the incremental IVF index by tombstone — the
     * frozen codebook and every surviving cell posting untouched, the
     * deleted ids anti-joined at search. The oracle is n12's CTE chain
@@ -3529,7 +3529,7 @@ object Battery {
         "vec_id", "embedding", stateDir, 0L, nCells = 4, iters = 2)
       I.ingestVectorShard(s, emb.where(col("vec_id") > mid),
         "vec_id", "embedding", stateDir, 1L, nCells = 4, iters = 2)
-      I.deleteVectors(s,
+      graft.ops.StateRoot.deleteIn(s, I.Ivf,
         emb.where(pmod(col("vec_id"), lit(9)) === 0).select("vec_id"),
         "vec_id", stateDir, 0L)
       val qset = emb.where(col("vec_id") < 10)
@@ -4222,7 +4222,7 @@ object Battery {
            |SELECT qid, rank, doc_id, score, n_match FROM r WHERE rank <= 10""".stripMargin))
 
   /** x37 — BM25 TOMBSTONES
-    * ([[graft.ops.IncrementalIndexOps.deleteTextDocs]]): the curation
+    * ([[graft.ops.StateRoot.delete]]): the curation
     * composition an append-only index cannot express — ingest shard 1,
     * RETRACT a subset of it (negative-delta df/N/totlen batch + an
     * anti-joined tombstone set, derived from stored postings, text
@@ -4246,7 +4246,7 @@ object Battery {
       val mid = (r.getLong(0) + r.getLong(1)) / 2
       I.ingestTextShard(s, corpus.where(col("doc_id") <= mid),
         "doc_id", "text", stateDir, batchId = 0L)
-      I.deleteTextDocs(s,
+      graft.ops.StateRoot.deleteIn(s, I.Bm25,
         corpus.where(col("doc_id") <= mid &&
           pmod(col("doc_id"), lit(13)) === 0).select("doc_id"),
         "doc_id", stateDir, batchId = 0L)
@@ -4427,7 +4427,7 @@ object Battery {
         col("doc_id") > cut1 && col("doc_id") <= cut2),
         "doc_id", "text", stateDir, batchId = 1L)
       // derived against batches {0,1} -> recorded ceiling 1
-      I.deleteTextDocs(s,
+      graft.ops.StateRoot.deleteIn(s, I.Bm25,
         corpus.where(col("doc_id") <= cut2 &&
           pmod(col("doc_id"), lit(13)) === 0).select("doc_id"),
         "doc_id", stateDir, batchId = 0L)
@@ -6086,7 +6086,7 @@ object Battery {
            |FROM p WHERE hamming <= 3""".stripMargin))
 
   /** m15 — IMAGE TOMBSTONES
-    * ([[graft.ops.IncrementalDedupOps.deleteImages]]): images retracted
+    * ([[graft.ops.StateRoot.delete]]): images retracted
     * from the incremental near-dup state. Near-dup pairs are PAIRWISE
     * facts, so deletion here is EXACT — the oracle is m11/m12's
     * analytic dHash chain restricted to the surviving images (`doc_id
@@ -6115,7 +6115,7 @@ object Battery {
       graft.ops.IncrementalDedupOps.ingestImageShard(s,
         media.where(col("doc_id") > mid), "doc_id", "img", stateDir,
         batchId = 1L, maxDist = 3)
-      graft.ops.IncrementalDedupOps.deleteImages(s,
+      graft.ops.StateRoot.deleteIn(s, graft.ops.IncrementalDedupOps.Images,
         ids.where(pmod(col("doc_id"), lit(7)) === 1), "doc_id",
         stateDir, 0L)
       graft.ops.IncrementalDedupOps.imagePairs(s, stateDir)

@@ -277,7 +277,7 @@ object Streaming {
     *     state (`<stateDir>/index`,
     *     [[graft.ops.IncrementalIndexOps.ingestTextShard]]);
     *  3. documents the shard DEMOTED retracted from the index by
-    *     tombstone ([[graft.ops.IncrementalIndexOps.deleteTextDocs]]) —
+    *     tombstone ([[graft.ops.StateRoot.delete]]) —
     *     a new shard can merge two earlier near-dup clusters, demoting
     *     an already-indexed doc; append-only composition would leave it
     *     searchable forever.
@@ -432,8 +432,8 @@ object Streaming {
       val delId = graft.ops.BatchState.mapExternalBatchId(
         s, delRoot, extKey, graft.ops.IncrementalIndexOps.DelTables)
       if (delId != graft.ops.BatchState.ExternalIdAlreadyLanded)
-        graft.ops.IncrementalIndexOps.deleteTextDocs(
-          s, nonReps, idCol, indexDir, delId)
+        StateRoot.deleteIn(s, graft.ops.IncrementalIndexOps.Bm25, nonReps,
+          idCol, indexDir, delId)
     }
   }
 
@@ -463,7 +463,7 @@ object Streaming {
 
   /** Streaming DELETION — the compliance write path as a continuous
     * feed: each micro-batch of ids (in `idCol`) landing in `watchDir` is
-    * applied through the root family's delete op to its deletion ledger
+    * applied through the tombstone protocol to the root's deletion ledger
     * with the same exactly-once contract as the ingest harnesses, wired
     * through the deletion root's OWN `_input` ledger (after every
     * drain, reads equal the batch [[graft.ops.StateRoot.delete]] fed the
@@ -473,7 +473,7 @@ object Streaming {
     *    which tombstone batch id the micro-batch used, so a replay
     *    reuses it (and a `_LANDED`-confirmed replay skips the whole
     *    postings probe);
-    *  - the mapping is written AFTER the delete op ran — an op that
+    *  - the mapping is written AFTER the deletion ran — one that
     *    turns out to be a complete no-op never creates the deletion
     *    root, so pristine directories keep their one-exists-probe
     *    search fast path;
@@ -481,13 +481,13 @@ object Streaming {
     *    included — legitimate lifecycle, not state loss: the next
     *    micro-batch simply starts a fresh root, and a replay of a
     *    pre-purge batch is a content no-op (its ids are no longer held —
-    *    every family delete op's no-op contract);
+    *    the tombstone protocol's no-op contract);
     *  - crash-mid-delete replays overwrite the same tombstone batch id
     *    (a half-landed batch is invisible to the all-or-nothing
     *    listing, so the id is re-chosen); a crash between the apply
     *    and the mapping write converges through one empty delta batch.
     *
-    * Deletion ops are content-idempotent (unknown / already-tombstoned
+    * Deletions are content-idempotent (unknown / already-tombstoned
     * ids contribute nothing), which is what makes this ledger weaker
     * than ingest's fingerprint ledger sufficient: the ledger here buys
     * replay SKIPS and stable ids, never correctness.
@@ -500,7 +500,8 @@ object Streaming {
       (df, ckptId) =>
         deletionMicroBatch(df, ckptId, root.path, root.family.delTables) {
           (d, dir, eff) =>
-            root.family.delete(d.sparkSession, d, idCol, dir, eff)
+            StateRoot.deleteIn(d.sparkSession, root.family, d, idCol, dir,
+              eff)
         }
     }
 
@@ -508,11 +509,12 @@ object Streaming {
     * drive crash/replay/purge interleavings with chosen checkpoint
     * ids. Returns the tombstone batch id used, or -1 when the
     * confirmed mapping skipped the batch. The closure receives the
-    * RESOLVED state directory and must apply to it verbatim: the
-    * tombstone batch id was chosen for that generation, and a cutover
-    * flipping the root between the harness's resolve and the op's own
-    * would otherwise land the id against a different generation's
-    * ledger (silently skipping or colliding).
+    * RESOLVED state directory and must apply to it verbatim (as
+    * [[graft.ops.StateRoot.deleteIn]] does): the tombstone batch id was
+    * chosen for that generation, and a cutover flipping the root
+    * between the harness's resolve and a second one would otherwise
+    * land the id against a different generation's ledger (silently
+    * skipping or colliding).
     */
   private[graft] def deletionMicroBatch(df: DataFrame, ckptId: Long,
       root: String, delTables: Seq[String])(
@@ -662,19 +664,12 @@ object Streaming {
       root: String, coreTables: Seq[String], idCol: String,
       composed: Boolean)(
       ingest: (DataFrame, Long, Long) => Unit): Long = {
-    val stateDir = graft.ops.BatchState
-      .resolveGeneration(df.sparkSession, root)
-    graft.ops.BatchState.withLease(df.sparkSession, stateDir) {
+    val B = graft.ops.BatchState
+    val stateDir = B.resolveGeneration(df.sparkSession, root)
+    B.withLease(df.sparkSession, stateDir) {
       val s = df.sparkSession
-      val conf = s.sparkContext.hadoopConfiguration
-      val ledgerGlob = new org.apache.hadoop.fs.Path(
-        s"$stateDir/_input/batch=*/_SUCCESS")
-      val fs = ledgerGlob.getFileSystem(conf)
-      val found = fs.globStatus(ledgerGlob)
-      val recorded =
-        if (found == null) Seq.empty[Long]
-        else found.toSeq.flatMap(st => scala.util.Try(st.getPath.getParent
-          .getName.stripPrefix("batch=").toLong).toOption).sorted
+      val ledger = B.inputLedger(s, stateDir)
+      val recorded = ledger.map(_._1)
       require(recorded.lastOption.forall(ckptId >= _),
         s"micro-batch $ckptId is OLDER than the newest recorded " +
           s"micro-batch ${recorded.last} in $stateDir — the stream " +
@@ -684,6 +679,7 @@ object Streaming {
           "checkpoint.")
       val fpDir = s"$stateDir/_input/batch=$ckptId"
       val fpPath = new org.apache.hadoop.fs.Path(fpDir)
+      val fs = fpPath.getFileSystem(s.sparkContext.hadoopConfiguration)
       // an UNCOMMITTED entry dir at this ckpt id is a crashed ledger
       // (re)write of this very micro-batch — not a lost state dir; the
       // fresh path below recomputes and overwrites it, so a healthy
@@ -709,9 +705,8 @@ object Streaming {
       val fp = Seq(agg.getLong(0),
         if (agg.isNullAt(1)) 0L else agg.getLong(1),
         if (agg.isNullAt(2)) 0L else agg.getLong(2))
-      def newestLanded: Long = graft.ops.BatchState
-        .landedBatchIds(s, stateDir, coreTables, None).lastOption
-        .getOrElse(-1L)
+      def newestLanded: Long = B.landedBatchIds(s, stateDir, coreTables,
+        None).lastOption.getOrElse(-1L)
       def writeEntry(eff: Long): Unit = {
         import s.implicits._
         Seq((fp(0), fp(1), fp(2), eff, composed))
@@ -720,8 +715,7 @@ object Streaming {
           .coalesce(1).write
           .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(fpDir)
       }
-      def confirm(): Unit = fs.create(
-        new org.apache.hadoop.fs.Path(fpPath, "_LANDED"), true).close()
+      def confirm(): Unit = B.markLanded(fs, fpPath)
       if (fs.exists(new org.apache.hadoop.fs.Path(s"$fpDir/_SUCCESS"))) {
         val stored = s.read.parquet(fpDir).head
         // entries written before the sum fold existed carry two fp
@@ -753,8 +747,7 @@ object Streaming {
           // it or its id space is open; only a compaction that moved
           // the landed set past an unlanded promise forces a fresh id.
           val eff =
-            if (graft.ops.BatchState.allLanded(
-                s, stateDir, coreTables, storedEff) ||
+            if (B.allLanded(s, stateDir, coreTables, storedEff) ||
               newestLanded < storedEff) storedEff
             else newestLanded + 1
           if (eff != storedEff) writeEntry(eff)
@@ -765,14 +758,7 @@ object Streaming {
       } else {
         val eff = if (newestLanded >= 0) newestLanded + 1 else ckptId
         writeEntry(eff)
-        // retire ledger entries the engine can never replay again
-        // (it only ever re-delivers the LAST micro-batch): without
-        // this the _input dir regrows the very small-file problem
-        // compactState retires for the data tables
-        recorded.filter(_ < ckptId).foreach { old =>
-          fs.delete(new org.apache.hadoop.fs.Path(
-            s"$stateDir/_input/batch=$old"), true)
-        }
+        B.retireLedgerBelow(s, ckptId, ledger)
         ingest(df, eff, ckptId)
         confirm()
         eff

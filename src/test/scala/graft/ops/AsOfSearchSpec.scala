@@ -191,7 +191,7 @@ class AsOfSearchSpec extends AnyFunSuite {
     I.ingestTextShard(spark, corpus.where(
       col("doc_id") > cut1 && col("doc_id") <= cut2),
       "doc_id", "text", state, 1L)
-    I.deleteTextDocs(spark, victims, "doc_id", state, 0L) // ceiling 1
+    StateRoot.deleteIn(spark, I.Bm25, victims, "doc_id", state, 0L) // ceiling 1
     I.ingestTextShard(spark, corpus.where(col("doc_id") > cut2),
       "doc_id", "text", state, 2L)
     // the twin is exactly the moment the cut names: batches {0,1} plus
@@ -201,7 +201,7 @@ class AsOfSearchSpec extends AnyFunSuite {
     I.ingestTextShard(spark, corpus.where(
       col("doc_id") > cut1 && col("doc_id") <= cut2),
       "doc_id", "text", twin, 1L)
-    I.deleteTextDocs(spark, victims, "doc_id", twin, 0L)
+    StateRoot.deleteIn(spark, I.Bm25, victims, "doc_id", twin, 0L)
     assert(sortedRows(I.bm25Search(spark, state, queries, "qid",
       "text", 10, asOfBatch = Some(1L))) ==
       sortedRows(I.bm25Search(spark, twin, queries, "qid", "text", 10)),

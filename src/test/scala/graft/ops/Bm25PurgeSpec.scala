@@ -13,9 +13,10 @@ import graft.etl.SparkTestSession
   * anti-joins the tombstoned docs out of postings/doclen, recomputes
   * the statistics from the survivors, and retires the deletion root —
   * search results identical before/after, bytes actually gone, and
-  * the two crash windows of the cross-root protocol (marker written
-  * but flip crashed; flip committed but retirement crashed) both
-  * resolve correctly for readers and are healed by the next writer.
+  * the three crash windows of the cross-root protocol (marker written
+  * but flip crashed; flip committed but retirement crashed; marker
+  * created but never written) all resolve correctly for readers and
+  * are healed by the next writer.
   */
 class Bm25PurgeSpec extends AnyFunSuite {
 
@@ -54,7 +55,7 @@ class Bm25PurgeSpec extends AnyFunSuite {
       pmod(col("doc_id"), lit(13)) === 0).select("doc_id")
     I.ingestTextShard(spark, corpus.where(col("doc_id") <= mid),
       "doc_id", "text", state, 0L)
-    I.deleteTextDocs(spark, d, "doc_id", state, 0L)
+    StateRoot.deleteIn(spark, I.Bm25, d, "doc_id", state, 0L)
     I.ingestTextShard(spark, corpus.where(col("doc_id") > mid),
       "doc_id", "text", state, 1L)
     val surviving = corpus.where(!(col("doc_id") <= mid &&
@@ -91,7 +92,7 @@ class Bm25PurgeSpec extends AnyFunSuite {
     assert(g == gf, s"purged stats $g must equal a fresh build's $gf")
     // a NEW deletion after the purge works on the clean ledger
     val d2 = surviving.limit(3).select("doc_id")
-    I.deleteTextDocs(spark, d2, "doc_id", state, 0L)
+    StateRoot.deleteIn(spark, I.Bm25, d2, "doc_id", state, 0L)
     val afterD2 = search(state)
     val oneShot = RetrievalOps.bm25TopK(
       surviving.join(d2, Seq("doc_id"), "left_anti"), queries,
@@ -133,7 +134,7 @@ class Bm25PurgeSpec extends AnyFunSuite {
     // and the retirement leaves behind)
     val freshDel = fresh()
     I.ingestTextShard(spark, corpus, "doc_id", "text", freshDel, 0L)
-    I.deleteTextDocs(spark,
+    StateRoot.deleteIn(spark, I.Bm25,
       corpus.limit(500).select("doc_id"), "doc_id", freshDel, 0L)
     for (t <- Seq("del_ids", "del_tokstats", "del_globals"))
       assert(fs.rename(new Path(s"$freshDel/_deletes/$t"),
@@ -145,11 +146,25 @@ class Bm25PurgeSpec extends AnyFunSuite {
       "committed-purge leftovers must not re-subtract deltas")
     // the next writer retires the leftovers and lands its own deletion
     val d2 = surviving.limit(3).select("doc_id")
-    I.deleteTextDocs(spark, d2, "doc_id", state, 0L)
+    StateRoot.deleteIn(spark, I.Bm25, d2, "doc_id", state, 0L)
     assert(!fs.exists(new Path(s"$state/_deletes/.purged_at")))
     val oneShot = RetrievalOps.bm25TopK(
       surviving.join(d2, Seq("doc_id"), "left_anti"), queries,
       "doc_id", "text", "qid", "text", 10).withColumnRenamed("doc_id", "id")
     assert(search(state) == sortedRows(oneShot))
+  }
+
+  test("crash window C — marker created but never written: an empty " +
+      "marker reads as uncommitted, searches keep applying the deltas, " +
+      "and the next compaction removes it") {
+    val (state, _, _) = deletedState()
+    val before = search(state)
+    val marker = new Path(s"$state/_deletes/.purged_at")
+    fs.create(marker, true).close()
+    assert(search(state) == before,
+      "an empty purge marker must not wedge or change reads")
+    StateRoot(I.Bm25, state).compact(spark)
+    assert(!fs.exists(marker), "the next writer discards the empty marker")
+    assert(search(state) == before)
   }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.etl.SparkTestSession
 
 /** Tombstone contract of the incremental BM25 index
-  * ([[IncrementalIndexOps.deleteTextDocs]]): deletions are
+  * ([[StateRoot.delete]]): deletions are
   * negative-delta batches + an anti-joined tombstone set, and search
   * over ingest(S₁) → delete(d ⊂ S₁) → ingest(S₂) is row-identical to
   * one-shot [[RetrievalOps.bm25TopK]] over (S₁ ∪ S₂) \ d — the
@@ -53,7 +53,7 @@ class Bm25TombstoneSpec extends AnyFunSuite {
     val s2 = corpus.where(col("doc_id") > mid)
     val d = s1.where(pmod(col("doc_id"), lit(13)) === 0).select("doc_id")
     I.ingestTextShard(spark, s1, "doc_id", "text", state, 0L)
-    I.deleteTextDocs(spark, d, "doc_id", state, 0L)
+    StateRoot.deleteIn(spark, I.Bm25, d, "doc_id", state, 0L)
     I.ingestTextShard(spark, s2, "doc_id", "text", state, 1L)
     val surviving = corpus.where(!(col("doc_id") <= mid &&
       pmod(col("doc_id"), lit(13)) === 0))
@@ -74,14 +74,14 @@ class Bm25TombstoneSpec extends AnyFunSuite {
     val s1 = corpus.where(col("doc_id") <= mid)
     val d = s1.where(pmod(col("doc_id"), lit(13)) === 0).select("doc_id")
     I.ingestTextShard(spark, s1, "doc_id", "text", state, 0L)
-    I.deleteTextDocs(spark, d, "doc_id", state, 0L)
+    StateRoot.deleteIn(spark, I.Bm25, d, "doc_id", state, 0L)
     val after = search(state)
     // replay of the same deletion batch id: directory-ledger no-op
-    I.deleteTextDocs(spark, d, "doc_id", state, 0L)
+    StateRoot.deleteIn(spark, I.Bm25, d, "doc_id", state, 0L)
     assert(search(state) == after)
     // double-delete under a NEW batch id + ids that were never indexed:
     // zero deltas, view unchanged
-    I.deleteTextDocs(spark,
+    StateRoot.deleteIn(spark, I.Bm25,
       d.unionAll(Seq(-1L, -2L).toDF("doc_id")), "doc_id", state, 1L)
     assert(search(state) == after)
     val g = spark.read.parquet(s"$state/_deletes/del_globals/batch=1").head
@@ -89,12 +89,12 @@ class Bm25TombstoneSpec extends AnyFunSuite {
       s"no-op deletion batch must carry zero deltas, got $g")
     // an out-of-order NEW deletion batch (id below a landed one) is loud
     val e = intercept[IllegalArgumentException] {
-      I.deleteTextDocs(spark, d, "doc_id", state, 5L)
-      I.deleteTextDocs(spark, d, "doc_id", state, 3L)
+      StateRoot.deleteIn(spark, I.Bm25, d, "doc_id", state, 5L)
+      StateRoot.deleteIn(spark, I.Bm25, d, "doc_id", state, 3L)
     }
     assert(e.getMessage.contains("out-of-order"))
     // delete EVERYTHING: queries find nothing, loudly consistent
-    I.deleteTextDocs(spark, s1.select("doc_id"), "doc_id", state, 6L)
+    StateRoot.deleteIn(spark, I.Bm25, s1.select("doc_id"), "doc_id", state, 6L)
     assert(search(state).isEmpty)
   }
 
@@ -106,11 +106,11 @@ class Bm25TombstoneSpec extends AnyFunSuite {
     val s1 = corpus.where(col("doc_id") <= mid)
     val s2 = corpus.where(col("doc_id") > mid)
     I.ingestTextShard(spark, s1, "doc_id", "text", state, 0L)
-    I.deleteTextDocs(spark,
+    StateRoot.deleteIn(spark, I.Bm25,
       s1.where(pmod(col("doc_id"), lit(13)) === 0).select("doc_id"),
       "doc_id", state, 0L)
     I.ingestTextShard(spark, s2, "doc_id", "text", state, 1L)
-    I.deleteTextDocs(spark,
+    StateRoot.deleteIn(spark, I.Bm25,
       s2.where(pmod(col("doc_id"), lit(29)) === 0).select("doc_id"),
       "doc_id", state, 1L)
     val before = search(state)

@@ -51,7 +51,7 @@ class BucketedStateSpec extends AnyFunSuite {
     for (state <- Seq(bkt, flat)) {
       I.ingestTextShard(spark, corpus.where(col("doc_id") <= mid),
         "doc_id", "text", state, 0L)
-      I.deleteTextDocs(spark, victims, "doc_id", state, 0L)
+      StateRoot.deleteIn(spark, I.Bm25, victims, "doc_id", state, 0L)
       I.ingestTextShard(spark, corpus.where(col("doc_id") > mid),
         "doc_id", "text", state, 1L)
     }

@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
 import graft.etl.SparkTestSession
 
 /** Deletion contracts of the near-dup state families
-  * ([[IncrementalDedupOps.deleteImages]] /
-  * [[IncrementalDedupOps.deleteEmbeddings]]), completing tombstone
-  * support across all four incremental modalities:
+  * ([[StateRoot.delete]] on the image and embedding families),
+  * completing tombstone support across all four incremental
+  * modalities:
   *
   *  - images (pairwise facts → EXACT semantics): pairs after deleting
   *    `d` equal one-shot pairs over the union minus `d`, later ingests
@@ -67,7 +67,7 @@ class DedupTombstoneSpec extends AnyFunSuite {
     val d = ids.where(col("doc_id") <= cut2 &&
       pmod(col("doc_id"), lit(7)) === 1).select("doc_id")
     assert(d.count() > 0)
-    I.deleteImages(spark, d, "doc_id", state, 0L)
+    StateRoot.deleteIn(spark, I.Images, d, "doc_id", state, 0L)
     // shard 3 ingests AFTER the deletion: no edge may touch deleted ids
     I.ingestImageShard(spark, media.where(col("doc_id") > cut2),
       "doc_id", "img", state, 2L)
@@ -110,7 +110,7 @@ class DedupTombstoneSpec extends AnyFunSuite {
       val reps = before.where(col("rep") =!= col("vec_id"))
         .select(col("rep").as("vec_id")).distinct()
       assert(reps.count() > 0, "need non-trivial clusters to re-elect")
-      I.deleteEmbeddings(spark, reps, "vec_id", state, 0L)
+      StateRoot.deleteIn(spark, I.Embeddings, reps, "vec_id", state, 0L)
       val after = I.semanticDedupView(spark, state, "vec_id")
       assert(after.join(reps, Seq("vec_id"), "left_semi").count() == 0,
         "deleted vectors must leave the view")

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.etl.SparkTestSession
 
-/** Tombstones for the IVF index ([[IncrementalIndexOps.deleteVectors]] /
+/** Tombstones for the IVF index ([[StateRoot.delete]] /
   * [[StateRoot.purge]]): search after deletions equals
   * a from-scratch index over the survivors UNDER THE SAME frozen
   * codebook (deletion never refits — the cells of surviving vectors are
@@ -53,7 +53,7 @@ class IvfTombstoneSpec extends AnyFunSuite {
       "vec_id", "embedding", state, 1L, nCells = 4, iters = 2)
     val d = emb.where(pmod(col("vec_id"), lit(9)) === 0 &&
       col("vec_id") >= 10).select("vec_id")
-    I.deleteVectors(spark, d, "vec_id", state, 0L)
+    StateRoot.deleteIn(spark, I.Ivf, d, "vec_id", state, 0L)
     // the twin: same codebook (copied), survivors as one shard
     val twin = fresh()
     BatchState.ensureParams(spark, twin,
@@ -69,8 +69,8 @@ class IvfTombstoneSpec extends AnyFunSuite {
       "tombstoned search must equal the survivor index under the " +
         "frozen codebook")
     // replay + unknown ids: exact no-ops
-    I.deleteVectors(spark, d, "vec_id", state, 0L)
-    I.deleteVectors(spark,
+    StateRoot.deleteIn(spark, I.Ivf, d, "vec_id", state, 0L)
+    StateRoot.deleteIn(spark, I.Ivf,
       d.unionAll(Seq(-5L).toDF("vec_id")), "vec_id", state, 1L)
     assert(search(state) == after)
     // purge: cells physically gone, root retired, search unchanged
@@ -93,7 +93,7 @@ class IvfTombstoneSpec extends AnyFunSuite {
       nCells = 4, iters = 2)
     val d = emb.where(pmod(col("vec_id"), lit(9)) === 0)
       .select("vec_id")
-    I.deleteVectors(spark, d, "vec_id", state, 0L)
+    StateRoot.deleteIn(spark, I.Ivf, d, "vec_id", state, 0L)
     val next = fresh()
     I.reindexVectors(spark, state, next, nCells = 4, iters = 2)
     val cells = spark.read.parquet(s"$next/cells/batch=0")

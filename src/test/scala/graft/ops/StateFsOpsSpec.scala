@@ -59,7 +59,9 @@ class StateFsOpsSpec extends AnyFunSuite {
     * wrappers. Three curation bounds are one `exists` higher: its
     * delete and compact verbs (and so the compaction inside its
     * stateIngest) now resolve the generation pointer once per call,
-    * as every other family's verbs already did.
+    * as every other family's verbs already did. The IVF, image and
+    * embedding delete bounds are the counts of the per-family delete
+    * ops that [[StateRoot.deleteIn]] replaced.
     */
   private val Bounds: Map[String, Map[String, Long]] = Map(
     "bm25 ingest" -> Map("create" -> 5, "delete" -> 9, "exists" -> 10,

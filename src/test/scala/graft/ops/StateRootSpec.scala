@@ -7,9 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.etl.SparkTestSession
 
 /** The incremental-state lifecycle has one definition per verb:
-  * [[StateRoot]]. The source gates keep per-family lifecycle wrappers
-  * and per-family streaming ingest twins from growing back; the verb
-  * checks pin that a family never gains a verb it does not declare.
+  * [[StateRoot]]. The source gates keep per-family lifecycle wrappers,
+  * per-family delete ops and per-family streaming ingest twins from
+  * growing back; the verb checks pin that a family never gains a verb
+  * it does not declare; the layout pin keeps every family's tombstone
+  * tables readable by earlier state directories.
   */
 class StateRootSpec extends AnyFunSuite {
 
@@ -46,6 +48,31 @@ class StateRootSpec extends AnyFunSuite {
       .map(_.group(1)).toSet
     assert(ingests ==
       Set("stateIngest", "deletionIngest", "curateAndIndexIngest"))
+  }
+
+  test("the tombstone-landing protocol is written once, in StateRoot") {
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(mainDir)
+    val sources =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val perFamily = """def (delete\w*|takedown)\b""".r
+    val familyOps = sources
+      .filter(_.getFileName.toString.matches("Incremental\\w*\\.scala"))
+      .flatMap(m => perFamily.findAllIn(source(m))
+        .map(d => s"${m.getFileName}: $d"))
+    assert(familyOps.isEmpty, "deletion belongs on StateRoot: " +
+      familyOps.mkString(", "))
+    // the lease call's argument list, up to the body's opening brace
+    val lease = """withLease\(([^{]*)\{""".r
+    val deletionRoot = """deletionRoot|delRoot|delDir|_deletes""".r
+    val owners = Set("StateRoot.scala", "BatchState.scala")
+    val leases = sources.filterNot(p => owners(p.getFileName.toString))
+      .flatMap(p => lease.findAllMatchIn(source(p))
+        .filter(m => deletionRoot.findFirstIn(m.group(1)).isDefined)
+        .map(m => s"${p.getFileName}: withLease(${m.group(1).trim}"))
+    assert(leases.isEmpty, "only StateRoot and BatchState take the " +
+      "deletion root's lease: " + leases.mkString(", "))
   }
 
   private def undeclared(family: StateFamily)(

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.etl.SparkTestSession
 
 /** Takedown contract of the curation family
-  * ([[IncrementalCurateOps.takedown]]): documents are permanently
+  * ([[StateRoot.delete]]): documents are permanently
   * removed from the curated view (stable pack ids — a hole, never a
   * reshuffle), their suppressed duplicates stay suppressed, stats are
   * the survivors' exactly (min/max recomputed, not delta'd), and the
@@ -44,7 +44,7 @@ class TakedownSpec extends AnyFunSuite {
     val beforeRows = sortedRows(before)
     val d = docs.where(pmod(col("doc_id"), lit(11)) === 0)
       .select("doc_id")
-    C.takedown(spark, d, "doc_id", state, 0L)
+    StateRoot.deleteIn(spark, C.Curation, d, "doc_id", state, 0L)
     val after = C.curated(spark, state)
     // exactly the pre-takedown output minus the tombstoned rows: pack
     // ids stable, nothing resurrected, nothing reshuffled
@@ -59,9 +59,9 @@ class TakedownSpec extends AnyFunSuite {
       spark.read.parquet(s"$state/docs/batch=0", s"$state/docs/batch=1")
         .join(d, Seq("doc_id"), "left_anti").count())
     // replay of the landed tombstone batch + unknown ids: no-ops
-    C.takedown(spark, d, "doc_id", state, 0L)
+    StateRoot.deleteIn(spark, C.Curation, d, "doc_id", state, 0L)
     import spark.implicits._
-    C.takedown(spark, Seq(-1L).toDF("doc_id"), "doc_id", state, 1L)
+    StateRoot.deleteIn(spark, C.Curation, Seq(-1L).toDF("doc_id"), "doc_id", state, 1L)
     assert(sortedRows(C.curated(spark, state)) == sortedRows(after))
   }
 

@@ -291,12 +291,12 @@ class ComposedCrashWindowSpec extends AnyFunSuite {
     fs.mkdirs(delLease.getParent)
     fs.create(delLease, false).close()
     val e = intercept[IllegalStateException] {
-      I.deleteTextDocs(spark, corpus.limit(5).select("doc_id"),
+      StateRoot.deleteIn(spark, I.Bm25, corpus.limit(5).select("doc_id"),
         "doc_id", state, 0L)
     }
     assert(e.getMessage.contains("lease"))
     assert(BatchState.breakLease(spark, s"$state/_deletes"))
-    I.deleteTextDocs(spark, corpus.limit(5).select("doc_id"),
+    StateRoot.deleteIn(spark, I.Bm25, corpus.limit(5).select("doc_id"),
       "doc_id", state, 0L)
   }
 

@@ -107,7 +107,7 @@ class DeletionStreamSpec extends AnyFunSuite {
     // the all-or-nothing listing, so the same id is re-chosen
     val eff = Streaming.deletionMicroBatch(dels, 0L, state,
       I.DelTables) { (df, dir, e) =>
-      I.deleteTextDocs(spark, df, "doc_id", dir, e)
+      StateRoot.deleteIn(spark, I.Bm25, df, "doc_id", dir, e)
     }
     assert(eff == 0L, s"expected the crashed id re-chosen, got $eff")
     val twin = s"$base/twin"
@@ -134,7 +134,7 @@ class DeletionStreamSpec extends AnyFunSuite {
     val dels2 = corpus.where(pmod(col("doc_id"), lit(11)) === 0)
       .select("doc_id")
     def apply(df: DataFrame, dir: String, e: Long): Unit =
-      I.deleteTextDocs(spark, df, "doc_id", dir, e)
+      StateRoot.deleteIn(spark, I.Bm25, df, "doc_id", dir, e)
     assert(Streaming.deletionMicroBatch(dels1, 0L, state,
       I.DelTables)(apply) == 0L)
     StateRoot(I.Bm25, state).purge(spark)
