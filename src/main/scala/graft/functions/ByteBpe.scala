@@ -147,7 +147,7 @@ final class ByteBpeModel(val merges: Seq[(String, String)]) extends Serializable
   * the table IS the parity contract, like [[BpeVocab.DefaultMerges]].
   */
 object ByteBpeVocab {
-  // filled from the trained table (see ProfileBpeTrain --bytes)
+  // filled from the trained table (ByteBpeSpec retrains and compares it)
   val DefaultMerges: Seq[(String, String)] = ByteBpeVocabTable.Merges
 
   val Default: ByteBpeModel = new ByteBpeModel(DefaultMerges)

@@ -1,9 +1,9 @@
 package graft.functions
 
 /** The raw byte-level fixture merge table (see [[ByteBpeVocab]]):
-  * 48 merges learned by `bpeTrainBytes` over the sf0.1 documents;
-  * regenerated by
-  * `runMain graft.ProfileBpeTrain /root/testdata/sf0.1 48 --bytes`.
+  * 48 merges learned by `bpeTrainBytes` over the sf0.1 documents.
+  * `ByteBpeSpec` ("byte trainer reproduces the fixture table") retrains
+  * it and prints the learned table when the two differ.
   * Leading-space tokens (" s", " v", …) are the GPT-2 pre-tokenizer's
   * space-attached words.
   */

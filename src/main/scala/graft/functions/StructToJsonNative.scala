@@ -18,10 +18,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * `UTF8String` value is first materialized as a `java.lang.String`
   * (UTF-8 → UTF-16 copy), escaped char-by-char through Jackson's
   * writer, accumulated in a char buffer, then the whole document is
-  * copied back to UTF-8 (`fromString`). Profiled (ProfileJobs stack
-  * samples) as the kf family's top remaining CPU after r18's codegen
-  * cache fix: `JacksonGenerator.writeFields` /
-  * `StructsToJsonEvaluator`.
+  * copied back to UTF-8 (`fromString`). Stack samples showed it as
+  * the kf family's top remaining CPU after r18's codegen cache fix:
+  * `JacksonGenerator.writeFields` / `StructsToJsonEvaluator`.
+  * `NativeJsonSpec` pins this replacement byte-for-byte against it.
   *
   * This expression compiles the (statically known) schema once into an
   * emitter tree and serializes straight from `InternalRow`/`ArrayData`

@@ -66,8 +66,10 @@ object ParquetSink {
     * intact until the rewrite has fully committed. A crash BETWEEN the
     * two renames leaves the data staged at `path + ".compact_old"` —
     * never deleted until the promote succeeds, so it is recoverable by
-    * a single rename — and this method attempts that rollback itself if
-    * the promote fails. (A filesystem with atomic directory rename has
+    * a single rename. This method attempts that rollback itself if the
+    * promote fails, and on entry it finishes the rollback a crash left
+    * undone: `path` missing with `.compact_old` present is renamed back
+    * and the stale `.compact_tmp` dropped. (A filesystem with atomic directory rename has
     * no stronger primitive for an in-place swap; readers racing the
     * swap window should read through a catalog or retry.)
     *
@@ -87,6 +89,12 @@ object ParquetSink {
     import org.apache.hadoop.fs.Path
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new Path(path + ".compact_tmp")
+    val old = new Path(path + ".compact_old")
+    if (!fs.exists(p) && fs.exists(old)) {
+      fs.delete(tmp, true)
+      require(fs.rename(old, p), s"compact: could not restore $old to $path")
+    }
     def dataFiles(): Seq[org.apache.hadoop.fs.FileStatus] = {
       val it = fs.listFiles(p, true)
       val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
@@ -100,7 +108,6 @@ object ParquetSink {
     val totalBytes = before.map(_.getLen).sum
     val nFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     val df = spark.read.parquet(path)
-    val tmp = new Path(path + ".compact_tmp")
     fs.delete(tmp, true)
     if (partitionCols.nonEmpty) {
       // footer-only count -> average row width -> records per file that
@@ -112,7 +119,6 @@ object ParquetSink {
       writePartitioned(df, tmp.toString, partitionCols, recordsPerFile)
     } else
       df.coalesce(nFiles).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val old = new Path(path + ".compact_old")
     fs.delete(old, true)
     require(fs.rename(p, old), s"compact: could not stage $path aside")
     if (!fs.rename(tmp, p)) {

@@ -106,6 +106,37 @@ class ParquetSinkSpec extends AnyFunSuite {
     assert(spark.read.parquet(out).count() == orders.count())
   }
 
+  test("compact after a crash between its two renames restores the " +
+      "staged original, then compacts it") {
+    val out = Files.createTempDirectory("pcompactc").toString + "/t"
+    val orders = graft.Tables.orders(spark, "/root/testdata/sf0.001")
+    orders.repartition(6).write.partitionBy("o_orderstatus").parquet(out)
+    def layout(dir: String): Seq[String] = {
+      val root = new java.io.File(dir).toPath
+      val walk = Files.walk(root)
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala.filter(_.getFileName.toString.startsWith("part-"))
+          .map(p => root.relativize(p).toString).toSeq.sorted
+      } finally walk.close()
+    }
+    val files = layout(out)
+    val before = orders.collect().map(_.toString).sorted
+    // the crash state: `path` staged aside, a half-written rewrite left
+    Files.move(new java.io.File(out).toPath, new java.io.File(out + ".compact_old").toPath)
+    orders.limit(1).write.parquet(out + ".compact_tmp")
+    val (nBefore, nAfter) = ParquetSink.compact(spark, out,
+      partitionCols = Seq("o_orderstatus"))
+    assert(nBefore == files.size.toLong, s"compacted $nBefore files, not the staged ${files.size}")
+    assert(nAfter < nBefore, s"no compaction: $nBefore -> $nAfter")
+    assert(layout(out).map(_.takeWhile(_ != '/')).distinct ==
+      files.map(_.takeWhile(_ != '/')).distinct, "partition layout not restored")
+    val back = spark.read.parquet(out).select(orders.columns.map(col): _*)
+    assert(back.collect().map(_.toString).sorted.sameElements(before), "content changed")
+    val parent = new java.io.File(out).getParentFile.listFiles().map(_.getName)
+    assert(!parent.exists(_.contains("compact_")), s"staging dirs left behind: ${parent.toSeq}")
+  }
+
   test("z-order layout: files cover rectangles, so a second-dimension " +
       "filter overlaps FEWER files than under a linear sort") {
     import graft.relational.RelationalOps.{mortonBucket, mortonKey}
