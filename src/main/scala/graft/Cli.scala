@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.col
 
 import graft.etl.{Pipeline, Transform}
 import graft.relational.RelationalOps
-import graft.sinks.ParquetSink
+import graft.sinks.{DirSwap, ParquetSink}
 
 /** The `kidsfirst fhir-etl SD_X SD_Y …` equivalent (SURVEY §7.1.8,
   * mirroring app/cli.py:17-29): select the requested studies, prune
@@ -101,11 +101,16 @@ object Cli {
     * API: the metrics ride the write action itself, where a `.count()`
     * before the write would re-run the whole 16-builder cascade a
     * second time (the pipeline deliberately persists nothing — see
-    * Pipeline's do-not-redo notes). The write goes to a STAGING
-    * directory and is promoted to `outDir` only after the metrics
-    * validate — a failed load never publishes a dataset a
-    * presence-of-output consumer could mistake for success. Fails fast
-    * on an empty load or a null natural key; returns the metrics.
+    * Pipeline's do-not-redo notes). The write goes to `outDir.staging`
+    * and is promoted to `outDir` only after the metrics validate, by
+    * [[DirSwap]] over (`outDir`, `.staging`, `.old`) — a failed load
+    * never publishes a dataset a presence-of-output consumer could
+    * mistake for success. A stale `.staging` is dropped first, so a
+    * copy whose validation never finished is never adopted. After a
+    * crash between the swap's renames, the next valid load publishes
+    * over the copy stranded at `.old`, and a failed one restores it by
+    * [[DirSwap.recover]]. Fails fast on an empty load or a null natural
+    * key; returns the metrics.
     */
   def writeObserved(resources: DataFrame, outDir: String): Map[String, Long] = {
     import org.apache.spark.sql.functions.{count, lit, sum, when}
@@ -113,57 +118,38 @@ object Cli {
     val observed = resources.observe(obs,
       count(lit(1)).as("n_resources"),
       sum(when(col("key").isNull, 1L).otherwise(0L)).as("null_keys"))
-    val out = new org.apache.hadoop.fs.Path(outDir)
-    val fs = out.getFileSystem(resources.sparkSession.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(outDir + ".staging")
-    fs.delete(staging, true)
-    try {
-      ParquetSink.writePartitioned(observed, staging.toString, Seq("resource_type"))
-      // a provably-empty plan folds the CollectMetrics node away and the
-      // observation row comes back empty — read defensively, so that case
-      // lands in the zero-resources failure below instead of a lookup error
-      val m = obs.get
-      def metric(name: String): Long = m.get(name) match {
-        case Some(x: Long) => x
-        case _ => 0L
+    val swap = DirSwap(resources.sparkSession.sparkContext.hadoopConfiguration,
+      outDir, ".staging", ".old")
+    swap.fs.delete(swap.staged, true)
+    val metrics =
+      try {
+        // staged was just dropped: Append skips Overwrite's existence probe
+        ParquetSink.writePartitioned(observed, swap.staged.toString,
+          Seq("resource_type"), mode = org.apache.spark.sql.SaveMode.Append)
+        // a provably-empty plan folds the CollectMetrics node away and the
+        // observation row comes back empty — read defensively, so that case
+        // lands in the zero-resources failure below instead of a lookup error
+        val m = obs.get
+        def metric(name: String): Long = m.get(name) match {
+          case Some(x: Long) => x
+          case _ => 0L
+        }
+        val metrics = Map(
+          "n_resources" -> metric("n_resources"),
+          "null_keys" -> metric("null_keys"))
+        require(metrics("n_resources") > 0, "load produced zero resources")
+        require(metrics("null_keys") == 0,
+          s"${metrics("null_keys")} resources with a null natural key")
+        metrics
+      } catch {
+        // the staged copy is invalid; leave outDir as before any crash
+        case e: Throwable =>
+          swap.fs.delete(swap.staged, true)
+          scala.util.Try(swap.recover()).failed.foreach(e.addSuppressed)
+          throw e
       }
-      val metrics = Map(
-        "n_resources" -> metric("n_resources"),
-        "null_keys" -> metric("null_keys"))
-      require(metrics("n_resources") > 0, "load produced zero resources")
-      require(metrics("null_keys") == 0,
-        s"${metrics("null_keys")} resources with a null natural key")
-      // Same atomic-swap discipline as ParquetSink.compact: stage the
-      // previously-published output ASIDE (never delete it before the
-      // promote lands), and on a failed promote restore it — a failed
-      // rename must lose neither the old dataset nor the validated
-      // staged copy.
-      val old = new org.apache.hadoop.fs.Path(outDir + ".old")
-      fs.delete(old, true)
-      if (fs.exists(out))
-        require(fs.rename(out, old), s"could not stage $outDir aside")
-      if (!fs.rename(staging, out)) {
-        val rolledBack = !fs.exists(old) || fs.rename(old, out)
-        throw new IllegalStateException(
-          s"could not promote validated load into $outDir" +
-            (if (rolledBack) " (previous output restored; staging kept at " +
-              s"$staging)"
-             else s" AND rollback failed — previous output is at $old, " +
-               s"validated load at $staging"))
-      }
-      fs.delete(old, true)
-      fs.delete(staging, true) // no-op after the successful promote
-      metrics
-    } catch {
-      // a failed PROMOTE deliberately keeps the validated staged copy
-      // (the IllegalStateException above says where everything is)
-      case e: IllegalStateException => throw e
-      // anything earlier (write error, zero rows, null keys) never
-      // touched the old output and the staged copy is invalid — drop it
-      case e: Throwable =>
-        fs.delete(staging, true)
-        throw e
-    }
+    swap.publish()
+    metrics
   }
 
   def run(spark: SparkSession, endpointsDir: String, outDir: String,

@@ -614,7 +614,8 @@ object Probe {
       val tmp = s"$base/tmp_$name"
       df.write.parquet(tmp)
       fs.globStatus(new Path(s"$tmp/part-*")).zipWithIndex.foreach { case (st, i) =>
-        fs.rename(st.getPath, new Path(s"$watch/${name}_$i.parquet"))
+        val dest = new Path(s"$watch/${name}_$i.parquet")
+        require(fs.rename(st.getPath, dest), s"could not land ${st.getPath} at $dest")
       }
     }
     def drain(): Unit = graft.streaming.Streaming.curateAndIndexIngest(

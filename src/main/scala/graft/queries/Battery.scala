@@ -2814,14 +2814,6 @@ object Battery {
       val fs = new Path(base).getFileSystem(
         s.sparkContext.hadoopConfiguration)
       fs.mkdirs(new Path(watch))
-      // land one shard as ONE parquet file in the watched dir (single
-      // file => the AvailableNow pass sees it as exactly one micro-batch)
-      def landShard(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-        val tmp = s"$base/tmp_$name"
-        df.coalesce(1).write.parquet(tmp)
-        val part = fs.globStatus(new Path(s"$tmp/part-*"))(0).getPath
-        fs.rename(part, new Path(s"$watch/$name.parquet"))
-      }
       def drain(): Unit = graft.streaming.Streaming.stateIngest(
         s, watch, docs.schema, ckpt,
         graft.ops.StateRoot(IncrementalCurateOps.Curation, state),
@@ -2831,9 +2823,9 @@ object Battery {
       }
       val r = docs.agg(min(col("doc_id")), max(col("doc_id"))).head
       val mid = (r.getLong(0) + r.getLong(1)) / 2
-      landShard(docs.where(col("doc_id") <= mid), "s1")
+      landShard(fs, base, watch, docs.where(col("doc_id") <= mid), "s1")
       drain()
-      landShard(docs.where(col("doc_id") > mid), "s2")
+      landShard(fs, base, watch, docs.where(col("doc_id") > mid), "s2")
       drain()
       IncrementalCurateOps.curated(s, state)
     },
@@ -2866,19 +2858,13 @@ object Battery {
       val fs = new Path(base).getFileSystem(
         s.sparkContext.hadoopConfiguration)
       fs.mkdirs(new Path(watch))
-      def landShard(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-        val tmp = s"$base/tmp_$name"
-        df.coalesce(1).write.parquet(tmp)
-        val part = fs.globStatus(new Path(s"$tmp/part-*"))(0).getPath
-        fs.rename(part, new Path(s"$watch/$name.parquet"))
-      }
       def drain(): Unit = graft.streaming.Streaming.curateAndIndexIngest(
         s, watch, corpus.schema, ckpt, state, "doc_id", "text")
       val r = corpus.agg(min(col("doc_id")), max(col("doc_id"))).head
       val mid = (r.getLong(0) + r.getLong(1)) / 2
-      landShard(corpus.where(col("doc_id") <= mid), "s1")
+      landShard(fs, base, watch, corpus.where(col("doc_id") <= mid), "s1")
       drain()
-      landShard(corpus.where(col("doc_id") > mid), "s2")
+      landShard(fs, base, watch, corpus.where(col("doc_id") > mid), "s2")
       drain()
       graft.ops.IncrementalIndexOps
         .bm25Search(s, s"$state/index", queries, "qid", "text", k = 10)
@@ -3036,6 +3022,22 @@ object Battery {
          |LEFT JOIN km USING (doc_id)
          |LEFT JOIN rm USING (doc_id)""".stripMargin
     })
+
+  /** Land one shard as ONE parquet file `<watch>/<name>.parquet` (one
+    * file => the AvailableNow pass sees exactly one micro-batch),
+    * written under `<base>/tmp_<name>` first so the watcher never lists
+    * a partial file. A refused move fails the query: ignoring it would
+    * drain an empty micro-batch and hand the oracle a wrong answer.
+    */
+  private def landShard(fs: org.apache.hadoop.fs.FileSystem, base: String,
+      watch: String, df: DataFrame, name: String): Unit = {
+    import org.apache.hadoop.fs.Path
+    val tmp = s"$base/tmp_$name"
+    df.coalesce(1).write.parquet(tmp)
+    val part = fs.globStatus(new Path(s"$tmp/part-*"))(0).getPath
+    val dest = new Path(s"$watch/$name.parquet")
+    require(fs.rename(part, dest), s"could not land $part at $dest")
+  }
 
   /** The curation stage cascade as CTEs, gate through near-dup reps —
     * final CTE `s2` exposes the KEPT documents (doc_id, text,
@@ -4558,19 +4560,12 @@ object Battery {
         "doc_id", "text", state, batchId = 1L)
       val doomed = corpus.where(col("doc_id") <= mid &&
         pmod(col("doc_id"), lit(13)) === 0).select("doc_id")
-      def landShard(df: org.apache.spark.sql.DataFrame,
-          name: String): Unit = {
-        val tmp = s"$base/tmp_$name"
-        df.coalesce(1).write.parquet(tmp)
-        val part = fs.globStatus(new Path(s"$tmp/part-*"))(0).getPath
-        fs.rename(part, new Path(s"$watch/$name.parquet"))
-      }
       def drain(): Unit = graft.streaming.Streaming.deletionIngest(
         s, watch, doomed.schema, ckpt, graft.ops.StateRoot(I.Bm25, state),
         "doc_id")
-      landShard(doomed.where(pmod(col("doc_id"), lit(26)) === 0), "d1")
+      landShard(fs, base, watch, doomed.where(pmod(col("doc_id"), lit(26)) === 0), "d1")
       drain()
-      landShard(doomed.where(pmod(col("doc_id"), lit(26)) === 13), "d2")
+      landShard(fs, base, watch, doomed.where(pmod(col("doc_id"), lit(26)) === 13), "d2")
       drain()
       I.bm25Search(s, state, queries, "qid", "text", k = 10)
         .withColumnRenamed("id", "doc_id")

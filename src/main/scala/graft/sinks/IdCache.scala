@@ -16,8 +16,9 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * entity stage would dominate the load, while an append is one small
   * parquet batch; readers dedup by key (resolved ids are stable, so any
   * surviving duplicate is equal and the pick is immaterial). Compaction
-  * = read + dropDuplicates + write-elsewhere + swap, when batch count
-  * grows — deliberately out of band, like any log-structured store.
+  * = read + dropDuplicates + write-elsewhere + [[DirSwap]] over
+  * (`<class>`, `<class>__compacting`, `<class>__retired`), when batch
+  * count grows — deliberately out of band, like any log-structured store.
   *
   * Unresolved keys are NOT negatively cached, matching the reference:
   * a key the server didn't know yesterday may exist today (another
@@ -30,27 +31,24 @@ final class IdCache(spark: SparkSession, dir: String) {
 
   private def path(entityClass: String) = s"$dir/$entityClass"
 
+  private def swap(entityClass: String): DirSwap =
+    DirSwap(spark.sparkContext.hadoopConfiguration, path(entityClass),
+      "__compacting", "__retired")
+
   /** Cached (key, resolved_id) pairs for an entity class; empty frame
-    * when the class has never been cached. Deduped by key. When the
-    * live store is MISSING, adopts whatever a crashed compaction left
-    * behind (see [[recover]]) — a reader never deletes anything while
-    * the live store exists, so leftover sweeping belongs to compact()
-    * alone. A reader CAN observe the window between compact()'s two
-    * renames (the snapshot is `_SUCCESS`-complete before the live dir
-    * is retired, so it is adoptable mid-swap); that concurrent
-    * recovery is RESOLVED, not impossible — whichever process loses
-    * the adopt-rename re-checks that the live store exists and treats
-    * that as success (see [[recover]]).
+    * when the class has never been cached. Deduped by key. A MISSING
+    * store is first restored by [[DirSwap.recover]] from what a crashed
+    * [[compact]] left behind; a reader never deletes anything while the
+    * live store exists. A reader that lands between compact()'s two
+    * renames rolls back to `__retired`, which holds the same
+    * deduplicated (key → id) map as the snapshot, and the compaction
+    * that lost that race still succeeds.
     */
-  def read(entityClass: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path(entityClass))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) recover(entityClass)
-    if (fs.exists(p))
+  def read(entityClass: String): DataFrame =
+    if (swap(entityClass).recover())
       spark.read.schema(schema).parquet(path(entityClass)).dropDuplicates("key")
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
 
   /** Append newly resolved pairs for an entity class. */
   def append(entityClass: String, resolved: DataFrame): Unit =
@@ -58,74 +56,18 @@ final class IdCache(spark: SparkSession, dir: String) {
       .write.mode("append").parquet(path(entityClass))
 
   /** Compact one entity class's append-only store: rewrite the deduped
-    * pairs as a single snapshot and swap it in with a two-rename cycle
-    * (live → retired, snapshot → live, drop retired). Renames are
-    * atomic on HDFS/local (best-effort on object stores, where a
-    * committer-backed overwrite is the production variant), so a crash
-    * at ANY point leaves a recoverable state: either the live dir still
-    * exists, or a complete `_SUCCESS`-marked snapshot and/or the retired
-    * copy do — [[recover]] re-adopts whichever is authoritative on the
-    * next read. Out-of-band maintenance for when the batch count grows;
-    * resolution correctness never depends on it.
+    * pairs as one snapshot in `__compacting` and swap it in by
+    * [[DirSwap.publish]] (live → `__retired`, snapshot → live, drop
+    * `__retired`), after [[DirSwap.recover]] has repaired any earlier
+    * crash. Out-of-band maintenance for when the batch count grows;
+    * resolution correctness never depends on it. Single writer: two
+    * concurrent compact() calls on one entity class are not supported.
     */
   def compact(entityClass: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path(entityClass))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recover(entityClass)
-    if (fs.exists(p)) {
-      val tmp = new org.apache.hadoop.fs.Path(path(entityClass) + "__compacting")
-      val old = new org.apache.hadoop.fs.Path(path(entityClass) + "__retired")
-      read(entityClass).write.mode("overwrite").parquet(tmp.toString)
-      // failures must THROW, not fall through — each rename below has a
-      // recover() transition for the crash-between states, but a FALSE
-      // return with no exception means the fs refused the op outright.
-      // EXCEPTION: a failed swap-in with the live dir present again
-      // means a concurrent reader's recover() adopted the (complete)
-      // snapshot between our two renames — the final state is exactly
-      // what this compaction wanted, so the race loser succeeds too.
-      require(fs.rename(p, old),
-        s"idcache compact: could not retire $p; snapshot left at $tmp")
-      if (!fs.rename(tmp, p)) {
-        require(fs.exists(p),
-          s"idcache compact: could not swap in $tmp and no live store at $p; retired store at $old")
-        if (fs.exists(tmp)) fs.delete(tmp, true)
-      }
-      fs.delete(old, true)
-    }
-  }
-
-  /** Crash recovery for [[compact]]'s rename cycle — idempotent:
-    * (a) live store present → any leftover snapshot / retired copy is
-    * stale, drop both (reached only from compact(), so it cannot delete
-    * another compaction's in-progress snapshot under a reader);
-    * (b) live store missing but a COMPLETE snapshot exists (`_SUCCESS`
-    * marker — a crash mid-write leaves none) → adopt it; (c) live and
-    * complete snapshot both missing but the retired copy exists → roll
-    * back to it. Maintenance is single-writer: two concurrent
-    * compact() calls on one entity class are not supported (like any
-    * rename-swap store). A CONCURRENT READER is supported: if it
-    * observes the mid-swap window (live retired, snapshot complete)
-    * both it and the compactor race the adopt-rename; the loser
-    * re-checks that the live store exists and treats that as success.
-    */
-  private def recover(entityClass: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path(entityClass))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path(entityClass) + "__compacting")
-    val old = new org.apache.hadoop.fs.Path(path(entityClass) + "__retired")
-    if (fs.exists(p)) {
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      if (fs.exists(old)) fs.delete(old, true)
-    } else if (fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))) {
-      // rename race: a concurrent recover()/compact() may adopt the
-      // same snapshot first — "live exists now" is success, not failure
-      if (!fs.rename(tmp, p))
-        require(fs.exists(p), s"idcache recover: could not adopt snapshot $tmp")
-      if (fs.exists(old)) fs.delete(old, true)
-    } else if (fs.exists(old)) {
-      if (fs.exists(tmp)) fs.delete(tmp, true) // incomplete snapshot
-      if (!fs.rename(old, p))
-        require(fs.exists(p), s"idcache recover: could not roll back to $old")
+    val s = swap(entityClass)
+    if (s.recover()) {
+      read(entityClass).write.mode("overwrite").parquet(s.staged.toString)
+      s.publish(liveExists = true)
     }
   }
 

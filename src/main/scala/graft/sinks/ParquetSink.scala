@@ -61,17 +61,15 @@ object ParquetSink {
     * writers accumulate thousands of KB-sized part files whose open/seek
     * overhead eventually dominates scans (and whose footers bloat driver
     * planning). Rewrites the dataset into ~`targetBytes` files,
-    * preserving content and the `partitionCols` directory layout, via
-    * write-to-tmp + a two-rename directory swap: the source stays
-    * intact until the rewrite has fully committed. A crash BETWEEN the
-    * two renames leaves the data staged at `path + ".compact_old"` —
-    * never deleted until the promote succeeds, so it is recoverable by
-    * a single rename. This method attempts that rollback itself if the
-    * promote fails, and on entry it finishes the rollback a crash left
-    * undone: `path` missing with `.compact_old` present is renamed back
-    * and the stale `.compact_tmp` dropped. (A filesystem with atomic directory rename has
-    * no stronger primitive for an in-place swap; readers racing the
-    * swap window should read through a catalog or retry.)
+    * preserving content and the `partitionCols` directory layout, into
+    * `path + ".compact_tmp"`, and swaps it in by [[DirSwap]] over
+    * (`path`, `.compact_tmp`, `.compact_old`): the source stays intact
+    * until the rewrite has fully committed, a failed promote restores
+    * it, and on entry [[DirSwap.recover]] rolls a crash between the two
+    * renames back to `.compact_old`. (A filesystem with atomic
+    * directory rename has no stronger primitive for an in-place swap;
+    * readers racing the swap window should read through a catalog or
+    * retry.)
     *
     * Sizing uses the LISTING for bytes and the parquet FOOTERS for the
     * row count (a `count()` over parquet is metadata-only — no data
@@ -86,17 +84,12 @@ object ParquetSink {
       partitionCols: Seq[String] = Nil,
       targetBytes: Long = 128L << 20): (Long, Long) = {
     require(targetBytes > 0, "targetBytes must be positive")
-    import org.apache.hadoop.fs.Path
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(path + ".compact_tmp")
-    val old = new Path(path + ".compact_old")
-    if (!fs.exists(p) && fs.exists(old)) {
-      fs.delete(tmp, true)
-      require(fs.rename(old, p), s"compact: could not restore $old to $path")
-    }
+    val swap = DirSwap(spark.sparkContext.hadoopConfiguration, path,
+      ".compact_tmp", ".compact_old")
+    val (fs, tmp) = (swap.fs, swap.staged.toString)
+    require(swap.recover(), s"compact: no dataset at $path")
     def dataFiles(): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val it = fs.listFiles(p, true)
+      val it = fs.listFiles(swap.live, true)
       val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
       while (it.hasNext) {
         val f = it.next()
@@ -108,7 +101,8 @@ object ParquetSink {
     val totalBytes = before.map(_.getLen).sum
     val nFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     val df = spark.read.parquet(path)
-    fs.delete(tmp, true)
+    // staged is dropped here: Append skips Overwrite's existence probe
+    fs.delete(swap.staged, true)
     if (partitionCols.nonEmpty) {
       // footer-only count -> average row width -> records per file that
       // approximates targetBytes within each partition directory
@@ -116,20 +110,10 @@ object ParquetSink {
       val recordsPerFile =
         if (totalRows == 0L || totalBytes == 0L) 5000000L
         else math.max(1L, targetBytes / math.max(1L, totalBytes / totalRows))
-      writePartitioned(df, tmp.toString, partitionCols, recordsPerFile)
+      writePartitioned(df, tmp, partitionCols, recordsPerFile, SaveMode.Append)
     } else
-      df.coalesce(nFiles).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fs.delete(old, true)
-    require(fs.rename(p, old), s"compact: could not stage $path aside")
-    if (!fs.rename(tmp, p)) {
-      // promote failed: put the original back before failing loudly
-      val rolledBack = fs.rename(old, p)
-      throw new IllegalStateException(
-        s"compact: could not promote rewrite into $path" +
-          (if (rolledBack) " (original restored)"
-           else s" AND rollback failed — data is staged at $old"))
-    }
-    fs.delete(old, true)
+      df.coalesce(nFiles).write.mode(SaveMode.Append).parquet(tmp)
+    swap.publish(liveExists = true)
     (before.size.toLong, dataFiles().size.toLong)
   }
 }

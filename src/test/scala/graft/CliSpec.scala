@@ -115,4 +115,26 @@ class CliSpec extends AnyFunSuite {
     }
     assert(e2.getMessage.contains("null natural key"))
   }
+
+  test("writeObserved after a crash between its two renames restores the " +
+      "previous output, even when the next load fails validation") {
+    import java.nio.file.{Files => JFiles, Paths}
+    val out = JFiles.createTempDirectory("obsw-crash").toString + "/t"
+    def rows(keys: String*) = keys.map((_, "Patient", "{}"))
+      .toDF("key", "resource_type", "resource_json")
+    def keys() = spark.read.parquet(out).select("key").as[String].collect().toSet
+    Cli.writeObserved(rows("K1", "K2", "K3"), out)
+    // the crash state: the previous output moved aside, a staged copy left
+    JFiles.move(Paths.get(out), Paths.get(out + ".old"))
+    rows("X1").write.parquet(out + ".staging")
+    val e = intercept[IllegalArgumentException] {
+      Cli.writeObserved(rows("K9").where(org.apache.spark.sql.functions.lit(false)), out)
+    }
+    assert(e.getMessage.contains("zero resources"))
+    assert(keys() == Set("K1", "K2", "K3"), "previous output not restored")
+    Cli.writeObserved(rows("K4", "K5"), out)
+    assert(keys() == Set("K4", "K5"))
+    assert(!JFiles.exists(Paths.get(out + ".old")) &&
+      !JFiles.exists(Paths.get(out + ".staging")), "swap leftovers not dropped")
+  }
 }

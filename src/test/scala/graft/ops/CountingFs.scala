@@ -29,8 +29,13 @@ class CountingFs extends RawLocalFileSystem {
   override def exists(f: Path): Boolean = counted("exists")(super.exists(f))
   override def getFileStatus(f: Path): FileStatus =
     counted("getFileStatus")(super.getFileStatus(f))
+  // RawLocalFileSystem's statuses load their permissions lazily through
+  // `java.io.File(path.toUri)`, which rejects this scheme (`listFiles`
+  // asks for them); hand out plain statuses with default permissions
   override def listStatus(f: Path): Array[FileStatus] =
-    counted("listStatus")(super.listStatus(f))
+    counted("listStatus")(super.listStatus(f).map(s => new FileStatus(
+      s.getLen, s.isDirectory, s.getReplication, s.getBlockSize,
+      s.getModificationTime, s.getPath)))
   override def globStatus(p: Path): Array[FileStatus] =
     counted("globStatus")(super.globStatus(p))
   override def globStatus(p: Path, filter: PathFilter): Array[FileStatus] =
